@@ -147,8 +147,7 @@ object Bench {
       val pins = DeadPins.snapshot(spark)
       val cold = once()
       val warm = Seq.fill(if (cold > 0.3) reps else 1)(once())
-      if (!DeadPins.sharedStateQueries.contains(name))
-        DeadPins.sweep(spark, pins)
+      DeadPins.sweep(spark, pins)
       (name, cold, median(warm))
     }
     val qs = results.map { case (k, _, m) => s"\"" + k + "\":" + m }

@@ -69,23 +69,14 @@ object GraftSession {
   * enough to push a 48g driver into eviction/GC churn mid-run, which is
   * where the historical "phantom 2-7× swings" in the back half of the
   * bench alphabet came from (q34/q70/q84 episodes in BENCH.md). The
-  * runners sweep each query's newly-created pins after its timing —
-  * EXCEPT for the queries that build the cross-query shared audit frame
-  * (unpersisting a localCheckpoint is unrecoverable: lineage is
-  * truncated, so a swept shared frame cannot be recomputed). On a real
-  * cluster the same sweep belongs at job boundaries of any long-lived
-  * session. */
+  * runners sweep every query's newly-created pins after its timing. That
+  * is safe because no query hands a pinned frame to another: state shared
+  * across queries is a [[graft.queries.ArtifactCache]] entry (a persisted
+  * dir or driver-side value), never a pinned DataFrame — unpersisting a
+  * localCheckpoint is unrecoverable, since its lineage is truncated. On a
+  * real cluster the same sweep belongs at job boundaries of any
+  * long-lived session. */
 object DeadPins {
-
-  /** Queries whose construction pins DataFrames REUSED by later queries
-    * (the shared curation audit serving q66 + q100). Their pins survive. */
-  val sharedStateQueries: Set[String] =
-    Set("q100_curation_audit", "q66_corpus_to_dataloader",
-      // q176 consumes the SAME signature-cached audit frame — sweeping
-      // after it would unpersist pins q100/q66 still need (truncated
-      // localCheckpoint lineage is unrecoverable) whenever q176 is the
-      // first of the three to build the cache
-      "q176_trust_gated_curation")
 
   def snapshot(spark: SparkSession): Set[Int] =
     spark.sparkContext.getPersistentRDDs.keySet.toSet

@@ -23,10 +23,7 @@ object Verify {
         System.err.println(f"[verify] done $name in ${(System.nanoTime() - t0) / 1e9}%.1fs")
       } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      } finally {
-        if (!DeadPins.sharedStateQueries.contains(name))
-          DeadPins.sweep(spark, pins)
-      }
+      } finally DeadPins.sweep(spark, pins)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -21,23 +21,9 @@ object VectorOps {
   /** sum_i a_i*b_i (native single-pass kernel). */
   def dot(a: Column, b: Column): Column = VectorExprs.dot(a, b)
 
-  /** L2 norm. */
-  def l2Norm(a: Column): Column =
-    sqrt(aggregate(a, lit(0.0), (acc, v) => acc + v * v))
-
   /** Cosine similarity; 0 when either vector is all-zero (native
     * single-pass kernel: dot + both norms in one loop). */
   def cosine(a: Column, b: Column): Column = VectorExprs.cosine(a, b)
-
-  /** Squared euclidean distance. */
-  def sqDist(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)), lit(0.0), (acc, v) => acc + v)
-
-  /** Elementwise |a-b| summed — the reference's per-window L1 error
-    * `np.sum(np.abs(y_test - y_pred), axis=1)`
-    * (`SDE_forecast_ActiveSampling.py:220`). */
-  def l1Dist(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => abs(x - y)), lit(0.0), (acc, v) => acc + v)
 
   /** Mean of an array column (reference `np.mean(Y, axis=0)`,
     * `core/ensemble_model.py:66`). */

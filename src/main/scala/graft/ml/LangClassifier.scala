@@ -58,14 +58,6 @@ object LangClassifier {
         i => t.substr(i, lit(n))))
   }
 
-  /** 2-gram ++ 3-gram features of the lowercased text (the fastText
-    * default band: unigrams carry little language signal, 4-grams explode
-    * the hash load for no gain at this feature width). */
-  def charFeatures(text: Column): Column = {
-    val t = lower(coalesce(text, lit("")))
-    concat(charNgrams(t, 2), charNgrams(t, 3))
-  }
-
   /** Hashed char-n-gram features + class-index label frame.
     *
     * The lowered text is BOUND TO AN ATTRIBUTE behind a projection

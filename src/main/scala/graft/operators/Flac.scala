@@ -125,7 +125,6 @@ object Flac {
 
     def bytePos: Int = { require((pos & 7) == 0, "unaligned"); (pos >> 3).toInt }
     def align(): Unit = pos = (pos + 7) & ~7L
-    def atEnd: Boolean = (pos >> 3) >= b.length
 
     def readBit(): Int = {
       val i = (pos >> 3).toInt

@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
+import java.nio.file.{Files, Path, Paths}
+
 /** Shared local session for all suites (one JVM-wide session; suites run in
   * the forked test JVM). */
 object SparkSpec {
@@ -18,9 +20,31 @@ object SparkSpec {
     s.sparkContext.setLogLevel("ERROR")
     s
   }
+
+  def deleteTree(root: Path): Unit = if (Files.exists(root)) {
+    val walk = Files.walk(root)
+    try walk.sorted(java.util.Comparator.reverseOrder())
+      .forEach(p => Files.deleteIfExists(p))
+    finally walk.close()
+  }
 }
 
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.spark
   val sf001 = "/root/testdata/sf0.001"
+
+  /** Runs `body` on a private, writable copy of the sf0.001 fixture dir —
+    * a path no artifact-cache entry has seen yet, whose tables a test may
+    * rewrite — and deletes the copy afterwards. */
+  def withFixtureCopy[T](body: String => T): T = {
+    val src = Paths.get(sf001)
+    val dst = Files.createTempDirectory("spec_fixture_")
+    val walk = Files.walk(src)
+    try walk.forEach { p =>
+      val t = dst.resolve(src.relativize(p).toString)
+      if (Files.isDirectory(p)) Files.createDirectories(t)
+      else Files.write(t, Files.readAllBytes(p))
+    } finally walk.close()
+    try body(dst.toString) finally SparkSpec.deleteTree(dst)
+  }
 }
