@@ -103,11 +103,12 @@ def load_canary(path):
     return None
 
 
-def canary_speed(c):
+def canary_speed(c, multi=True):
     """One host-speed scalar per artifact: the MEAN of the before/after
-    32-thread canary seconds (the sustained-multicore figure the sf1
-    drift moved), falling back to whatever fields exist."""
-    vals = [c[k] for k in ("mt_before", "mt_after") if k in c]
+    multi-thread canary seconds (the sustained-multicore figure the sf1
+    drift moved), falling back to whatever fields exist. multi=False
+    reads the single-thread canary only."""
+    vals = [c[k] for k in ("mt_before", "mt_after") if k in c] if multi else []
     if not vals:
         vals = [c[k] for k in ("st_before", "st_after") if k in c]
     return sum(vals) / len(vals) if vals else None
@@ -151,10 +152,19 @@ def main():
     oc, nc = load_canary(args.old), load_canary(args.new)
     host_ratio = None
     if oc and nc:
-        os_, ns_ = canary_speed(oc), canary_speed(nc)
+        # the multi-thread canary runs one kernel per bench-session core
+        # (a fixed 32 in artifacts without the field); seconds measured at
+        # different widths are not comparable, so fall back to 1 thread
+        ot, nt = oc.get("threads", 32), nc.get("threads", 32)
+        same = ot == nt
+        if not same:
+            print(f"FLAG canary thread counts differ (old {ot}, new {nt}): "
+                  "normalizing by the single-thread canary")
+        os_, ns_ = canary_speed(oc, same), canary_speed(nc, same)
         if os_ and ns_:
             host_ratio = ns_ / os_
-            print(f"host canary (32-thread secs): old {os_:.2f} -> new "
+            width = f"{nt}-thread" if same else "1-thread"
+            print(f"host canary ({width} secs): old {os_:.2f} -> new "
                   f"{ns_:.2f}; host-speed ratio {host_ratio:.2f}x "
                   f"(canary-normalized new = raw / {host_ratio:.2f})")
     if host_ratio is None:

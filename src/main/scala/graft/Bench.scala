@@ -1,4 +1,5 @@
 package graft
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.functions._
 
 /** Deterministic CPU canary for the bench artifacts.
@@ -9,7 +10,7 @@ import org.apache.spark.sql.functions._
   * This kernel turns host speed into DATA: a fixed-iteration SplitMix64
   * mixing loop (integer-only, branch-free, cache-resident — immune to
   * JIT profile differences across runs of the same build) measured
-  * single-threaded and at the bench's full 32-thread width, before and
+  * single-threaded and at the bench session's full width, before and
   * after the query sweep. Ratios of canary seconds between two
   * artifacts estimate the host-speed component of any per-query swing;
   * `scripts/bench_compare.py` reports canary-normalized ratios
@@ -48,12 +49,12 @@ object HostCanary {
     elapsed
   }
 
-  /** (single-thread seconds, 32-thread seconds). One small warmup run
-    * JIT-compiles the kernel so the measured runs compare steady state. */
-  def sample(): (Double, Double) = {
+  /** (single-thread seconds, `threads`-thread seconds). One small warmup
+    * run JIT-compiles the kernel so the measured runs compare steady state. */
+  def sample(threads: Int): (Double, Double) = {
     measure(1, 10_000_000L) // warmup: force C2 compilation
     val st = measure(1, 400_000_000L)
-    val mt = measure(32, 400_000_000L)
+    val mt = measure(threads, 400_000_000L)
     (st, mt)
   }
 }
@@ -107,7 +108,8 @@ object Bench {
     val loadBefore = loadavg()
     // measured host speed (see HostCanary): bracket the sweep so drift
     // DURING the run is visible too, not just between rounds
-    val (canStB, canMtB) = HostCanary.sample()
+    val canaryThreads = spark.sparkContext.defaultParallelism
+    val (canStB, canMtB) = HostCanary.sample(canaryThreads)
     var failed = List.empty[String]
     // The host carries heavy external load (observed ±50% swings on
     // identical code between driver rounds); report steady-state as the
@@ -146,20 +148,22 @@ object Bench {
       // historical back-half eviction/GC swings (see DeadPins)
       val pins = DeadPins.snapshot(spark)
       val cold = once()
+      val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
       val warm = Seq.fill(if (cold > 0.3) reps else 1)(once())
+      val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
       DeadPins.sweep(spark, pins)
-      (name, cold, median(warm))
+      (name, cold, median(warm), compiles)
     }
-    val qs = results.map { case (k, _, m) => s"\"" + k + "\":" + m }
-      .mkString("{", ",", "}")
-    val colds = results.map { case (k, c, _) => s"\"" + k + "\":" + c }
-      .mkString("{", ",", "}")
+    def perQuery(v: ((String, Double, Double, Long)) => Any): String =
+      results.map(r => "\"" + r._1 + "\":" + v(r)).mkString("{", ",", "}")
     val total = results.map(_._3).sum
     val failedJson = failed.reverse.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val (canStA, canMtA) = HostCanary.sample()
+    val (canStA, canMtA) = HostCanary.sample(canaryThreads)
     val canaryJson = s"""{"st_before":$canStB,"mt_before":$canMtB,""" +
-      s""""st_after":$canStA,"mt_after":$canMtA,"threads":32,"iters":400000000}"""
-    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"cold":$colds,"reps":$reps,"failed":$failedJson,"canary":$canaryJson,"load_before":"$loadBefore","load_after":"${loadavg()}","sf":"$sfDir"}""")
+      s""""st_after":$canStA,"mt_after":$canMtA,"threads":$canaryThreads,"iters":400000000}"""
+    // compiles: Janino compilations over each query's warm reps (0 when
+    // all its generated classes are still in the codegen cache)
+    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":${perQuery(_._3)},"cold":${perQuery(_._2)},"compiles":${perQuery(_._4)},"reps":$reps,"failed":$failedJson,"canary":$canaryJson,"load_before":"$loadBefore","load_after":"${loadavg()}","sf":"$sfDir"}""")
     spark.stop()
   }
 }

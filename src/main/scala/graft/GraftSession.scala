@@ -23,6 +23,12 @@ import org.apache.spark.sql.SparkSession
   *    µs timestamps by Tables.load.
   *  - UTC session timezone: timestamp arithmetic must match the DuckDB
   *    oracles bit-for-bit.
+  *  - `spark.sql.codegen.cache.maxEntries` 1000 (static; Spark's default is
+  *    100): one pass of the active-sampling loop generates 101-105 distinct
+  *    classes, so at 100 it evicted its own classes before reusing them —
+  *    every warm pass over unchanged inputs ran 54-74 Janino compilations
+  *    and spent 5.1-7.4 of its 12.5-16.4 cpu-s in the JIT compiler threads
+  *    (4-cpu host). At 1000 a warm pass compiles nothing.
   */
 object GraftSession {
 
@@ -47,6 +53,7 @@ object GraftSession {
       .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", "1000")
 
   /** Local session sized from SPARK_GRAFT_CPUS (the driver contract). */
   def local(): SparkSession = {

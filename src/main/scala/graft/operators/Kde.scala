@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders}
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, Row}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 
@@ -122,10 +122,16 @@ object Kde {
     * (`core/utils.py:110-117`), with the reference's fallback 1.0 when the
     * estimate is degenerate and floor 1e-8. Weighted case uses effective
     * sample size neff = (sum w)^2 / sum w^2 as gaussian_kde does. */
-  def scottBandwidth(df: DataFrame, value: Column, weight: Column = lit(1.0)): Double = {
-    val r = df.select(
-      sum(weight).as("sw"), sum(weight * weight).as("sw2"),
-      sum(weight * value).as("swv"), sum(weight * value * value).as("swv2")).head()
+  def scottBandwidth(df: DataFrame, value: Column, weight: Column = lit(1.0)): Double =
+    scott(df.select(scottSums(value, weight): _*).head())
+
+  /** The four weighted sums Scott's rule reads (sw, sw2, swv, swv2). */
+  private def scottSums(value: Column, weight: Column): Seq[Column] = Seq(
+    sum(weight).as("sw"), sum(weight * weight).as("sw2"),
+    sum(weight * value).as("swv"), sum(weight * value * value).as("swv2"))
+
+  /** Scott's rule from a row whose first four fields are [[scottSums]]. */
+  private def scott(r: Row): Double = {
     val sw = r.getDouble(0); val sw2 = r.getDouble(1)
     if (sw <= 0 || sw2 <= 0) return 1.0
     val mean = r.getDouble(2) / sw
@@ -136,10 +142,10 @@ object Kde {
   }
 
   /** Fit a weighted KDE over `value`, returning the grid + density.
-    * Two passes: a tiny stats aggregate for bandwidth/grid bounds, then one
-    * binning pass. `bandwidth=None` → Scott's rule; `bounds=None` →
-    * [min - 3bw, max + 3bw] (the auto-grid padding the reference inherits
-    * from FFTKDE).
+    * Two passes: one tiny stats aggregate for bandwidth and grid bounds
+    * (skipped when the caller gives both), then one binning pass.
+    * `bandwidth=None` → Scott's rule; `bounds=None` → [min - 3bw,
+    * max + 3bw] (the auto-grid padding the reference inherits from FFTKDE).
     *
     * Default method is BINNED (linear binning to the grid + driver-side
     * kernel convolution over ≤ gridSize bins) — the same
@@ -151,11 +157,12 @@ object Kde {
           gridSize: Int = 1024, bandwidth: Option[Double] = None,
           bounds: Option[(Double, Double)] = None,
           exact: Boolean = false): KdeResult = {
-    val bw = bandwidth.getOrElse(scottBandwidth(df, value, weight))
-    val (lo, hi) = bounds.getOrElse {
-      val r = df.select(min(value), max(value)).head()
-      (r.getDouble(0) - 3 * bw, r.getDouble(1) + 3 * bw)
-    }
+    // one stats row serves whichever of bandwidth and bounds the caller
+    // leaves to the data; no round trip when both are given
+    lazy val r = df.select(scottSums(value, weight) ++
+      Seq(min(value), max(value)): _*).head()
+    val bw = bandwidth.getOrElse(scott(r))
+    val (lo, hi) = bounds.getOrElse((r.getDouble(4) - 3 * bw, r.getDouble(5) + 3 * bw))
     if (exact) {
       val agg = new KdeAggregator(lo, hi, gridSize, bw)
       val c = udaf(agg, Encoders.product[KdeIn])

@@ -34,13 +34,16 @@ case class ActiveSamplingConfig(
   * Each iteration is a pure function (train, pool, model) → (train', pool',
   * model'): score the pool once, run the three explorers (SE = squared
   * error, US = uncertainty, US-LW = likelihood-weighted uncertainty) as
-  * top-1 select-and-moves over the SAME cached scored pool (one scan powers
-  * all three — the fusion the reference does by reusing arrays), then refit.
+  * top-1 select-and-moves over the SAME cached scored pool (one job picks
+  * all three, [[Selection.selectAndMoveEach]] — the fusion the reference
+  * does by reusing arrays), then refit.
   *
   * Scale notes: the scored pool is cached per iteration and localCheckpointed
-  * every `checkpointEvery` iterations to cut union+anti-join lineage growth
-  * (SURVEY.md §7 risk list); every selection is TakeOrderedAndProject + a
-  * broadcast anti-join, so iteration cost is O(one pool scan).
+  * every `checkpointEvery` iterations to cut union+filter lineage growth
+  * (SURVEY.md §7 risk list); the explorers' step is one scan collecting
+  * 3 candidates per explorer and partition, so iteration cost is O(one
+  * pool scan) (measured up to 4M-row pools, see
+  * [[Selection.selectAndMoveEach]]).
   */
 object ActiveSampling {
 
@@ -102,14 +105,12 @@ object ActiveSampling {
 
       // 4b-4d: three explorers off the same scored scan (reference :222-269)
       val usLwScore = (lit(1.0) / greatest(predKde.interpolate(col("pred")), lit(1e-12))) * col("var")
-      val (p1, t1, _) = Selection.selectAndMove(scored, train,
-        pow(col("pred") - col("y"), 2), 1, "id", "se", Seq(col("id")))
-      val (p2, t2, _) = Selection.selectAndMove(p1, t1, col("var"), 1, "id", "us", Seq(col("id")))
-      val (p3, t3, _) = Selection.selectAndMove(p2, t2, usLwScore, 1, "id", "us_lw", Seq(col("id")))
+      val (nextPool, nextTrain, _) = Selection.selectAndMoveEach(scored, train,
+        Seq("se" -> pow(col("pred") - col("y"), 2), "us" -> col("var"),
+          "us_lw" -> usLwScore), "id")
 
-      val dropCols = Seq("pred", "var")
-      pool = p3.drop(dropCols: _*)
-      train = t3.drop(dropCols: _*)
+      pool = nextPool.drop("pred", "var")
+      train = nextTrain
       if (it % cfg.checkpointEvery == 0) {
         pool = pool.localCheckpoint()
         train = train.localCheckpoint()
@@ -135,8 +136,8 @@ object ActiveSampling {
 
   /** Deterministic flagship-loop trace (the q54 oracle gate): runs the REAL
     * active-sampling machinery — inverse-density Efraimidis–Spirakis init
-    * sample, then per iteration the three explorer [[Selection.selectAndMove]]
-    * top-1 picks (SE / US / US-LW) over the shrinking pool — in the
+    * sample, then per iteration the three explorers' top-1 picks (SE / US /
+    * US-LW, [[Selection.selectAndMoveEach]]) over the shrinking pool — in the
     * oracle-parity configuration (the q25/q26 convention):
     *
     *   - fixture = the 50×50 grid + synthetic label (the q32 stage-0 set);
@@ -178,15 +179,15 @@ object ActiveSampling {
     var train = scored.join(broadcast(init), Seq("id"))
       .withColumn("explorer", lit("init"))
     val picks = Seq.newBuilder[(Long, String, Long, Double)]
+    val scoreCol = Map("se" -> "se", "us" -> "us", "us_lw" -> "lw")
     for (it <- 1 to iterations) {
-      for ((nm, sc) <- Seq("se" -> col("se"), "us" -> col("us"),
-          "us_lw" -> col("lw"))) {
-        val (p2, t2, sel) = Selection.selectAndMove(pool, train, sc, 1, "id",
-          nm, Seq(col("id")))
-        val r = sel.select(col("id"), sc.as("score")).head()
-        picks += ((it.toLong, nm, r.getLong(0), r.getDouble(1)))
-        pool = p2; train = t2
+      val (p2, t2, moved) = Selection.selectAndMoveEach(pool, train,
+        Seq("se", "us", "us_lw").map(nm => nm -> col(scoreCol(nm))), "id")
+      moved.collect().foreach { r =>
+        val nm = r.getAs[String]("explorer")
+        picks += ((it.toLong, nm, r.getAs[Long]("id"), r.getAs[Double](scoreCol(nm))))
       }
+      pool = p2; train = t2
     }
     picks.result().toDF("iter", "explorer", "selected_id", "score")
   }

@@ -6,17 +6,11 @@ import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.{Files, Path, Paths}
 
 /** Shared local session for all suites (one JVM-wide session; suites run in
-  * the forked test JVM). */
+  * the forked test JVM), built with the engine's own session conf — the
+  * codegen cache, ANSI mode and SQL extensions the mains run under. */
 object SparkSpec {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val s = GraftSession.builder("4").appName("graft-tests").getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
   }

@@ -57,6 +57,25 @@ class KdeSpec extends SparkSpec {
     assert(math.abs(integral - 1.0) < 0.01, s"integral=$integral")
   }
 
+  test("fit's one-aggregate bandwidth and bounds equal the separate-query values exactly") {
+    val rnd = new scala.util.Random(7)
+    val df = Seq.fill(2000)((rnd.nextGaussian() * 1.7 + 0.3, 0.5 + rnd.nextDouble()))
+      .toDF("v", "w").repartition(3)
+    for (w <- Seq(lit(1.0), col("w"))) {
+      val r = Kde.fit(df, col("v"), w, gridSize = 64)
+      val bw = Kde.scottBandwidth(df, col("v"), w)
+      val mm = df.select(min("v"), max("v")).head()
+      assert(r.bandwidth == bw)
+      assert(r.gridMin == mm.getDouble(0) - 3 * bw)
+      assert(r.gridMax == mm.getDouble(1) + 3 * bw)
+      // either value given: the other still comes from the data
+      assert(Kde.fit(df, col("v"), w, gridSize = 64, bounds = Some((-9.0, 9.0)))
+        .bandwidth == bw)
+      val b = Kde.fit(df, col("v"), w, gridSize = 64, bandwidth = Some(0.25))
+      assert((b.gridMin, b.gridMax) == (mm.getDouble(0) - 0.75, mm.getDouble(1) + 0.75))
+    }
+  }
+
   test("Scott bandwidth matches sigma*n^(-1/5)") {
     val rnd = new scala.util.Random(3)
     val data = Seq.fill(1000)(rnd.nextGaussian() * 2.0)

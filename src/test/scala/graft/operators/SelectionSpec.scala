@@ -78,6 +78,50 @@ class SelectionSpec extends SparkSpec {
     assert(train.count() == 12)
   }
 
+  test("selectAndMoveEach picks, pools and trains like chained selectAndMoves") {
+    // constant `var`: US ranks by id alone. Row 0 tops SE (its NaN is the
+    // largest double) and US, so US must skip to its next candidate; `lw`
+    // ties 0.0 with -0.0 (equal in Spark's order) and has a null (last).
+    val pool = (0L until 40L).map { i =>
+      val se = if (i == 0) Double.NaN else ((i * 7) % 11).toDouble
+      val lw: java.lang.Double =
+        if (i == 5) null else if (i % 3 == 0) -0.0 else if (i % 3 == 1) 0.0 else -1.0 * i
+      (i, i * 0.5, se, 0.25, lw)
+    }.toDF("id", "y", "se", "var", "lw").repartition(3)
+    val explorers = Seq("se" -> col("se"), "us" -> col("var"), "us_lw" -> col("lw"))
+    val train0 = pool.limit(0).select("id", "y").withColumn("explorer", lit("init"))
+    var (pA, tA, pB, tB) = (pool, train0, pool, train0)
+    for (it <- 1 to 4) {
+      val picksA = explorers.map { case (nm, sc) =>
+        val (p, t, sel) = Selection.selectAndMove(pA, tA, sc, 1, "id", nm, Seq(col("id")))
+        pA = p; tA = t
+        (nm, sel.select("id").as[Long].head())
+      }
+      val (p, t, moved) = Selection.selectAndMoveEach(pB, tB, explorers, "id")
+      pB = p; tB = t
+      val picksB = moved.select("explorer", "id").as[(String, Long)].collect().toSeq
+      assert(picksB == picksA, s"iteration $it")
+      if (it == 1) assert(picksA.map(_._2) == Seq(0L, 1L, 3L))
+      assert(pB.select("id").as[Long].collect().sorted.toSeq ==
+        pA.select("id").as[Long].collect().sorted.toSeq)
+      assert(tB.collect().toSeq == tA.collect().toSeq)
+    }
+    assert(pB.count() == 40 - 12)
+  }
+
+  test("selectAndMoveEach keeps null ids in the pool, as the anti-join does") {
+    val pool = Seq[(java.lang.Long, Double)]((null, 9.0), (1L, 5.0), (2L, 4.0))
+      .toDF("id", "s")
+    val train0 = pool.limit(0).withColumn("explorer", lit("init"))
+    val explorers = Seq("a" -> col("s"), "b" -> col("s"))
+    val (pA1, tA1, _) = Selection.selectAndMove(pool, train0, col("s"), 1, "id", "a", Seq(col("id")))
+    val (pA, tA, _) = Selection.selectAndMove(pA1, tA1, col("s"), 1, "id", "b", Seq(col("id")))
+    val (pB, tB, _) = Selection.selectAndMoveEach(pool, train0, explorers, "id")
+    assert(pB.collect().toSeq == pA.collect().toSeq)
+    assert(tB.collect().toSeq == tA.collect().toSeq)
+    assert(tB.filter(col("id").isNull).count() == 2)
+  }
+
   test("topKPerGroup equals the window form with deterministic ties") {
     import spark.implicits._
     val rows = (0L until 1000L)
