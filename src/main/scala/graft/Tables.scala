@@ -41,7 +41,6 @@ object Tables {
     * already-wide input. Round-robin keeps row sets identical; Spark's
     * sort-before-repartition (default on) keeps retries deterministic. */
   def fanOut(df: DataFrame, keys: org.apache.spark.sql.Column*): DataFrame = {
-    if (sys.env.get("SPARK_GRAFT_FANOUT").contains("0")) return df
     val target = df.sparkSession.sparkContext.defaultParallelism
     // Width probe WITHOUT executing (r14 ADVICE): under AQE, Dataset.rdd
     // forces AdaptiveSparkPlanExec to materialize upstream query stages at

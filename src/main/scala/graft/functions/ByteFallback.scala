@@ -22,9 +22,6 @@ import org.apache.spark.sql.functions._
   */
 object ByteFallback {
 
-  /** Reserved id count appended after the regular vocabulary. */
-  val ByteIds = 256
-
   /** Driver/executor-side form: the UTF-8 bytes of `s` as 0..255 ints. */
   def utf8(s: String): Seq[Int] =
     s.getBytes(java.nio.charset.StandardCharsets.UTF_8).toSeq.map(b => b & 0xff)

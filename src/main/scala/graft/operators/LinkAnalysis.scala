@@ -310,9 +310,9 @@ object LinkAnalysis {
     * of the self-join form (measured: 48M wedge rows shuffled at
     * sf0.1, 9.0 s warm) disappears, leaving two m-row joins against
     * the O(√m)-bounded adjacency frame (5.2 s warm, identical rows —
-    * round-15 Profile15 A/B). Every step is a hash shuffle on node
-    * keys (canonical-edge distinct, degree count, orientation joins,
-    * adjacency aggregate, two attach joins, credit count) — no
+    * round-15 A/B, OPTIMIZATION_r15.md). Every step is a hash shuffle
+    * on node keys (canonical-edge distinct, degree count, orientation
+    * joins, adjacency aggregate, two attach joins, credit count) — no
     * windows, no driver state, no cartesian. */
   def triangles(edges: DataFrame,
                 policy: CheckpointPolicy = CheckpointPolicy.Local): DataFrame = {

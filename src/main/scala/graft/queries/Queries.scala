@@ -2732,26 +2732,10 @@ object Queries {
       .orderBy("doc_id")
   }
 
-  /** q144: raw-crawl HTML extraction ([[Html]] + [[WarcSources]] — the
-    * full capture-to-corpus composition): each document is wrapped in a
-    * synthesized HTML page PLANTED with every classic extractor trap —
-    * quoted `>` inside attributes, a `<script>` whose body contains
-    * `</div>` and a bare `<`, a `<style>` block, a comment containing
-    * tags, uppercase tag names, named/decimal/hex character references,
-    * an NBSP that must survive whitespace collapse — written as WARC
-    * `response` records (the raw-capture shape, vs q140's WET), read
-    * back split-parallel, and extracted. The oracle builds the expected
-    * title and visible text CLOSED-FORM from the documents table: any
-    * tag residue, entity slip, raw-text leak, or line-structure defect
-    * breaks the hash. */
   /** The synthesized-HTML WARC dir q144 and q146 share: one `response`
     * record per document, page = every classic extractor trap around the
     * escaped doc text (see q144's scaladoc); cached per fixture
     * signature. */
-  /** Profiling access to the cached q144/q146 WARC dir (Profile14). */
-  private[graft] def profCrawlWarcDir(s: SparkSession, d: String): String =
-    crawlWarcDir(s, d)
-
   private def crawlWarcDir(s: SparkSession, d: String): String =
     ArtifactCache.dir(s, "warch", d, "documents") { tmp =>
       val esc = regexp_replace(regexp_replace(regexp_replace(
@@ -2778,6 +2762,18 @@ object Queries {
         tmp, layoutCols = Seq("url"))
     }
 
+  /** q144: raw-crawl HTML extraction ([[Html]] + [[WarcSources]] — the
+    * full capture-to-corpus composition): each document is wrapped in a
+    * synthesized HTML page PLANTED with every classic extractor trap —
+    * quoted `>` inside attributes, a `<script>` whose body contains
+    * `</div>` and a bare `<`, a `<style>` block, a comment containing
+    * tags, uppercase tag names, named/decimal/hex character references,
+    * an NBSP that must survive whitespace collapse — written as WARC
+    * `response` records (the raw-capture shape, vs q140's WET), read
+    * back split-parallel, and extracted. The oracle builds the expected
+    * title and visible text CLOSED-FORM from the documents table: any
+    * tag residue, entity slip, raw-text leak, or line-structure defect
+    * breaks the hash. */
   def q144HtmlExtract(s: SparkSession, d: String): DataFrame = {
     val dir = crawlWarcDir(s, d)
     val recs = WarcSources.readWarc(s, dir)
@@ -3120,10 +3116,6 @@ object Queries {
 
   /** The planted dirty URL keyed on a document id — shared by q145 (over
     * doc_id) and q146 (over the id recovered from the WARC record). */
-  private[graft] def profPlantedUrl(id: Column): Column = plantedUrl(id)
-  private[graft] def profPlantedRobots(s: SparkSession): DataFrame =
-    plantedRobots(s)
-
   private def plantedUrl(id: Column): Column = {
     val m2 = id % 2
     val m3 = id % 3
@@ -3588,9 +3580,10 @@ object Queries {
     // PIN the 4-row resolve output: its plan nests two doubling-round
     // joins + the source semi-probe, and building the outer join's
     // broadcast from that subtree re-pays 3 sequential nested broadcast
-    // builds per execution (~2.2 s/pass measured at sf0.1 — Profile15
-    // m_full_agg2 3.9 s vs m_respin_agg2 1.7 s); the pin is one job at
-    // construction and the broadcast then reads a checkpointed leaf.
+    // builds per execution (~2.2 s/pass measured at sf0.1: full plan
+    // 3.9 s vs re-pinned 1.7 s, round 15 — OPTIMIZATION_r15.md); the pin
+    // is one job at construction and the broadcast then reads a
+    // checkpointed leaf.
     val res = CheckpointPolicy.fromSession(s).pin(
       Redirects.resolveKeyed(redirects, "rsrc", "rdst", maxDepth = 4,
         policy = CheckpointPolicy.fromSession(s)))
@@ -4069,7 +4062,7 @@ object Queries {
       lit("</a></p>"))
     // NO fanOut here (reverted in r15): the r14 keyed exchange measured a
     // consistent ~0.25 s LOSS on q173 at sf0.1 (1.14/1.54 vs 0.84/1.31
-    // warm across A/B reps via SPARK_GRAFT_FANOUT) — the one-line-HTML
+    // warm across A/B reps with and without it) — the one-line-HTML
     // parse is cheaper than the added hash exchange, and edgesWithBase
     // removed the join-back the exchange reuse was meant to serve.
     Tables.documents(s, d).select(id, base.as("u"), html.as("h"))
@@ -4077,12 +4070,9 @@ object Queries {
 
   /** Per-link rows of the q173 plant over `pages` in the
     * [[LinkGraph.appendLinkBatch]] shape (sd, dd, tgt, anchor) — the
-    * frame the per-batch anchor-artifact ingest appends. */
-  private def q173EdgeRows(s: SparkSession, pages: DataFrame): DataFrame =
-    q173EdgeRowsKeyed(s, pages).drop("doc_id")
-
-  /** [[q173EdgeRows]] with the source doc_id kept (the
-    * [[q165EdgeRowsKeyed]] batch-slicing convention). */
+    * frame the per-batch anchor-artifact ingest appends — with the
+    * source doc_id kept (the [[q165EdgeRowsKeyed]] batch-slicing
+    * convention). */
   private def q173EdgeRowsKeyed(s: SparkSession, pages: DataFrame): DataFrame = {
     val e = LinkGraph.edgesWithBase(pages, col("doc_id"), col("u"), col("h"))
     e.select(col("doc_id"),
@@ -4306,18 +4296,6 @@ object Queries {
     * rankers reference it on four branches — the q165DomainEdges
     * precedent). Must be digit-identical to the one-shot aggregate:
     * every consumer's oracle replays the one-shot chain. */
-  private[graft] def profServedQ165Edges(s: SparkSession, d: String): DataFrame =
-    servedQ165Edges(s, d)
-  private[graft] def profQ165EdgeRows(s: SparkSession, d: String): DataFrame =
-    q165EdgeRows(s, q165Pages(s, d))
-  private[graft] def profQ165PagesFrame(s: SparkSession, d: String): DataFrame =
-    q165Pages(s, d)
-  private[graft] def profQ165EdgeRowsSlice(s: SparkSession, d: String,
-                                           b: Int): DataFrame =
-    q165EdgeRows(s, q165Pages(s, d).filter(col("doc_id") % 3 === b))
-  private[graft] def profQ182Robots(s: SparkSession): DataFrame =
-    q182Robots(s)
-
   private def servedQ165Edges(s: SparkSession, d: String): DataFrame =
     CheckpointPolicy.fromSession(s).pin(
       LinkGraph.servedDomainEdges(s, linkArtifactFor(s, d)))

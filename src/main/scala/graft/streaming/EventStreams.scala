@@ -137,13 +137,11 @@ object EventStreams {
   def statefulSessionCounts(events: DataFrame, gapSeconds: Long): DataFrame = {
     import org.apache.spark.sql.streaming.GroupStateTimeout
     import org.apache.spark.sql.{Encoders, Row}
-    val rowEnc = Encoders.row(eventMicrosSchema)
     val stateEnc = Encoders.product[SessionState]
     val outEnc = Encoders.product[UserSessions]
     val byUser = events
       .select(col("user_id"), unix_micros(col("ts")).as("ts_us"))
-      .as(Encoders.row(new StructType()
-        .add("user_id", LongType).add("ts_us", LongType)))
+      .as(Encoders.row(eventMicrosSchema))
       .groupByKey((r: Row) => r.getLong(0))(Encoders.scalaLong)
     byUser.mapGroupsWithState(GroupStateTimeout.NoTimeout)(
       (userId: Long, rows: Iterator[Row],

@@ -21,6 +21,14 @@ class PlanGuardsSpec extends SparkSpec {
       case _ => ()
     }
 
+  test("the query registry and the oracle map name the same 185 queries") {
+    val queries = SparkEntry.queries.keySet
+    val oracles = SparkEntry.oracleSql.keySet
+    assert(queries == oracles,
+      s"no oracle: ${queries -- oracles}; no query: ${oracles -- queries}")
+    assert(queries.size == 185)
+  }
+
   test("scale-sensitive queries plan no unpartitioned windows") {
     val qs: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
       "q04_trapz" -> (Queries.q04Trapz _),

@@ -39,10 +39,12 @@ class PropertiesSpec extends SparkSpec {
       val n = 4 + 3 * i // vary merge budget across cases
       val b = 1 + (i * 7) % 30 // and batch size, incl. batch=1
       val seqM = graft.operators.Vocab.bpeTrain(df, col("text"), nMerges = n)
-      val batM = graft.operators.Vocab.bpeTrainBatched(df, col("text"),
-        nMerges = n, batch = b)
-      assert(batM == seqM,
-        s"case $i (nMerges=$n batch=$b) diverged:\n$batM\nvs\n$seqM")
+      atBothBpeLoops { loop =>
+        val batM = graft.operators.Vocab.bpeTrainBatched(df, col("text"),
+          nMerges = n, batch = b)
+        assert(batM == seqM,
+          s"case $i (nMerges=$n batch=$b, $loop) diverged:\n$batM\nvs\n$seqM")
+      }
     }
   }
 

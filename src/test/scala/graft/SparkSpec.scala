@@ -41,4 +41,16 @@ abstract class SparkSpec extends AnyFunSuite {
     } finally walk.close()
     try body(dst.toString) finally SparkSpec.deleteTree(dst)
   }
+
+  /** Runs `body` twice: with `spark.graft.bpe.localTrainMaxWords` at its
+    * default, where every test-sized corpus trains in the driver-side
+    * sequential loop, and at 0, which forces the distributed prefix-guard
+    * loop of batched BPE training. `body` gets a label for assertion
+    * messages; the conf is unset afterwards. */
+  def atBothBpeLoops[T](body: String => T): Seq[T] =
+    Seq(None, Some("0")).map { cap =>
+      cap.foreach(spark.conf.set("spark.graft.bpe.localTrainMaxWords", _))
+      try body(s"localTrainMaxWords=${cap.getOrElse("default")}")
+      finally spark.conf.unset("spark.graft.bpe.localTrainMaxWords")
+    }
 }

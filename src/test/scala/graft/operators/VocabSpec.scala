@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
+import org.apache.spark.ListenerDrain
 import org.apache.spark.sql.functions._
 
 class VocabSpec extends SparkSpec {
@@ -93,10 +94,15 @@ class VocabSpec extends SparkSpec {
       (0L until 30L).map(i => (i, "xy xz zy yx zz")), // dense tie counts
       Seq((0L, "aa ab aa"), (1L, "ab aa b"))          // exhausts early
     ).map(_.toSeq.toDF("doc_id", "text"))
-    for (c <- corpora; n <- Seq(3, 10, 25); b <- Seq(1, 4, 32)) {
+    for (c <- corpora; n <- Seq(3, 10, 25)) {
       val seqM = Vocab.bpeTrain(c, col("text"), nMerges = n)
-      val batM = Vocab.bpeTrainBatched(c, col("text"), nMerges = n, batch = b)
-      assert(batM == seqM, s"batch=$b nMerges=$n diverged:\n$batM\nvs\n$seqM")
+      atBothBpeLoops { loop =>
+        for (b <- Seq(1, 4, 32)) {
+          val batM = Vocab.bpeTrainBatched(c, col("text"), nMerges = n, batch = b)
+          assert(batM == seqM,
+            s"$loop batch=$b nMerges=$n diverged:\n$batM\nvs\n$seqM")
+        }
+      }
     }
   }
 
@@ -105,8 +111,11 @@ class VocabSpec extends SparkSpec {
     // past the interaction-dense early regime
     val docs = graft.Tables.documents(spark, sf001)
     val a = Vocab.bpeTrain(docs, col("text"), nMerges = 60)
-    val b = Vocab.bpeTrainBatched(docs, col("text"), nMerges = 60, batch = 24)
-    assert(a.size == 60 && a == b)
+    assert(a.size == 60)
+    atBothBpeLoops { loop =>
+      val b = Vocab.bpeTrainBatched(docs, col("text"), nMerges = 60, batch = 24)
+      assert(a == b, s"$loop diverged")
+    }
   }
 
   test("bpeTrainBatched uses far fewer jobs than merges learned") {
@@ -120,6 +129,8 @@ class VocabSpec extends SparkSpec {
     val many = bigrams.zipWithIndex.flatMap { case (w, i) =>
       Seq.fill(i + 2)(w)
     }.zipWithIndex.map { case (w, i) => (i.toLong, w) }.toDF("doc_id", "text")
+    val seqM = Vocab.bpeTrain(many, col("text"), nMerges = 13)
+    assert(seqM.size == 13)
     val sc = spark.sparkContext
     val listener = new org.apache.spark.scheduler.SparkListener {
       val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
@@ -129,19 +140,18 @@ class VocabSpec extends SparkSpec {
       }
     }
     sc.addSparkListener(listener)
-    try {
+    try atBothBpeLoops { loop =>
+      ListenerDrain(sc) // earlier runs' job starts land before the reset
+      listener.jobs.set(0)
       val m = Vocab.bpeTrainBatched(many, col("text"), nMerges = 13, batch = 32)
-      // listener events are async — poll briefly for the job starts
-      val deadline = System.nanoTime() + 5e9.toLong
-      while (listener.jobs.get() == 0 && System.nanoTime() < deadline)
-        Thread.sleep(50)
+      ListenerDrain(sc)
       val batchedJobs = listener.jobs.get()
-      assert(m.size == 13)
-      assert(m == Vocab.bpeTrain(many, col("text"), nMerges = 13))
-      // sequential training launches ≥ 13 argmax jobs; batched needs the
-      // prep pin + one sample + the exhaustion probe
+      assert(m == seqM, s"$loop diverged")
+      // sequential training launches ≥ 13 argmax jobs; the distributed
+      // batched loop needs the prep pin + one sample, the driver-side
+      // loop one collect
       assert(batchedJobs < 8,
-        s"expected batched training to use < 8 jobs, saw $batchedJobs")
+        s"$loop: expected batched training to use < 8 jobs, saw $batchedJobs")
     } finally sc.removeSparkListener(listener)
   }
 
@@ -252,9 +262,14 @@ class VocabSpec extends SparkSpec {
     val docs = (0 until 30).map(i =>
         (i.toLong, s"Hello world! It's ${i % 4} o'clock  NOW"))
       .toDF("doc_id", "text")
-    val b1 = Vocab.bpeTrainByteLevel(docs, col("text"), nMerges = 12, batch = 1)
-    val b32 = Vocab.bpeTrainByteLevel(docs, col("text"), nMerges = 12, batch = 32)
-    assert(b1 == b32)
+    val runs = atBothBpeLoops { loop =>
+      val b1 = Vocab.bpeTrainByteLevel(docs, col("text"), nMerges = 12, batch = 1)
+      val b32 = Vocab.bpeTrainByteLevel(docs, col("text"), nMerges = 12, batch = 32)
+      assert(b1 == b32, s"$loop diverged")
+      b1
+    }
+    assert(runs.distinct.size == 1,
+      s"driver-side and distributed loops diverged:\n${runs.mkString("\nvs\n")}")
   }
 
   test("byteLevelSymbols applies merges over the chr(1) wrap (alphabet " +
