@@ -1,6 +1,6 @@
 package graft
 
-import graft.queries.{Oracles, Queries}
+import graft.queries._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Driver contract — see SURVEY.md §7 + BASELINE.md gates. */
@@ -11,200 +11,30 @@ object SparkEntry {
     * l_extendedprice → inverse-density weights → Efraimidis–Spirakis top-100
     * informative sample (SURVEY.md §7 "minimum end-to-end slice"). */
   def entry(spark: SparkSession): DataFrame =
-    Queries.flagshipKdeSample(spark, "/root/testdata/sf0.001")
+    SamplingQueries.flagshipKdeSample(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q01_pricing_summary" -> (Queries.q01PricingSummary _),
-    "q02_error_metrics" -> (Queries.q02ErrorMetrics _),
-    "q03_histogram" -> (Queries.q03Histogram _),
-    "q04_trapz" -> (Queries.q04Trapz _),
-    "q05_minmax_scale" -> (Queries.q05MinMaxScale _),
-    "q06_inv_density_weights" -> (Queries.q06InvDensityWeights _),
-    "q07_middle_lookup" -> (Queries.q07MiddleLookup _),
-    "q08_topk" -> (Queries.q08TopK _),
-    "q09_pool_deletion" -> (Queries.q09PoolDeletion _),
-    "q10_dedup_groups" -> (Queries.q10DedupGroups _),
-    "q11_token_stats" -> (Queries.q11TokenStats _),
-    "q12_quality" -> (Queries.q12Quality _),
-    "q13_lang_id" -> (Queries.q13LangId _),
-    "q14_fingerprints" -> (Queries.q14Fingerprints _),
-    "q15_ngram_jaccard" -> (Queries.q15NgramJaccard _),
-    "q16_cosine_topk" -> (Queries.q16CosineTopK _),
-    "q17_embedding_pairs" -> (Queries.q17EmbeddingPairs _),
-    "q18_json" -> (Queries.q18Json _),
-    "q19_hourly" -> (Queries.q19Hourly _),
-    "q20_revenue_by_nation" -> (Queries.q20RevenueByNation _),
-    "q21_profile_orders" -> (Queries.q21ProfileOrders _),
-    "q22_validate" -> (Queries.q22Validate _),
-    "q23_dup_keys" -> (Queries.q23DupKeys _),
-    "q24_window_sums" -> (Queries.q24WindowSums _),
-    "q25_kde" -> (Queries.q25Kde _),
-    "q26_weighted_sample" -> (Queries.q26WeightedSample _),
-    "q27_sliding_windows" -> (Queries.q27SlidingWindows _),
-    "q28_minhash_pairs" -> (Queries.q28MinhashPairs _),
-    "q29_simhash_pairs" -> (Queries.q29SimhashPairs _),
-    "q30_ann_ivf" -> (Queries.q30AnnIvf _),
-    "q31_ann_topk_agg" -> (Queries.q31AnnTopKAgg _),
-    "q32_grid_source" -> (Queries.q32GridSource _),
-    "q33_lhs_strata" -> (Queries.q33LhsStrata _),
-    "q34_pca_project" -> (Queries.q34PcaProject _),
-    "q35_asof_join" -> (Queries.q35AsOfJoin _),
-    "q36_sessionize" -> (Queries.q36Sessionize _),
-    "q37_cube" -> (Queries.q37Cube _),
-    "q38_ranking" -> (Queries.q38Ranking _),
-    "q39_percentiles" -> (Queries.q39Percentiles _),
-    "q40_left_join" -> (Queries.q40LeftJoin _),
-    "q41_multi_distinct" -> (Queries.q41MultiDistinct _),
-    "q42_stratified_sample" -> (Queries.q42StratifiedSample _),
-    "q43_contamination" -> (Queries.q43Contamination _),
-    "q44_dedup_clusters" -> (Queries.q44DedupClusters _),
-    "q45_quality_gate" -> (Queries.q45QualityGate _),
-    "q46_repetition" -> (Queries.q46Repetition _),
-    "q47_range_join" -> (Queries.q47RangeJoin _),
-    "q48_sketch_gates" -> (Queries.q48SketchGates _),
-    "q49_interp_join" -> (Queries.q49InterpJoin _),
-    "q50_heavy_hitters" -> (Queries.q50HeavyHitters _),
-    "q51_robust_outliers" -> (Queries.q51RobustOutliers _),
-    "q52_wav_roundtrip" -> (Queries.q52WavRoundtrip _),
-    "q53_pgm_roundtrip" -> (Queries.q53PgmRoundtrip _),
-    "q54_bdqa_trace" -> (Queries.q54BdqaTrace _),
-    "q55_png_roundtrip" -> (Queries.q55PngRoundtrip _),
-    "q56_aiff_roundtrip" -> (Queries.q56AiffRoundtrip _),
-    "q57_ann_pq" -> (Queries.q57AnnPq _),
-    "q58_mp3_metadata" -> (Queries.q58Mp3Metadata _),
-    "q59_mp4_metadata" -> (Queries.q59Mp4Metadata _),
-    "q60_bloom_decontaminate" -> (Queries.q60BloomDecontaminate _),
-    "q61_sequence_packing" -> (Queries.q61SequencePacking _),
-    "q62_mixture_sample" -> (Queries.q62MixtureSample _),
-    "q63_zorder_cells" -> (Queries.q63ZOrderCells _),
-    "q64_ann_ivfpq" -> (Queries.q64AnnIvfPq _),
-    "q65_incremental_dedup" -> (Queries.q65IncrementalDedup _),
-    "q66_corpus_to_dataloader" -> (Queries.q66CorpusToDataloader _),
-    "q67_key_skew" -> (Queries.q67KeySkew _),
-    "q68_vocab_encode" -> (Queries.q68VocabEncode _),
-    "q69_compaction" -> (Queries.q69Compaction _),
-    "q70_equidepth_bins" -> (Queries.q70EquiDepthBins _),
-    "q71_group_limit" -> (Queries.q71GroupLimit _),
-    "q72_pii_redaction" -> (Queries.q72PiiRedaction _),
-    "q73_calibration" -> (Queries.q73Calibration _),
-    "q74_embedding_lsh_recall" -> (Queries.q74EmbeddingLshRecall _),
-    "q75_active_sampling_trace" -> (Queries.q75ActiveSamplingTrace _),
-    "q76_hash_split" -> (Queries.q76HashSplit _),
-    "q77_semantic_keepers" -> (Queries.q77SemanticKeepers _),
-    "q78_doc_chunks" -> (Queries.q78DocChunks _),
-    "q79_contamination_fraction" -> (Queries.q79ContaminationFraction _),
-    "q80_embedding_incremental_admit" -> (Queries.q80EmbeddingIncrementalAdmit _),
-    "q81_semdedup_keepers" -> (Queries.q81SemdedupKeepers _),
-    "q82_dsir_selection" -> (Queries.q82DsirSelection _),
-    "q83_bigram_cross_entropy" -> (Queries.q83BigramCrossEntropy _),
-    "q84_duplicated_spans" -> (Queries.q84DuplicatedSpans _),
-    "q85_bm25_topk" -> (Queries.q85Bm25TopK _),
-    "q86_segment_dedup" -> (Queries.q86SegmentDedup _),
-    "q87_quality_classifier" -> (Queries.q87QualityClassifier _),
-    "q88_token_budget_plan" -> (Queries.q88TokenBudgetPlan _),
-    "q89_bm25_indexed" -> (Queries.q89Bm25Indexed _),
-    "q90_entropy_stats" -> (Queries.q90EntropyStats _),
-    "q91_funnel" -> (Queries.q91Funnel _),
-    "q92_retention" -> (Queries.q92Retention _),
-    "q93_image_phash_dedup" -> (Queries.q93ImagePhashDedup _),
-    "q94_anomaly_zscores" -> (Queries.q94AnomalyZScores _),
-    "q95_audio_fingerprint_dedup" -> (Queries.q95AudioFingerprintDedup _),
-    "q96_funnel_windowed" -> (Queries.q96FunnelWindowed _),
-    "q97_neyman_sample" -> (Queries.q97NeymanSample _),
-    "q98_rendezvous_shards" -> (Queries.q98RendezvousShards _),
-    "q99_salted_join" -> (Queries.q99SaltedJoin _),
-    "q100_curation_audit" -> (Queries.q100CurationAudit _),
-    "q101_chunk_bm25" -> (Queries.q101ChunkBm25 _),
-    "q102_group_percent_rank" -> (Queries.q102GroupPercentRank _),
-    "q103_bpe_tokenizer" -> (Queries.q103BpeTokenizer _),
-    "q104_corpus_drift" -> (Queries.q104CorpusDrift _),
-    "q105_hybrid_rrf" -> (Queries.q105HybridRrf _),
-    "q106_embedding_drift" -> (Queries.q106EmbeddingDrift _),
-    "q107_flac_roundtrip" -> (Queries.q107FlacRoundtrip _),
-    "q108_gmm_em" -> (Queries.q108GmmEm _),
-    "q109_ranking_metrics" -> (Queries.q109RankingMetrics _),
-    "q110_kn_trigram_ce" -> (Queries.q110KnTrigramCe _),
-    "q111_hll_cardinality" -> (Queries.q111HllCardinality _),
-    "q112_jsonl_source" -> (Queries.q112JsonlSource _),
-    "q113_temperature_mix" -> (Queries.q113TemperatureMix _),
-    "q114_mmr_rerank" -> (Queries.q114MmrRerank _),
-    "q115_cms_frequency" -> (Queries.q115CmsFrequency _),
-    "q116_c4_line_filter" -> (Queries.q116C4LineFilter _),
-    "q117_hist_quantiles" -> (Queries.q117HistQuantiles _),
-    "q118_ce_reweighting" -> (Queries.q118CeReweighting _),
-    "q119_ann_incremental" -> (Queries.q119AnnIncremental _),
-    "q120_csv_source" -> (Queries.q120CsvSource _),
-    "q121_allpairs_jaccard" -> (Queries.q121AllPairsJaccard _),
-    "q122_orc_source" -> (Queries.q122OrcSource _),
-    "q123_pagerank" -> (Queries.q123PageRank _),
-    "q124_gap_fill" -> (Queries.q124GapFill _),
-    "q125_unigram_tokenizer" -> (Queries.q125UnigramTokenizer _),
-    "q126_ewma" -> (Queries.q126Ewma _),
-    "q127_leakage_safe_split" -> (Queries.q127LeakageSafeSplit _),
-    "q128_triangle_count" -> (Queries.q128Triangles _),
-    "q129_kmv_overlap" -> (Queries.q129KmvOverlap _),
-    "q130_wordpiece_tokenizer" -> (Queries.q130WordPiece _),
-    "q131_fuzzy_name_pairs" -> (Queries.q131FuzzyNamePairs _),
-    "q132_scd2_intervals" -> (Queries.q132Scd2Intervals _),
-    "q133_kcore" -> (Queries.q133KCore _),
-    "q134_pivot" -> (Queries.q134Pivot _),
-    "q135_cube" -> (Queries.q135Cube _),
-    "q136_avro_source" -> (Queries.q136AvroSource _),
-    "q137_langid_trained" -> (Queries.q137LangIdTrained _),
-    "q138_bpe_byte_fallback" -> (Queries.q138BpeByteFallback _),
-    "q139_mp3_fingerprint_dedup" -> (Queries.q139Mp3FingerprintDedup _),
-    "q140_warc_source" -> (Queries.q140WarcSource _),
-    "q141_exact_substring_dedup" -> (Queries.q141ExactSubstringDedup _),
-    "q142_triangles_doulion" -> (Queries.q142TrianglesDoulion _),
-    "q143_byte_level_bpe" -> (Queries.q143ByteLevelBpe _),
-    "q144_html_extract" -> (Queries.q144HtmlExtract _),
-    "q145_url_curation" -> (Queries.q145UrlCuration _),
-    "q146_crawl_pipeline" -> (Queries.q146CrawlPipeline _),
-    "q147_personalized_pagerank" -> (Queries.q147PersonalizedPagerank _),
-    "q148_rank_sketch_quantiles" -> (Queries.q148RankQuantiles _),
-    "q149_perplexity_buckets" -> (Queries.q149PerplexityBuckets _),
-    "q150_jl_projection" -> (Queries.q150JlProjection _),
-    "q151_group_rank_quantiles" -> (Queries.q151GroupRankQuantiles _),
-    "q152_jl_ann" -> (Queries.q152JlAnn _),
-    "q153_jl_ivf_ann" -> (Queries.q153JlIvfAnn _),
-    "q154_adts_metadata" -> (Queries.q154AdtsMetadata _),
-    "q155_domain_cap" -> (Queries.q155DomainCap _),
-    "q156_robots_filter" -> (Queries.q156RobotsFilter _),
-    "q157_boilerplate_blocks" -> (Queries.q157BoilerplateBlocks _),
-    "q158_wikixml_source" -> (Queries.q158WikixmlSource _),
-    "q159_blockword_scan" -> (Queries.q159BlockwordScan _),
-    "q160_crawl_pipeline_v2" -> (Queries.q160CrawlPipelineV2 _),
-    "q161_wikitext_clean" -> (Queries.q161WikitextClean _),
-    "q162_wiki_corpus" -> (Queries.q162WikiCorpus _),
-    "q163_redirect_resolution" -> (Queries.q163RedirectResolution _),
-    "q164_link_graph" -> (Queries.q164LinkGraph _),
-    "q165_crawl_graph_centrality" -> (Queries.q165CrawlGraphCentrality _),
-    "q166_anchor_corpus" -> (Queries.q166AnchorCorpus _),
-    "q167_wiki_redirect_aliases" -> (Queries.q167WikiRedirectAliases _),
-    "q168_jpeg_metadata" -> (Queries.q168JpegMetadata _),
-    "q169_domain_trustrank" -> (Queries.q169DomainTrustRank _),
-    "q170_sitemap_seeds" -> (Queries.q170SitemapSeeds _),
-    "q171_canonical_dedup" -> (Queries.q171CanonicalDedup _),
-    "q172_crawl_pipeline_v3" -> (Queries.q172CrawlPipelineV3 _),
-    "q173_anchor_bm25f" -> (Queries.q173AnchorBm25f _),
-    "q174_sitemap_coverage" -> (Queries.q174SitemapCoverage _),
-    "q175_image_triage_route" -> (Queries.q175ImageTriageRoute _),
-    "q176_trust_gated_curation" -> (Queries.q176TrustGatedCuration _),
-    "q177_incremental_centrality" -> (Queries.q177IncrementalCentrality _),
-    "q178_crawl_frontier" -> (Queries.q178CrawlFrontier _),
-    "q179_indexed_anchor_bm25f" -> (Queries.q179IndexedAnchorBm25f _),
-    "q180_recrawl_wave" -> (Queries.q180RecrawlWave _),
-    "q181_incremental_anchor_corpus" -> (Queries.q181IncrementalAnchorCorpus _),
-    "q182_trust_frontier" -> (Queries.q182TrustFrontier _),
-    "q183_hits_domains" -> (Queries.q183HitsDomains _),
-    "q184_centrality_blended_serving" ->
-      (Queries.q184CentralityBlendedServing _),
-    "q185_warm_rerank" -> (Queries.q185WarmRerank _)
-  )
+  /** Every registered query, one family at a time; a name registered
+    * twice fails here. */
+  private[graft] lazy val specs: Seq[QuerySpec] = {
+    val all = Seq(TabularQueries.specs, SamplingQueries.specs,
+      TextQueries.specs, TokenizerQueries.specs, RetrievalQueries.specs,
+      SketchQueries.specs, SourceQueries.specs, MediaQueries.specs,
+      CrawlQueries.specs, GraphQueries.specs).flatten
+    val dups = all.groupBy(_.name).collect { case (n, xs) if xs.size > 1 => n }
+    require(dups.isEmpty, s"query names registered twice: ${dups.mkString(", ")}")
+    all
+  }
 
-  /** DuckDB oracles for EVERY query above — since round 3 none are
-    * rows-only: the non-SQL-native ops (KDE, sampling, LSH, ANN, PCA) run
-    * in engine-portable modes or emit closed-form invariant gates. */
-  def oracleSql: Map[String, String] = Oracles.all
+  /** name → build, for every registered query. */
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    specs.map(q => q.name -> q.build).toMap
+
+  /** name → DuckDB oracle SQL for EVERY query above — since round 3 none
+    * are rows-only: the non-SQL-native ops (KDE, sampling, LSH, ANN, PCA)
+    * run in engine-portable modes or emit closed-form invariant gates.
+    * Each statement ships on one line: every whitespace run collapses to
+    * one space, so a significant multi-space inside a SQL string literal
+    * must be written as `chr(32)` concatenation (see q143's plant). */
+  def oracleSql: Map[String, String] =
+    specs.map(q => q.name -> q.oracle().replaceAll("\\s+", " ").trim).toMap
 }

@@ -20,7 +20,7 @@ object Layout {
 
   /** Morton interleave of non-negative integer grid coordinates (each
     * masked to `bits` low bits; `d·bits ≤ 63`). Scale continuous columns
-    * to grid cells first — see [[gridCell]]. */
+    * to grid cells first. */
   def zValue(cols: Seq[Column], bits: Int): Column = {
     val d = cols.size
     require(d >= 1 && bits >= 1 && d * bits <= 63, "need 1+ cols, d*bits <= 63")
@@ -29,14 +29,6 @@ object Layout {
       i <- 0 until bits
     } yield shiftleft(shiftright(c.cast("long"), i).bitwiseAND(lit(1L)), i * d + j)
     terms.reduce(_.bitwiseOR(_))
-  }
-
-  /** Scale a continuous value in [lo, hi] onto the 2^bits grid (clamped —
-    * out-of-domain values land on the edge cells). */
-  def gridCell(c: Column, lo: Double, hi: Double, bits: Int): Column = {
-    val cells = (1L << bits).toDouble
-    least(greatest(floor((c - lit(lo)) / lit(hi - lo) * lit(cells)), lit(0.0)),
-      lit(cells - 1)).cast("long")
   }
 
   /** Cluster a table for multi-dim pruning: range-partition + sort by the

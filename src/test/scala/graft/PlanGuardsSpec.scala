@@ -1,7 +1,6 @@
 package graft
 
-import graft.queries.Queries
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.{Expand, Window => LogicalWindow}
 import org.apache.spark.sql.execution.joins.CartesianProductExec
 import org.apache.spark.sql.functions.{col, count_distinct}
@@ -21,29 +20,17 @@ class PlanGuardsSpec extends SparkSpec {
       case _ => ()
     }
 
-  test("the query registry and the oracle map name the same 185 queries") {
-    val queries = SparkEntry.queries.keySet
-    val oracles = SparkEntry.oracleSql.keySet
-    assert(queries == oracles,
-      s"no oracle: ${queries -- oracles}; no query: ${oracles -- queries}")
-    assert(queries.size == 185)
+  test("the registry holds 185 specs under 185 distinct names") {
+    assert(SparkEntry.specs.size == 185)
+    assert(SparkEntry.specs.map(_.name).distinct.size == 185)
   }
 
   test("scale-sensitive queries plan no unpartitioned windows") {
-    val qs: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
-      "q04_trapz" -> (Queries.q04Trapz _),
-      "q05_minmax" -> (Queries.q05MinMaxScale _),
-      "q06_inv_density" -> (Queries.q06InvDensityWeights _),
-      "q07_middle" -> (Queries.q07MiddleLookup _),
-      "q24_window_sums" -> (Queries.q24WindowSums _),
-      "q27_sliding" -> (Queries.q27SlidingWindows _),
-      "q35_asof" -> (Queries.q35AsOfJoin _),
-      "q36_sessionize" -> (Queries.q36Sessionize _),
-      "q38_ranking" -> (Queries.q38Ranking _),
-      "q42_stratified" -> (Queries.q42StratifiedSample _),
-      "q49_interp_join" -> (Queries.q49InterpJoin _),
-      "q109_ranking_metrics" -> (Queries.q109RankingMetrics _))
-    qs.foreach { case (n, fn) => assertNoGlobalWindow(fn(spark, sf001), n) }
+    Seq("q04_trapz", "q05_minmax_scale", "q06_inv_density_weights",
+      "q07_middle_lookup", "q24_window_sums", "q27_sliding_windows",
+      "q35_asof_join", "q36_sessionize", "q38_ranking",
+      "q42_stratified_sample", "q49_interp_join", "q109_ranking_metrics")
+      .foreach(n => assertNoGlobalWindow(SparkEntry.queries(n)(spark, sf001), n))
   }
 
   // queries whose construction is fully lazy (no driver-side fit/collect).

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.SparkSpec
+import graft.{SparkEntry, SparkSpec}
 import org.apache.spark.sql.functions._
 
 class AnnSpec extends SparkSpec {
@@ -165,7 +165,7 @@ class AnnSpec extends SparkSpec {
     assert(recall >= rawRecall, "rescoring must not hurt recall")
     // the q57 driver gate must also hold on the biggest fixture (2000
     // vectors, same worst-case uniform distribution, refine = 100)
-    val r01 = graft.queries.Queries.q57AnnPq(spark, "/root/testdata/sf0.1").head()
+    val r01 = SparkEntry.queries("q57_ann_pq")(spark, "/root/testdata/sf0.1").head()
     assert(r01.getLong(0) == 1L, "q57 recall gate at sf0.1")
     // the PQ scan moved codes, not vectors: 16 ints vs 64 doubles per row
   }
@@ -191,7 +191,7 @@ class AnnSpec extends SparkSpec {
       nlist = 16, nprobe = 8, refine = 100)
     assert(out.columns.toSeq == Seq("query_id", "rank", "neighbor_id", "score"))
     // the driver gate must hold on the biggest fixture too
-    val r01 = graft.queries.Queries.q64AnnIvfPq(spark, "/root/testdata/sf0.1").head()
+    val r01 = SparkEntry.queries("q64_ann_ivfpq")(spark, "/root/testdata/sf0.1").head()
     assert(r01.getLong(0) == 1L, "q64 recall gate at sf0.1")
   }
 
@@ -216,7 +216,7 @@ class AnnSpec extends SparkSpec {
     val self = run().filter(col("query_id") === col("neighbor_id"))
       .select("score").as[Double].collect()
     assert(self.length == 8 && self.forall(s => math.abs(s - 1.0) < 1e-6))
-    val r01 = graft.queries.Queries.q152JlAnn(spark, "/root/testdata/sf0.1").head()
+    val r01 = SparkEntry.queries("q152_jl_ann")(spark, "/root/testdata/sf0.1").head()
     assert(r01.getLong(0) == 1L, "q152 recall gate at sf0.1")
   }
 

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.SparkSpec
+import graft.{SparkEntry, SparkSpec}
 import graft.functions.BloomMightContain
 import org.apache.spark.sql.functions._
 
@@ -54,8 +54,8 @@ class BloomSpec extends SparkSpec {
 
   test("q60 bloom path computes exactly q43's contamination answer") {
     val d = "/root/testdata/sf0.001"
-    val direct = graft.queries.Queries.q43Contamination(spark, d).collect()
-    val bloomed = graft.queries.Queries.q60BloomDecontaminate(spark, d).collect()
+    val direct = SparkEntry.queries("q43_contamination")(spark, d).collect()
+    val bloomed = SparkEntry.queries("q60_bloom_decontaminate")(spark, d).collect()
     assert(direct.length == bloomed.length)
     direct.zip(bloomed).foreach { case (a, b) =>
       assert(a.getLong(0) == b.getLong(0) && a.getLong(1) == b.getLong(1))

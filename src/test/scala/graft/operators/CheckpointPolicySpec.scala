@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.SparkSpec
+import graft.{SparkEntry, SparkSpec}
 import org.apache.spark.sql.functions._
 
 class CheckpointPolicySpec extends SparkSpec {
@@ -28,12 +28,12 @@ class CheckpointPolicySpec extends SparkSpec {
   }
 
   test("q44 runs in reliable mode via spark.graft.checkpoint.dir and matches local") {
-    val localRows = graft.queries.Queries.q44DedupClusters(spark, sf001)
+    val localRows = SparkEntry.queries("q44_dedup_clusters")(spark, sf001)
       .as[(Long, Long)].collect().toSeq
     val dir = java.nio.file.Files.createTempDirectory("graft_ckpt_q44_").toString
     spark.conf.set("spark.graft.checkpoint.dir", dir)
     try {
-      val reliableRows = graft.queries.Queries.q44DedupClusters(spark, sf001)
+      val reliableRows = SparkEntry.queries("q44_dedup_clusters")(spark, sf001)
         .as[(Long, Long)].collect().toSeq
       assert(reliableRows == localRows,
         "q44 reliable-mode output diverged from local mode")
@@ -84,9 +84,9 @@ class CheckpointPolicySpec extends SparkSpec {
         col("v"), threshold = 0.9)))
 
     // q50's word-count pin follows the session policy conf
-    val localQ50 = rows(graft.queries.Queries.q50HeavyHitters(spark, sf001))
+    val localQ50 = rows(SparkEntry.queries("q50_heavy_hitters")(spark, sf001))
     spark.conf.set("spark.graft.checkpoint.dir", dir)
-    try assert(rows(graft.queries.Queries.q50HeavyHitters(spark, sf001)) ==
+    try assert(rows(SparkEntry.queries("q50_heavy_hitters")(spark, sf001)) ==
       localQ50, "q50 reliable-mode output diverged")
     finally spark.conf.unset("spark.graft.checkpoint.dir")
   }

@@ -259,17 +259,23 @@ class VocabSpec extends SparkSpec {
 
   test("bpeTrainByteLevel batch sizes agree (the batched-prefix proof " +
        "holds over the byte alphabet)") {
-    val docs = (0 until 30).map(i =>
-        (i.toLong, s"Hello world! It's ${i % 4} o'clock  NOW"))
-      .toDF("doc_id", "text")
-    val runs = atBothBpeLoops { loop =>
-      val b1 = Vocab.bpeTrainByteLevel(docs, col("text"), nMerges = 12, batch = 1)
-      val b32 = Vocab.bpeTrainByteLevel(docs, col("text"), nMerges = 12, batch = 32)
-      assert(b1 == b32, s"$loop diverged")
-      b1
+    // the second corpus puts overlapping pairs in one sample: merging
+    // (A,N) consumes the N of (N,A) in "BANANA", (a,n) then (an,a)
+    // chain, and pair counts tie at 240, 120 and 60
+    val corpora = Seq(
+      (0 until 30).map(i => s"Hello world! It's ${i % 4} o'clock  NOW"),
+      (0 until 60).map(i => s"Banana bandana BANANA ana${i % 5}!! aaaa Aaa")
+    ).map(_.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text"))
+    for (docs <- corpora) {
+      val runs = atBothBpeLoops { loop =>
+        val b1 = Vocab.bpeTrainByteLevel(docs, col("text"), nMerges = 12, batch = 1)
+        val b32 = Vocab.bpeTrainByteLevel(docs, col("text"), nMerges = 12, batch = 32)
+        assert(b1 == b32, s"$loop diverged")
+        b1
+      }
+      assert(runs.distinct.size == 1,
+        s"driver-side and distributed loops diverged:\n${runs.mkString("\nvs\n")}")
     }
-    assert(runs.distinct.size == 1,
-      s"driver-side and distributed loops diverged:\n${runs.mkString("\nvs\n")}")
   }
 
   test("byteLevelSymbols applies merges over the chr(1) wrap (alphabet " +

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.SparkSpec
+import graft.{SparkEntry, SparkSpec}
 
 import java.nio.file.{Files, Path, Paths}
 import java.nio.file.attribute.FileTime
@@ -85,7 +85,7 @@ class ArtifactCacheSpec extends SparkSpec {
   test("exit cleanup deletes the dirs of every kind, the crawl kinds included") {
     withFixtureCopy { d =>
       // query construction builds the synthesized-HTML WARC dir ("warch")
-      Queries.q144HtmlExtract(spark, d)
+      SparkEntry.queries("q144_html_extract")(spark, d)
       val warch = ArtifactCache.dir(spark, "warch", d, "documents") { _ =>
         fail("q144 should have built the warch dir")
       }

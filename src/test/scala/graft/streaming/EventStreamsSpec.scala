@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.{SparkSpec, Tables}
+import graft.{SparkEntry, SparkSpec, Tables}
 import org.apache.spark.sql.functions._
 
 class EventStreamsSpec extends SparkSpec {
@@ -336,7 +336,7 @@ class EventStreamsSpec extends SparkSpec {
       EventStreams.readEvents(spark, eventsDir))
     val got = EventStreams.runToMemory(spark, streamed, "attr_test", "append")
       .select("click_id", "purchase_id", "user_id", "dt_us")
-    val batch = graft.queries.Queries.q47RangeJoin(spark, sf001)
+    val batch = SparkEntry.queries("q47_range_join")(spark, sf001)
     assert(got.count() == batch.count())
     assert(got.exceptAll(batch).count() == 0, "stream/batch attribution mismatch")
     assert(batch.count() > 0, "fixture should produce at least one attribution pair")
