@@ -1,7 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+
+import scala.jdk.CollectionConverters._
 
 /** Link-graph centrality — weighted PageRank (Page, Brin, Motwani,
   * Winograd 1999, public method) as iterative DataFrame joins.
@@ -456,17 +458,31 @@ object LinkAnalysis {
     * way). Output: the surviving nodes with their degree INSIDE the core
     * — `(node, deg)`; empty when no k-core exists.
     *
-    * 100 TB shape: each round is one degree aggregate + one semi-join of
-    * the edge list against the surviving node set (both hash shuffles on
-    * node keys, edge payload 16 bytes); the edge frame is pinned per
-    * round (the iterative-join convention — lineage would otherwise
-    * nest). Rounds are data-dependent but bounded: each non-final round
-    * removes ≥ 1 node, and in practice peeling converges in a few rounds
-    * (the `maxRounds` guard fails loudly instead of looping — the q125
+    * Where the peel RUNS is a size question: the loop is job-bound (a pin,
+    * a degree pin and an emptiness probe per round), not data-bound.
+    *  - Up to `localMaxEdges` canonical edges (default 2,000,000 — 16
+    *    bytes each, ~32 MB packed), ONE capped collect brings the edge
+    *    list to the driver ([[PlanOps.collectUnderCap]]); the rounds run
+    *    over primitive arrays and the surviving `(node, deg)` rows come
+    *    back as a local leaf frame sorted by node — no pin, no per-round
+    *    job.
+    *  - Past the cap (or at `localMaxEdges = 0`) each round is one degree
+    *    aggregate + one semi-join of the edge list against the surviving
+    *    node set (both hash shuffles on node keys, edge payload 16 bytes);
+    *    the edge frame is pinned per round with `policy` (the
+    *    iterative-join convention — lineage would otherwise nest).
+    *    `policy` applies only on this path.
+    * Both paths peel in the same SYNCHRONOUS rounds — every node with
+    * degree < k drops at once — so they return the same rows under the
+    * same schema (LinkAnalysisSpec gates parity). Rounds are
+    * data-dependent but bounded: each non-final round removes ≥ 1 node,
+    * and in practice peeling converges in a few rounds (the `maxRounds`
+    * guard fails loudly on both paths instead of looping — the q125
     * MaxWordLen convention, because the oracle unrolls exactly
     * `maxRounds` rounds). */
   def kCore(edges: DataFrame, k: Int, maxRounds: Int = 24,
-            policy: CheckpointPolicy = CheckpointPolicy.Local): DataFrame = {
+            policy: CheckpointPolicy = CheckpointPolicy.Local,
+            localMaxEdges: Long = 2000000L): DataFrame = {
     require(k >= 1, s"k >= 1: $k")
     val canon = edges.select(
         least(col("a"), col("b")).cast("long").as("u"),
@@ -477,29 +493,67 @@ object LinkAnalysis {
       e.select(col("u").as("node"))
         .unionByName(e.select(col("v").as("node")))
         .groupBy("node").agg(count(lit(1)).as("deg"))
-    // The fixpoint check runs on the PINNED (node, deg) frame — node-sized,
-    // not edge-sized — so the converged (= last) round costs one tiny
-    // isEmpty probe instead of the full semi-join + edge pin + edge count
-    // the edge-count check paid (measured at sf0.1/local[32]: the regenerated
-    // graph converges in 3 rounds, and the old shape re-built the unchanged
-    // 1.19M-edge frame once more just to observe m == n). The surviving
-    // degree frame is also exactly the declared output, so the final
-    // output aggregate is the last round's pin, not a recompute.
-    var e = policy.pin(canon)
-    var deg = policy.pin(degreesOf(e))
-    var rounds = 0
-    while (!deg.filter(col("deg") < k).isEmpty) {
-      require(rounds < maxRounds,
-        s"k-core did not converge in $maxRounds rounds (the oracle's unroll)")
-      val keep = deg.filter(col("deg") >= k).select("node")
-      e = policy.pin(
-        e.join(keep.select(col("node").as("u")), Seq("u"), "left_semi")
-          .join(keep.select(col("node").as("v")), Seq("v"), "left_semi")
-          .select("u", "v"))
-      deg = policy.pin(degreesOf(e))
-      rounds += 1
+    val unconverged = s"k-core did not converge in $maxRounds rounds (the oracle's unroll)"
+    PlanOps.collectUnderCap(canon, localMaxEdges) match {
+      case Some(rows) =>
+        val core = peelLocal(rows.map(_.getLong(0)), rows.map(_.getLong(1)), k, maxRounds)
+        require(core.isDefined, unconverged)
+        canon.sparkSession.createDataFrame(
+          core.get.map { case (node, deg) => Row(node, deg) }.toSeq.asJava,
+          degreesOf(canon).schema)
+      case None =>
+        // The fixpoint check runs on the PINNED (node, deg) frame —
+        // node-sized, not edge-sized — so the converged (= last) round
+        // costs one tiny isEmpty probe instead of the full semi-join +
+        // edge pin + edge count the edge-count check paid. The surviving
+        // degree frame is also exactly the declared output, so the final
+        // output aggregate is the last round's pin, not a recompute.
+        var e = policy.pin(canon)
+        var deg = policy.pin(degreesOf(e))
+        var rounds = 0
+        while (!deg.filter(col("deg") < k).isEmpty) {
+          require(rounds < maxRounds, unconverged)
+          val keep = deg.filter(col("deg") >= k).select("node")
+          e = policy.pin(
+            e.join(keep.select(col("node").as("u")), Seq("u"), "left_semi")
+              .join(keep.select(col("node").as("v")), Seq("v"), "left_semi")
+              .select("u", "v"))
+          deg = policy.pin(degreesOf(e))
+          rounds += 1
+        }
+        deg
     }
-    deg
+  }
+
+  /** [[kCore]]'s driver-side peel over the distinct canonical edges
+    * `(us(i), vs(i))`: the surviving `(node, deg)` pairs sorted by node,
+    * or None when more than `maxRounds` peeling rounds are needed. Nodes
+    * are renumbered densely (sorted ids, binary search) so every round is
+    * one pass over the live edges into a primitive degree array. */
+  private def peelLocal(us: Array[Long], vs: Array[Long], k: Int,
+                        maxRounds: Int): Option[Array[(Long, Long)]] = {
+    val sorted = (us ++ vs).sorted
+    val distinct = Array.newBuilder[Long]
+    sorted.indices.foreach(i => if (i == 0 || sorted(i) != sorted(i - 1)) distinct += sorted(i))
+    val ids = distinct.result()
+    val n = ids.length
+    val ui = us.map(java.util.Arrays.binarySearch(ids, _))
+    val vi = vs.map(java.util.Arrays.binarySearch(ids, _))
+    val deg = new Array[Long](n)
+    var live = us.indices.toArray
+    var rounds = 0
+    var done = false
+    while (!done) {
+      java.util.Arrays.fill(deg, 0L)
+      for (i <- live) { deg(ui(i)) += 1; deg(vi(i)) += 1 }
+      if (!deg.exists(d => d > 0 && d < k)) done = true
+      else if (rounds >= maxRounds) return None
+      else {
+        live = live.filter(i => deg(ui(i)) >= k && deg(vi(i)) >= k)
+        rounds += 1
+      }
+    }
+    Some(ids.indices.iterator.filter(deg(_) > 0).map(j => (ids(j), deg(j))).toArray)
   }
 
   /** The co-purchase part graph: an undirected edge between every pair of

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** Plan-shaping helpers. */
@@ -75,4 +75,18 @@ object PlanOps {
   def pinPairScore(df: DataFrame, keys: Seq[String], scoreCol: String): DataFrame =
     df.groupBy(keys.map(col): _*)
       .agg(max(col(scoreCol)).as(scoreCol))
+
+  /** `df`'s rows when there are at most `cap` of them, None past the cap
+    * — the size test of the driver-side loops ([[WordPiece.train]],
+    * [[Vocab.bpeTrainBatched]], [[LinkAnalysis.kCore]]), which run their
+    * iterations over the collected input when it fits and fall back to the
+    * distributed loop otherwise. One `limit(cap + 1)` collect decides and
+    * delivers at once (no separate count job); `cap <= 0` returns None
+    * without running anything, forcing the distributed loop. */
+  def collectUnderCap(df: DataFrame, cap: Long): Option[Array[Row]] =
+    if (cap <= 0) None
+    else {
+      val rows = df.limit(math.min(cap + 1, Int.MaxValue.toLong).toInt).collect()
+      if (rows.length <= cap) Some(rows) else None
+    }
 }

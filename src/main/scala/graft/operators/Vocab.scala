@@ -209,18 +209,11 @@ object Vocab {
     // alphabet where Java string order == UTF8 binary order, same
     // non-overlapping replace; VocabSpec gates the equality). Past the
     // cap the batched distributed loop below takes over.
-    locally {
-      val spark = words0.sparkSession
-      val cap = spark.conf.getOption("spark.graft.bpe.localTrainMaxWords")
-        .map(_.toLong).getOrElse(2000000L)
-      if (cap > 0) {
-        val rows = words0.limit(math.min(cap + 1, Int.MaxValue.toLong).toInt)
-          .select(col("freq"), col("w")).collect()
-        if (rows.length <= cap)
-          return trainLocalSeq(
-            rows.map(r => (r.getLong(0), r.getString(1))), nMerges, sep)
-      }
-    }
+    val cap = words0.sparkSession.conf.getOption("spark.graft.bpe.localTrainMaxWords")
+      .map(_.toLong).getOrElse(2000000L)
+    val local = PlanOps.collectUnderCap(words0.select(col("freq"), col("w")), cap)
+    if (local.isDefined)
+      return trainLocalSeq(local.get.map(r => (r.getLong(0), r.getString(1))), nMerges, sep)
     var words = policy.pin(words0)
     val merges = scala.collection.mutable.ArrayBuffer.empty[BpeMerge]
     var exhausted = false

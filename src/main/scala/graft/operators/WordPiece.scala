@@ -150,22 +150,18 @@ object WordPiece {
     * the cap; loud failure on an empty corpus, [[MaxWordLen]] enforced. */
   private def collectWordsUnderCap(docs: DataFrame,
                                    text: Column): Option[Array[(Long, String)]] = {
-    val spark = docs.sparkSession
-    val cap = spark.conf.getOption("spark.graft.wp.localTrainMaxWords")
+    val cap = docs.sparkSession.conf.getOption("spark.graft.wp.localTrainMaxWords")
       .map(_.toLong).getOrElse(2000000L)
-    val localRows = wpWords(docs, text)
-      .select(col("freq"), col("word"))
-      .limit(math.max(0L, math.min(cap + 1, Int.MaxValue.toLong)).toInt)
-      .collect()
-    if (localRows.isEmpty && cap > 0)
-      throw new IllegalArgumentException(
-        "WordPiece.train: corpus has no tokens after normalization")
-    if (localRows.nonEmpty && localRows.length <= cap) {
-      val maxLen = localRows.iterator.map(_.getString(1).length).max
-      require(maxLen <= MaxWordLen,
-        s"longest word $maxLen exceeds the replayable walk bound $MaxWordLen")
-      Some(localRows.map(r => (r.getLong(0), r.getString(1))))
-    } else None
+    PlanOps.collectUnderCap(wpWords(docs, text).select(col("freq"), col("word")), cap)
+      .map { localRows =>
+        if (localRows.isEmpty)
+          throw new IllegalArgumentException(
+            "WordPiece.train: corpus has no tokens after normalization")
+        val maxLen = localRows.iterator.map(_.getString(1).length).max
+        require(maxLen <= MaxWordLen,
+          s"longest word $maxLen exceeds the replayable walk bound $MaxWordLen")
+        localRows.map(r => (r.getLong(0), r.getString(1)))
+      }
   }
 
   /** The driver-side merge loop — the exact arithmetic twin of

@@ -279,7 +279,13 @@ object CrawlQueries {
     * scaladoc for what each domain plants). */
   private def plantedRobots(s: SparkSession): DataFrame = {
     import s.implicits._
-    Seq(
+    plantedRobotsTxt.toDF("domain", "robots_txt")
+  }
+
+  /** [[plantedRobots]]' rows; the WARC pipelines pass its size as the
+    * broadcast-vs-shuffle hint to [[Robots.verdicts]], so the hint is
+    * the literal's own length and cannot drift from it. */
+  private val plantedRobotsTxt: Seq[(String, String)] = Seq(
       ("example.com",
         "# graft crawl fixture\n" +
         "User-Agent: *\n" +
@@ -300,9 +306,7 @@ object CrawlQueries {
         "User-agent: otherbot\n" +
         "Disallow:\n" +
         "Allow: /a/\n" +
-        "Sitemap: https://example.org/sitemap.xml\n")
-    ).toDF("domain", "robots_txt")
-  }
+        "Sitemap: https://example.org/sitemap.xml\n"))
 
   /** q156: robots.txt compliance ([[Robots]]) over [[plantedUrl]]'s
     * URL grid — one synthesized robots.txt per registered domain, each
@@ -393,12 +397,6 @@ object CrawlQueries {
         ELSE 'none' END AS kind
     FROM t ORDER BY doc_id"""
 
-  /** Row count of [[plantedRobots]], defined NEXT to the frame so the
-    * broadcast-vs-shuffle size hint the WARC pipelines pass to
-    * [[Robots.verdicts]] can never drift from the planted literal
-    * (r14 ADVICE: the hint was hard-coded at two call sites). */
-  private val plantedRobotsRows = 4L
-
   /** q160: the crawl-to-corpus pipeline, SECOND GENERATION — q146's
     * composition upgraded with the two round-11 curation stages a
     * production pipeline runs, each individually gated elsewhere and
@@ -431,7 +429,7 @@ object CrawlQueries {
       .localCheckpoint()
     val allowed = Robots.filterAllowed(recs, col("id"), col("curl"),
       plantedRobots(s), col("domain"), col("robots_txt"), agent = "GraftBot",
-      robotsSizeHint = Some(plantedRobotsRows))
+      robotsSizeHint = Some(plantedRobotsTxt.size.toLong))
     val kept = Urls.decontaminateByDomain(allowed, col("curl"),
       Seq("badsite.com"))
     val cleanDocs = Boilerplate.cleanText(Boilerplate.classify(
@@ -824,7 +822,7 @@ object CrawlQueries {
       .localCheckpoint()
     val allowed = Robots.filterAllowed(flagged, col("id"), col("curl"),
       plantedRobots(s), col("domain"), col("robots_txt"),
-      agent = "GraftBot", robotsSizeHint = Some(plantedRobotsRows))
+      agent = "GraftBot", robotsSizeHint = Some(plantedRobotsTxt.size.toLong))
     // pinned: feeds the canonical election AND the keeper join-back
     val kept = Urls.decontaminateByDomain(allowed, col("curl"),
       Seq("badsite.com")).localCheckpoint()

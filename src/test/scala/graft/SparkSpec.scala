@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.ListenerDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -40,6 +42,21 @@ abstract class SparkSpec extends AnyFunSuite {
       else Files.write(t, Files.readAllBytes(p))
     } finally walk.close()
     try body(dst.toString) finally SparkSpec.deleteTree(dst)
+  }
+
+  /** `body`'s result and the number of Spark jobs submitted while it ran. */
+  def withJobCount[T](body: => T): (T, Int) = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    ListenerDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val out = body
+      ListenerDrain(spark.sparkContext)
+      (out, jobs.get)
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   /** Runs `body` twice: with `spark.graft.bpe.localTrainMaxWords` at its

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 class LinkAnalysisSpec extends SparkSpec {
@@ -259,22 +260,46 @@ class LinkAnalysisSpec extends SparkSpec {
       assert(got(node) == tri, s"node $node: ${got(node)} vs $tri") }
   }
 
+  /** [[LinkAnalysis.kCore]]'s two paths: the default cap, under which
+    * every test-sized graph peels driver-side, and `localMaxEdges = 0`,
+    * which forces the pinned distributed loop. */
+  private val kCorePaths = Seq("driver-side" -> 2000000L, "distributed" -> 0L)
+
+  private def kCoreRows(edges: DataFrame, k: Int, maxRounds: Int = 24,
+                        cap: Long): Set[(Long, Long)] =
+    LinkAnalysis.kCore(edges, k, maxRounds, localMaxEdges = cap)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+
+  /** Driver-side reference peel over a canonical edge set: the surviving
+    * (node, deg) pairs and the number of peeling rounds it took. */
+  private def referencePeel(edges: Set[(Long, Long)], k: Int): (Map[Long, Long], Int) = {
+    def degrees(e: Set[(Long, Long)]) = e.toSeq.flatMap(p => Seq(p._1, p._2))
+      .groupBy(identity).map { case (x, v) => x -> v.size.toLong }
+    var e = edges
+    var rounds = 0
+    while (degrees(e).values.exists(_ < k)) {
+      val keep = degrees(e).filter(_._2 >= k).keySet
+      e = e.filter(p => keep(p._1) && keep(p._2))
+      rounds += 1
+    }
+    (degrees(e), rounds)
+  }
+
   test("kCore: K4 plus a tail — the 3-core is exactly the K4") {
     val k4 = for { a <- 1L to 4L; b <- (a + 1) to 4L } yield (a, b)
     val edges = (k4 ++ Seq((4L, 5L), (5L, 6L))).toDF("a", "b")
-    val got = LinkAnalysis.kCore(edges, k = 3)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(got == (1L to 4L).map(n => (n, 3L)).toSet)
+    for ((path, cap) <- kCorePaths)
+      assert(kCoreRows(edges, k = 3, cap = cap) == (1L to 4L).map(n => (n, 3L)).toSet, path)
   }
 
   test("kCore: a path graph cascades to an empty 2-core") {
     val path = (1L until 6L).map(i => (i, i + 1)).toDF("a", "b")
-    assert(LinkAnalysis.kCore(path, k = 2).count() == 0L)
     // ...while a cycle IS its own 2-core
     val cycle = ((1L until 6L).map(i => (i, i + 1)) :+ (6L, 1L)).toDF("a", "b")
-    val got = LinkAnalysis.kCore(cycle, k = 2)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(got == (1L to 6L).map(n => (n, 2L)).toSet)
+    for ((label, cap) <- kCorePaths) {
+      assert(kCoreRows(path, k = 2, cap = cap).isEmpty, label)
+      assert(kCoreRows(cycle, k = 2, cap = cap) == (1L to 6L).map(n => (n, 2L)).toSet, label)
+    }
   }
 
   test("kCore: a LONG peel cascade exceeds the default guard and " +
@@ -283,11 +308,13 @@ class LinkAnalysisSpec extends SparkSpec {
     // cascade needs ~30 rounds — past the default 24 (which must fail
     // LOUDLY, the oracle's unroll bound), fine at maxRounds = 64.
     val long = (1L until 61L).map(i => (i, i + 1)).toDF("a", "b")
-    val e = intercept[IllegalArgumentException] {
-      LinkAnalysis.kCore(long, k = 2)
+    for ((path, cap) <- kCorePaths) {
+      val e = intercept[IllegalArgumentException] {
+        LinkAnalysis.kCore(long, k = 2, localMaxEdges = cap)
+      }
+      assert(e.getMessage.contains("did not converge"), s"$path: ${e.getMessage}")
+      assert(kCoreRows(long, k = 2, maxRounds = 64, cap = cap).isEmpty, path)
     }
-    assert(e.getMessage.contains("did not converge"), e.getMessage)
-    assert(LinkAnalysis.kCore(long, k = 2, maxRounds = 64).count() == 0L)
   }
 
   test("kCore matches driver-side peeling on a seeded random graph") {
@@ -296,25 +323,58 @@ class LinkAnalysisSpec extends SparkSpec {
     val edges = (for {
       a <- 0 until n; b <- (a + 1) until n if rnd.nextDouble() < 0.2
     } yield (a.toLong, b.toLong)).toVector
-    def peel(k: Int): Map[Long, Int] = {
-      var e = edges.toSet
-      var changed = true
-      while (changed) {
-        val deg = e.toSeq.flatMap(p => Seq(p._1, p._2))
-          .groupBy(identity).map { case (x, v) => x -> v.size }
-        val keep = deg.filter(_._2 >= k).keySet
-        val next = e.filter(p => keep(p._1) && keep(p._2))
-        changed = next != e
-        e = next
-      }
-      e.toSeq.flatMap(p => Seq(p._1, p._2))
-        .groupBy(identity).map { case (x, v) => x -> v.size }
+    for (k <- Seq(3, 5, 7); (path, cap) <- kCorePaths) {
+      val want = referencePeel(edges.toSet, k)._1.toSet
+      assert(kCoreRows(edges.toDF("a", "b"), k, cap = cap) == want, s"k=$k $path")
     }
-    for (k <- Seq(3, 5, 7)) {
-      val want = peel(k).map { case (a, b) => (a, b.toLong) }.toSet
-      val got = LinkAnalysis.kCore(edges.toDF("a", "b"), k)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(got == want, s"k=$k")
+  }
+
+  test("property: kCore's driver-side and distributed paths agree on rows, " +
+      "schema and the maxRounds failure") {
+    val rnd = new scala.util.Random(133)
+    // random multigraphs with self-loops, null endpoints, duplicate and
+    // reversed edges; the empty edge list; and k above the max degree
+    val graphs = Seq.fill(6) {
+      val n = 8 + rnd.nextInt(25)
+      val p = 0.1 + 0.3 * rnd.nextDouble()
+      val pairs = for {
+        a <- 0 until n; b <- 0 until n if rnd.nextDouble() < p / 2
+      } yield (Option(a.toLong), Option(b.toLong))
+      val nulls = Seq.fill(rnd.nextInt(3))(
+        if (rnd.nextBoolean()) (None, Some(rnd.nextInt(n).toLong))
+        else (Some(rnd.nextInt(n).toLong), None))
+      val dups = Seq.fill(rnd.nextInt(4))(pairs(rnd.nextInt(pairs.size)))
+      rnd.shuffle(pairs ++ nulls ++ dups ++ dups.map(_.swap))
+    } :+ Seq.empty[(Option[Long], Option[Long])]
+    for ((g, gi) <- graphs.zipWithIndex) {
+      val df = g.toDF("a", "b")
+      val canon = g.collect { case (Some(a), Some(b)) if a != b =>
+        (math.min(a, b), math.max(a, b)) }.toSet
+      val maxDeg = referencePeel(canon, 1)._1.values.maxOption.getOrElse(0L).toInt
+      for (k <- Seq(2, 3 + rnd.nextInt(4), maxDeg + 1)) {
+        val label = s"graph $gi (${canon.size} edges), k=$k"
+        val (want, rounds) = referencePeel(canon, k)
+        val byPath = kCorePaths.map { case (_, cap) =>
+          val out = LinkAnalysis.kCore(df, k, localMaxEdges = cap)
+          (out.schema, out.collect().map(r => (r.getLong(0), r.getLong(1))).toSet)
+        }
+        assert(byPath.map(_._2).forall(_ == want.toSet), label)
+        assert(byPath.map(_._1).distinct.size == 1, s"$label: ${byPath.map(_._1)}")
+        if (rounds > 0) {
+          // one round short of what the peel needs fails identically on
+          // both paths; exactly enough rounds succeeds on both
+          val msgs = kCorePaths.map { case (path, cap) =>
+            intercept[IllegalArgumentException] {
+              LinkAnalysis.kCore(df, k, maxRounds = rounds - 1, localMaxEdges = cap)
+            }.getMessage
+          }
+          assert(msgs.distinct.size == 1 && msgs.head.contains("did not converge"),
+            s"$label: $msgs")
+          for ((path, cap) <- kCorePaths)
+            assert(kCoreRows(df, k, maxRounds = rounds, cap = cap) == want.toSet,
+              s"$label $path at maxRounds=$rounds")
+        }
+      }
     }
   }
 

@@ -79,6 +79,15 @@ class SimilarityJoinSpec extends SparkSpec {
       got.toString)
   }
 
+  test("editNeighborPairs: the empty string pairs with one-char words, never with itself") {
+    // length("") = 0 makes sequence(1, 0) count down to [1, 0], so the
+    // empty word lands in its own bucket twice; the strict word_a < word_b
+    // filter must drop the ("", "") self-pair
+    assert(editPairs(Seq("", "a", "b", "ab")) ==
+      Set(("", "a"), ("", "b"), ("a", "ab"), ("a", "b"), ("ab", "b")))
+    assert(editPairs(Seq("", "")).isEmpty)
+  }
+
   test("editNeighborPairs equals brute-force levenshtein on random strings") {
     val rnd = new scala.util.Random(11)
     val words = Vector.fill(250)(

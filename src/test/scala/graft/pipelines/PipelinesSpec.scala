@@ -3,9 +3,7 @@ package graft.pipelines
 import graft.SparkSpec
 import graft.functions.Pdfs
 import graft.ml.{AnalyticScorer, TreeEnsembleScorer}
-import org.apache.spark.ListenerDrain
 import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 
@@ -69,31 +67,24 @@ class PipelinesSpec extends SparkSpec {
     val scorer = TreeEnsembleScorer(Seq("x1", "x2"), "y", n = 2, maxDepth = 6)
     val cfg = ActiveSamplingConfig(initSize = 40, iterations = 2,
       kdeGridSize = 128, checkpointEvery = 2)
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
     def compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     // (Janino compilations, jobs, train rows) of one run
     def runOnce(): (Long, Int, Seq[Row]) = {
-      ListenerDrain(spark.sparkContext)
-      val (c0, j0) = (compiles, jobs.get)
-      val (train, _) = ActiveSampling.run(spark, grid, scorer, cfg)
-      val rows = train.collect().toSeq
-      ListenerDrain(spark.sparkContext)
-      (compiles - c0, jobs.get - j0, rows)
+      val c0 = compiles
+      val (rows, jobs) = withJobCount {
+        val (train, _) = ActiveSampling.run(spark, grid, scorer, cfg)
+        train.collect().toSeq
+      }
+      (compiles - c0, jobs, rows)
     }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val (_, _, first) = runOnce()
-      val (compiled, submitted, second) = runOnce()
-      assert(second == first)
-      // the loop's classes fit the engine's codegen cache (GraftSession)
-      assert(compiled == 0, s"$compiled Janino compilations in the second run")
-      // before the fused explorer step and the one-aggregate KDE fit this
-      // run submitted 114 jobs (and compiled 113 classes)
-      assert(submitted <= JobBudget, s"$submitted jobs")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val (_, _, first) = runOnce()
+    val (compiled, submitted, second) = runOnce()
+    assert(second == first)
+    // the loop's classes fit the engine's codegen cache (GraftSession)
+    assert(compiled == 0, s"$compiled Janino compilations in the second run")
+    // before the fused explorer step and the one-aggregate KDE fit this
+    // run submitted 114 jobs (and compiled 113 classes)
+    assert(submitted <= JobBudget, s"$submitted jobs")
   }
 
   test("OU simulation: length, start value, determinism") {
