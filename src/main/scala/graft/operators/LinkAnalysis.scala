@@ -460,12 +460,19 @@ object LinkAnalysis {
     *
     * Where the peel RUNS is a size question: the loop is job-bound (a pin,
     * a degree pin and an emptiness probe per round), not data-bound.
-    *  - Up to `localMaxEdges` canonical edges (default 2,000,000 — 16
-    *    bytes each, ~32 MB packed), ONE capped collect brings the edge
-    *    list to the driver ([[PlanOps.collectUnderCap]]); the rounds run
-    *    over primitive arrays and the surviving `(node, deg)` rows come
-    *    back as a local leaf frame sorted by node — no pin, no per-round
-    *    job.
+    *  - Up to `localMaxEdges` canonical edges (default 2,000,000), ONE
+    *    capped collect brings the edge list to the driver
+    *    ([[PlanOps.collectUnderCap]]); the rounds run over primitive
+    *    arrays and the surviving `(node, deg)` rows come back as a local
+    *    leaf frame sorted by node — no pin, no per-round job. The driver
+    *    cost is the collect's: Spark's collected rows (~84 bytes per edge)
+    *    and the `Row`s built from them (~100) are live together, ~370 MB
+    *    at the cap, before the edges shrink to the peel's ~17 bytes of
+    *    packed `Long`s (measured on a 1,999,864-edge synthetic graph).
+    *    At that size, and on q133's 1.19M-edge sf0.1 graph, this path
+    *    ran in a 512 MB driver heap, where the distributed loop ran out
+    *    of aggregation memory on the synthetic graph, and beat that
+    *    loop's wall time at every heap tried (4-cpu host, local[4]).
     *  - Past the cap (or at `localMaxEdges = 0`) each round is one degree
     *    aggregate + one semi-join of the edge list against the surviving
     *    node set (both hash shuffles on node keys, edge payload 16 bytes);
@@ -494,9 +501,13 @@ object LinkAnalysis {
         .unionByName(e.select(col("v").as("node")))
         .groupBy("node").agg(count(lit(1)).as("deg"))
     val unconverged = s"k-core did not converge in $maxRounds rounds (the oracle's unroll)"
-    PlanOps.collectUnderCap(canon, localMaxEdges) match {
-      case Some(rows) =>
-        val core = peelLocal(rows.map(_.getLong(0)), rows.map(_.getLong(1)), k, maxRounds)
+    // the collected rows are unpacked at once, so only the Long arrays
+    // outlive the collect
+    val packed = PlanOps.collectUnderCap(canon, localMaxEdges)
+      .map(rows => (rows.map(_.getLong(0)), rows.map(_.getLong(1))))
+    packed match {
+      case Some((us, vs)) =>
+        val core = peelLocal(us, vs, k, maxRounds)
         require(core.isDefined, unconverged)
         canon.sparkSession.createDataFrame(
           core.get.map { case (node, deg) => Row(node, deg) }.toSeq.asJava,
@@ -532,7 +543,8 @@ object LinkAnalysis {
     * one pass over the live edges into a primitive degree array. */
   private def peelLocal(us: Array[Long], vs: Array[Long], k: Int,
                         maxRounds: Int): Option[Array[(Long, Long)]] = {
-    val sorted = (us ++ vs).sorted
+    val sorted = us ++ vs
+    java.util.Arrays.sort(sorted)
     val distinct = Array.newBuilder[Long]
     sorted.indices.foreach(i => if (i == 0 || sorted(i) != sorted(i - 1)) distinct += sorted(i))
     val ids = distinct.result()

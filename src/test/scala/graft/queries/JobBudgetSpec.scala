@@ -8,19 +8,15 @@ import graft.{SparkEntry, SparkSpec}
   * cannot move them; a budget may always go down. */
 class JobBudgetSpec extends SparkSpec {
 
-  /** Query name -> jobs of one warm build + collect. */
-  private val Budgets = Map(
+  test("q133_kcore stays in its job budget") {
     // one fixture read, the capped edge-list collect (3: the self-join's
     // and the distinct's shuffle stages) and the output sort (3: range
     // sample, map, result); LinkAnalysis.kCore's pinned distributed loop,
     // forced with localMaxEdges = 0, submits 31 on the same graph
-    "q133_kcore" -> 7)
-
-  for ((name, budget) <- Budgets)
-    test(s"$name stays in its job budget") {
-      def run(): Unit = SparkEntry.queries(name)(spark, sf001).collect()
-      run() // cold: first reads of the fixture tables
-      val (_, submitted) = withJobCount(run())
-      assert(submitted <= budget, s"$name submitted $submitted jobs")
-    }
+    val budget = 7
+    def run(): Unit = SparkEntry.queries("q133_kcore")(spark, sf001).collect()
+    run() // cold: first reads of the fixture tables
+    val (_, submitted) = withJobCount(run())
+    assert(submitted <= budget, s"q133_kcore submitted $submitted jobs")
+  }
 }
