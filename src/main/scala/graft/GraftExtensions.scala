@@ -57,7 +57,9 @@ object GraftExtensions {
   val descriptions: Seq[(FunctionIdentifier, ExpressionInfo, FunctionBuilder)] = {
     def d(name: String, usage: String)(builder: FunctionBuilder) =
       (FunctionIdentifier(name),
-        new ExpressionInfo(classOf[GraftExtensions].getName, null, name, usage, ""),
+        // (arguments, examples, note, group, since, deprecated, source)
+        new ExpressionInfo(classOf[GraftExtensions].getName, null, name, usage,
+          "", "", "", "", "", "", ""),
         builder)
     Seq(
       // no builder-side casts: the kernels declare ImplicitCastInputTypes,

@@ -1,7 +1,7 @@
 package graft.ml
 
 import graft.operators.KdeResult
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Acquisition functions — the reference's `acquisition_fcn` dispatch

@@ -65,7 +65,7 @@ object Derivatives {
             - col(s"__fx${i}_${j}_-1_1") + col(s"__fx${i}_${j}_-1_-1")) / lit(4 * h * h)
         acc.withColumn(s"hess_${i + 1}_${j + 1}", hij)
       }
-    withHess.drop(withHess.columns.filter(_.startsWith("__f")): _*)
+    withHess.drop(withHess.columns.filter(_.startsWith("__f")).toIndexedSeq: _*)
   }
 
   /** Quadratic form JᵀHJ and squared norm ‖J‖² from the appended columns —

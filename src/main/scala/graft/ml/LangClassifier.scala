@@ -113,8 +113,6 @@ object LangClassifier {
                           numFeatures: Int = 4096,
                           maxIter: Int = 10,
                           tol: Double = 1e-3): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
     val feat = featurize(docs, id, text, labelIdx, numFeatures)
     val split = graft.operators.Mixture.hashSplit(feat, col("doc_id"),
       Seq("train" -> trainFrac, "test" -> (1.0 - trainFrac)))

@@ -112,7 +112,6 @@ object Ann {
   def bruteForceTopK(corpus: DataFrame, corpusId: Column, corpusVec: Column,
                      queries: DataFrame, queryId: Column, queryVec: Column,
                      k: Int): DataFrame = {
-    val spark = corpus.sparkSession
     val c = corpus.select(corpusId.cast("long").as("nid"),
       corpusVec.cast("array<double>").as("cv"))
     val q = queries.select(queryId.cast("long").as("query_id"),

@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions.{col, lower, coalesce, lit}
+import org.apache.spark.sql.functions.{lower, coalesce, lit}
 
 /** Multi-pattern lexicon scanning — the C4/RefinedWeb "badwords" stage
   * done right at scale: a curation pass scores every document against a

@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions._
 
 /** HTML → text extraction — the stage between a raw crawl capture
   * ([[WarcSources]] `response` records) and the documents table: WET

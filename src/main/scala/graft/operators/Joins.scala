@@ -130,7 +130,7 @@ object Joins {
             (col("__n.ky") - col("__p.ky")) *
               (col("__x") - col("__p.kx")) / (col("__n.kx") - col("__p.kx"))))
     val joined = interp.drop("__x", "__side", "__knot", "__p", "__n")
-    joined.unionByName(lNull.select(joined.columns.map(col): _*))
+    joined.unionByName(lNull.select(joined.columns.toIndexedSeq.map(col): _*))
   }
 
   /** Bucketized interval (range) join: inner-join every left "point" row to

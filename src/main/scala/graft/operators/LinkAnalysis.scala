@@ -186,7 +186,7 @@ object LinkAnalysis {
     // checkpointed leaf)
     var ranks = nodesR.select(col("node"), col("__dangl"),
       fence9(col("rst")).as("rank"))
-    for (it <- 1 to iters) {
+    for (_ <- 1 to iters) {
       val contrib = eo.join(ranks, eo("src") === ranks("node"))
         .select(col("dst"), (col("rank") * col("w") / col("ow")).as("c"))
       val incoming = contrib.groupBy("dst").agg(sum("c").as("inw"))
@@ -464,7 +464,8 @@ object LinkAnalysis {
     *    capped collect brings the edge list to the driver
     *    ([[PlanOps.collectUnderCap]]); the rounds run over primitive
     *    arrays and the surviving `(node, deg)` rows come back as a local
-    *    leaf frame sorted by node — no pin, no per-round job. The driver
+    *    one-partition leaf frame sorted by node — no pin, no per-round
+    *    job, and no range exchange for a caller's sort. The driver
     *    cost is the collect's: Spark's collected rows (~84 bytes per edge)
     *    and the `Row`s built from them (~100) are live together, ~370 MB
     *    at the cap, before the edges shrink to the peel's ~17 bytes of
@@ -509,9 +510,10 @@ object LinkAnalysis {
       case Some((us, vs)) =>
         val core = peelLocal(us, vs, k, maxRounds)
         require(core.isDefined, unconverged)
+        // one partition: a sort by node over it needs no range exchange
         canon.sparkSession.createDataFrame(
           core.get.map { case (node, deg) => Row(node, deg) }.toSeq.asJava,
-          degreesOf(canon).schema)
+          degreesOf(canon).schema).coalesce(1)
       case None =>
         // The fixpoint check runs on the PINNED (node, deg) frame —
         // node-sized, not edge-sized — so the converged (= last) round

@@ -140,7 +140,7 @@ object Unigram {
       .filter(length(col("piece")) > 1 && col("cnt") >= minCount)
       .orderBy(col("cnt").desc, col("piece")).limit(seedCap)
       .collect().map(r => r.getString(0) -> r.getLong(1))
-    var vocab = withLogp(chars ++ multi0)
+    var vocab = withLogp((chars ++ multi0).toIndexedSeq)
     val charSet = chars.map(_._1)
     require(charSet.size < vocabSize,
       s"vocabSize $vocabSize must exceed the ${charSet.size}-char alphabet")
@@ -155,7 +155,7 @@ object Unigram {
       val charRows = charSet.map(c => c -> math.max(counts.getOrElse(c, 0L), 1L))
       val multiRows = counts.toSeq.filter(_._1.length > 1)
         .sortBy { case (p, c) => (-c, p) }.take(vocabSize - charSet.size)
-      vocab = withLogp(charRows ++ multiRows)
+      vocab = withLogp((charRows ++ multiRows).toIndexedSeq)
     }
     vocab.sortBy(_.piece)
   }

@@ -304,7 +304,7 @@ object WarcSources {
       // read [start, len) up to end-of-range + max member overhang: members
       // owned by this split start before `end` but may extend past it. We
       // buffer from `start` to `end`, then extend while a member straddles.
-      var cap = math.min(len, end + (4L << 20)) // 4 MiB initial overhang
+      val cap = math.min(len, end + (4L << 20)) // 4 MiB initial overhang
       var buf = readRange(in, start, cap)
       def extend(needUpTo: Long): Unit = {
         if (needUpTo > start + buf.length && start + buf.length < len) {

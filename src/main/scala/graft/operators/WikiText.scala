@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions._
 
 /** Wikitext → visible text — the cleanup stage between [[WikiXml]]'s
   * raw `<text>` bodies and the documents table: wiki dumps carry

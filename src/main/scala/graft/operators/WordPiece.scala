@@ -249,7 +249,7 @@ object WordPiece {
       .select(explode(wpUnwrap(col("w"))).as("s"))
       .distinct()
       .collect().map(_.getString(0)) // bounded: ≤ 2·|a-z0-9| symbols
-    (alphabet ++ merges.map(_.merged)).distinct.sorted
+    (alphabet ++ merges.map(_.merged)).distinct.sorted.toIndexedSeq
   }
 
   /** Greedy longest-match-first segmentation (BERT's MaxMatch): at each

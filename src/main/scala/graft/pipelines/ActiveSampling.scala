@@ -50,7 +50,6 @@ object ActiveSampling {
   /** df must carry: id (long, unique), feature columns, y (double). */
   def run(spark: SparkSession, df: DataFrame, scorer: Scorer,
           cfg: ActiveSamplingConfig = ActiveSamplingConfig()): (DataFrame, Seq[IterationMetrics]) = {
-    import spark.implicits._
 
     val pool0 = df.localCheckpoint()
 

@@ -3,7 +3,6 @@ package graft.queries
 import graft.Tables
 import graft.operators._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import Fixtures.{crawlWarcDir, linkArtifactFor, md5Int52, servedQ165Edges}
 import GraphQueries.q169TrustCtes

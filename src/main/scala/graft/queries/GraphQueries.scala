@@ -1,7 +1,6 @@
 package graft.queries
 
 import graft.Tables
-import graft.functions.TextOps
 import graft.operators._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._

@@ -1,9 +1,16 @@
 package graft
 
+import graft.ml.{TreeEnsembleModel, TreeEnsembleScorer}
 import graft.operators.{Integrate, Kde, Selection}
+import org.apache.spark.ml.attribute.NominalAttribute
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
+
+import java.lang.Double.doubleToRawLongBits
+import scala.jdk.CollectionConverters._
 
 /** ScalaCheck-generator-driven properties over the selection/density kernel
   * (SURVEY.md §5.3). Cases are drawn deterministically from Gen with fixed
@@ -116,5 +123,60 @@ class PropertiesSpec extends SparkSpec {
         cum += t
       }
     }
+  }
+
+  test("property: the driver-grown tree ensemble is spark.ml's, bit for bit") {
+    // TreeEnsembleScorer grows its members on the driver under its row cap
+    // and with spark.ml's DecisionTreeRegressor at localMaxRows = 0. Two
+    // cases for each n from 1 to spark.ml's no-sampling bound, over coarse
+    // grids (duplicate x, tied gains, exact 0.0 values), constant labels,
+    // n below minInstancesPerNode (the three members take 1, 2 and 3), the
+    // 10-feature form of SdeForecast, and 0 to 5 input partitions: 0 is a
+    // local relation, which Spark slices itself; past 2, one is empty
+    val shape = Gen.zip(Gen.oneOf(1, 2, 10), Gen.oneOf(2, 4, 7, 1000), Gen.oneOf(1, 3, 8),
+      Gen.choose(1L, 1L << 40))
+    val ns = Seq(1, 2, 3, 7, 40, 100, 103, 1000, 10000).flatMap(n => Seq(n, n))
+    def trees(m: TreeEnsembleModel) =
+      m.members.map(_.toDebugString.linesIterator.drop(1).mkString("\n"))
+    for (((n, (nf, levels, depth, seed)), i) <- ns.zip(cases(shape, ns.size)).zipWithIndex) {
+      val (nParts, constant) = (i % 6, i % 5 == 4)
+      val rnd = new scala.util.Random(seed)
+      val feats = (0 until nf).map(f => s"f$f")
+      val schema = StructType(Seq(StructField("id", LongType), StructField("y", DoubleType)) ++
+        feats.map(StructField(_, DoubleType)))
+      // grid points for training, off-grid probes past the training range
+      def points(ids: Range, grid: Boolean) = ids.map { id =>
+        val xs = Seq.fill(nf)(if (grid) math.rint((2 * rnd.nextDouble() - 1) * levels) / levels
+          else 3 * rnd.nextDouble() - 1.5)
+        val y = if (constant) 0.25
+          else xs.zipWithIndex.map { case (x, f) => math.sin(3 * x + f) }.sum + 0.1 * rnd.nextGaussian()
+        Row.fromSeq(id.toLong +: y +: xs)
+      }
+      val data = points(0 until n, grid = true)
+      val cuts = (Seq(0, n) ++ Seq.fill(nParts - 1)(rnd.nextInt(n + 1))).sorted
+      val cut = cuts.zip(cuts.tail).map { case (a, b) => data.slice(a, b) }
+      val parts = if (nParts > 2) cut.patch(1, Seq(Seq.empty[Row]), 0) else cut
+      val train = if (nParts == 0) spark.createDataFrame(data.asJava, schema)
+        else spark.createDataFrame(
+          spark.sparkContext.parallelize(parts, parts.size).flatMap(identity), schema)
+      val probes = train.unionByName(spark.createDataFrame(
+        spark.sparkContext.parallelize(points(n until n + 50, grid = false), 2), schema))
+      val scorer = TreeEnsembleScorer(feats, "y", n = 3, maxDepth = depth)
+      val ctx = s"n=$n features=$nf partitions=${train.rdd.getNumPartitions} levels=$levels " +
+        s"maxDepth=$depth constant=$constant"
+      def scores(m: TreeEnsembleModel) = m.score(probes).orderBy("id").select("pred", "var")
+        .collect().toSeq.map(r => (doubleToRawLongBits(r.getDouble(0)),
+          doubleToRawLongBits(r.getDouble(1))))
+      val (local, ml) = (scorer.fit(train), scorer.fit(train, localMaxRows = 0))
+      assert(trees(local) == trees(ml), ctx)
+      assert(scores(local) == scores(ml), ctx)
+    }
+    // a feature with categorical metadata is split by category: spark.ml
+    // grows it on both paths
+    val nominal = NominalAttribute.defaultAttr.withNumValues(3).toMetadata()
+    val cat = (0 until 40).map(i => (i.toLong, (i % 3).toDouble, math.sin(i.toDouble)))
+      .toDF("id", "c", "y").withColumn("c", col("c").as("c", nominal))
+    val catScorer = TreeEnsembleScorer(Seq("c"), "y", n = 1)
+    assert(trees(catScorer.fit(cat)) == trees(catScorer.fit(cat, localMaxRows = 0)))
   }
 }

@@ -2,7 +2,7 @@ package graft.pipelines
 
 import graft.SparkSpec
 import graft.functions.Pdfs
-import graft.ml.{AnalyticScorer, TreeEnsembleScorer}
+import graft.ml.{AnalyticScorer, Scorer, TreeEnsembleScorer}
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
@@ -11,7 +11,7 @@ class PipelinesSpec extends SparkSpec {
   import spark.implicits._
 
   /** Jobs of one 2-iteration active-sampling run over [[grid]]. */
-  private val JobBudget = 93
+  private val JobBudget = 45
 
   /** 20x20 grid of the reference's synthetic 2-D problem (test-scale
     * mini-BDQA, SURVEY.md §5.4). */
@@ -83,8 +83,29 @@ class PipelinesSpec extends SparkSpec {
     // the loop's classes fit the engine's codegen cache (GraftSession)
     assert(compiled == 0, s"$compiled Janino compilations in the second run")
     // before the fused explorer step and the one-aggregate KDE fit this
-    // run submitted 114 jobs (and compiled 113 classes)
+    // run submitted 114 jobs (and compiled 113 classes); before the scorer
+    // grew its members on the driver, 93
     assert(submitted <= JobBudget, s"$submitted jobs")
+  }
+
+  test("tree-ensemble pipelines give the same outputs with members grown on the driver or by spark.ml") {
+    // RunPipelines' scorers; localMaxRows = 0 forces DecisionTreeRegressor
+    def distributed(s: TreeEnsembleScorer): Scorer = s.fit(_, localMaxRows = 0)
+    val bdqa = TreeEnsembleScorer(Seq("x1", "x2"), "y", n = 2)
+    val cfg = ActiveSamplingConfig(initSize = 40, iterations = 3,
+      kdeGridSize = 128, checkpointEvery = 2)
+    val Seq(bdqaLocal, bdqaForced) = Seq(bdqa, distributed(bdqa)).map { s =>
+      val (train, metrics) = ActiveSampling.run(spark, grid, s, cfg)
+      (train.orderBy("id").collect().toSeq, metrics)
+    }
+    assert(bdqaLocal == bdqaForced)
+    val sde = (lbl: String) => TreeEnsembleScorer((0 until 10).map(i => s"h$i"), lbl, n = 2)
+    val Seq(sdeLocal, sdeForced) = Seq(sde, sde.andThen(distributed)).map { scorerFor =>
+      val (train, iters) = SdeForecast.run(spark, scorerFor, n = 400,
+        initK = 30, iterations = 2, batch = 10)
+      (train.orderBy("win_id").collect().toSeq, iters)
+    }
+    assert(sdeLocal == sdeForced)
   }
 
   test("OU simulation: length, start value, determinism") {
