@@ -1,6 +1,9 @@
 #!/bin/bash
 # Run a graft main class directly against the compiled classes + Spark jars
 # (faster dev loop than sbt runMain). Usage: scripts/run_class.sh graft.Verify args...
+# JVM system properties go before the class and reach the session conf, e.g.
+#   scripts/run_class.sh -Dspark.graft.checkpoint.dir=/tmp/ckpt graft.Verify <sfDir> <outDir>
+# runs every CheckpointPolicy pin against that reliable checkpoint dir.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 ADD_OPENS=""

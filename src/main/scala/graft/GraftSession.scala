@@ -47,9 +47,10 @@ object GraftSession {
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.files.maxPartitionBytes", "256m")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // reliable-checkpoint file reclamation: CheckpointPolicy.Reliable pins
-      // a frame per round; without this, a long clustering run accumulates
-      // every round's checkpoint files until the context dies
+      // reliable-checkpoint file reclamation: with spark.graft.checkpoint.dir
+      // set, CheckpointPolicy.pin writes a frame per round; without this, a
+      // long clustering run accumulates every round's checkpoint files
+      // until the context dies
       .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")

@@ -39,42 +39,42 @@ object CorpusPipeline {
   private def curationStages(docs: DataFrame, id: Column, text: Column,
                              benchmark: Option[DataFrame],
                              maxTopWordFrac: Double,
-                             minhashThreshold: Double,
-                             policy: CheckpointPolicy): CurationStages = {
+                             minhashThreshold: Double): CurationStages = {
     val keyed = docs.withColumn("__cid", id.cast("long"))
 
     // Each stage's frame feeds ≥2 consumers (its own gate computation AND
     // the next stage's join left side); without pins every consumer
     // replays the whole upstream chain from the scan (q66: 7.7 → 4.9 s at
     // sf0.1). At 100 TB these pins are where a production pipeline writes
-    // its stage tables — CheckpointPolicy.Reliable makes them survive
-    // executor loss on a real cluster.
+    // its stage tables — with spark.graft.checkpoint.dir set,
+    // CheckpointPolicy.pin makes them survive executor loss on a real
+    // cluster.
     // 1: single-pass rule flags
     val ruleIds = QualityRules.gopherFlags(keyed, col("__cid"), text)
       .filter(col("pass") === 1L).select(col("doc_id").as("__cid"))
-    val afterRules = policy.pin(keyed.join(ruleIds, Seq("__cid"), "left_semi"))
+    val afterRules = CheckpointPolicy.pin(keyed.join(ruleIds, Seq("__cid"), "left_semi"))
 
     // 2: repetition cap (aggregating stage, runs on the rule-gated subset)
     val repIds = QualityRules.repetitionStats(afterRules, col("__cid"), text)
       .filter(col("top_word_frac") <= maxTopWordFrac)
       .select(col("doc_id").as("__cid"))
-    val afterRep = policy.pin(afterRules.join(repIds, Seq("__cid"), "left_semi"))
+    val afterRep = CheckpointPolicy.pin(afterRules.join(repIds, Seq("__cid"), "left_semi"))
 
     // 3: exact-content keepers
     val exactIds = Dedup.exactByContent(afterRep, col("__cid"), text)
       .select(col("keep_id").as("__cid"))
     // feeds pair gen, cluster ids, AND the next join
-    val afterExact = policy.pin(afterRep.join(exactIds, Seq("__cid"), "left_semi"))
+    val afterExact = CheckpointPolicy.pin(afterRep.join(exactIds, Seq("__cid"), "left_semi"))
 
     // 4: near-dup cluster keepers
     val pairs = Dedup.minhashDedupPairs(afterExact, col("__cid"), text,
-      threshold = minhashThreshold, policy = policy)
+      threshold = minhashThreshold)
     val keeperIds = Dedup.clusters(pairs,
-        afterExact.select(col("__cid").as("doc_id")), policy = policy)
+        afterExact.select(col("__cid").as("doc_id")))
       .filter(col("doc_id") === col("cluster_id"))
       .select(col("doc_id").as("__cid"))
     // feeds the contamination scan AND the anti-join
-    val afterNear = policy.pin(afterExact.join(keeperIds, Seq("__cid"), "left_semi"))
+    val afterNear = CheckpointPolicy.pin(afterExact.join(keeperIds, Seq("__cid"), "left_semi"))
 
     // 5: benchmark contamination ids (anti-joined by curate; flagged by
     // the audit). `text` must resolve in BOTH frames (same column name) —
@@ -102,10 +102,9 @@ object CorpusPipeline {
   def curate(docs: DataFrame, id: Column, text: Column,
              benchmark: Option[DataFrame] = None,
              maxTopWordFrac: Double = 0.5,
-             minhashThreshold: Double = 0.5,
-             policy: CheckpointPolicy = CheckpointPolicy.Local): DataFrame = {
+             minhashThreshold: Double = 0.5): DataFrame = {
     val st = curationStages(docs, id, text, benchmark, maxTopWordFrac,
-      minhashThreshold, policy)
+      minhashThreshold)
     val curated = benchmark match {
       case None => st.afterNear
       case Some(_) =>
@@ -130,10 +129,9 @@ object CorpusPipeline {
   def curateAudit(docs: DataFrame, id: Column, text: Column,
                   benchmark: Option[DataFrame] = None,
                   maxTopWordFrac: Double = 0.5,
-                  minhashThreshold: Double = 0.5,
-                  policy: CheckpointPolicy = CheckpointPolicy.Local): DataFrame = {
+                  minhashThreshold: Double = 0.5): DataFrame = {
     val st = curationStages(docs, id, text, benchmark, maxTopWordFrac,
-      minhashThreshold, policy)
+      minhashThreshold)
     def mark(ids: DataFrame, as: String): DataFrame =
       ids.select(col("__cid").as("doc_id"), lit(1L).as(as))
     val gate = (reached: Column, hit: Column) =>
@@ -175,9 +173,8 @@ object CorpusPipeline {
                    sourceWeights: Map[String, Double], defaultWeight: Double,
                    source: Column, tokenBudget: Long,
                    benchmark: Option[DataFrame] = None,
-                   salt: String = "mix",
-                   policy: CheckpointPolicy = CheckpointPolicy.Local): DataFrame =
-    toDataloaderFrom(curate(docs, id, text, benchmark, policy = policy),
+                   salt: String = "mix"): DataFrame =
+    toDataloaderFrom(curate(docs, id, text, benchmark),
       id, text, sourceWeights, defaultWeight, source, tokenBudget, salt)
 
   /** The mixture + packing half of [[toDataloader]] over an

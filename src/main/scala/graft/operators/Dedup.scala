@@ -47,8 +47,7 @@ object Dedup {
     */
   def minhashDedupPairs(df: DataFrame, id: Column, text: Column,
                         shingleSize: Int = 3, numHashes: Int = 64,
-                        bands: Int = 16, threshold: Double = 0.7,
-                        policy: CheckpointPolicy = CheckpointPolicy.Local): DataFrame = {
+                        bands: Int = 16, threshold: Double = 0.7): DataFrame = {
     val rowsPerBand = numHashes / bands
     // Shingle sets + signatures are consumed by three plan branches (bucket
     // explode, A-side verify, B-side verify); materialize them ONCE.
@@ -79,12 +78,12 @@ object Dedup {
     // across groups), matching the embedding path's fix below: a structural
     // hash of the set would carry a ~groups²/2⁶⁵ birthday hazard at
     // billions of distinct documents.
-    val groups = policy.pin(
+    val groups = CheckpointPolicy.pin(
       docs.groupBy("sh").agg(collect_list("doc_id").as("ids"))
         .withColumn("gid", array_min(col("ids"))))
     // signatures materialized too: the banding lambda would otherwise
     // inline (and re-evaluate) the 64-hash signature once per band
-    val sigs = policy.pin(groups.select(col("gid"),
+    val sigs = CheckpointPolicy.pin(groups.select(col("gid"),
       minhashSignature(col("sh"), numHashes).as("sig")))
     // candidate pair gids only — shingle arrays stay OUT of the bucket join
     // and the pair-dedup shuffle; they re-attach once per distinct pair
@@ -247,10 +246,9 @@ object Dedup {
     * here; the MinHash/hyperplane LSH paths are the sub-quadratic
     * approximate alternatives. */
   def simhashDedupPairs(df: DataFrame, id: Column, text: Column,
-                        maxHamming: Int = 3, portable: Boolean = false,
-                        policy: CheckpointPolicy = CheckpointPolicy.Local): DataFrame =
+                        maxHamming: Int = 3, portable: Boolean = false): DataFrame =
     hammingNearDupPairs(simhashFingerprints(df, id, text, portable),
-      maxHamming, policy)
+      maxHamming)
 
   /** Near-dup pairs at Hamming radius `maxHamming` over ANY precomputed
     * 64-bit fingerprint frame (doc_id, sh) — the blocking engine behind
@@ -258,8 +256,7 @@ object Dedup {
     * ([[Multimodal]] aHash) or any other bit-sketch. Multi-index-hashing
     * candidate generation (Norouzi et al.), exact Hamming verify, doc
     * pairs expanded from distinct-fingerprint groups. */
-  def hammingNearDupPairs(fps: DataFrame, maxHamming: Int,
-                          policy: CheckpointPolicy = CheckpointPolicy.Local): DataFrame = {
+  def hammingNearDupPairs(fps: DataFrame, maxHamming: Int): DataFrame = {
     val (bounds, q) = simhashBlockingPlan(maxHamming)
     // Collapse identical fingerprints BEFORE candidate generation: on
     // duplicate-heavy corpora (the realistic dedup workload) thousands of
@@ -269,7 +266,7 @@ object Dedup {
     // fingerprints the bucket join is quadratic only in DISTINCT-value
     // counts; doc pairs re-expand from the per-fingerprint id lists at the
     // end — output-sized work, which is the lower bound anyway.
-    val groups = policy.pin( // feeds the chunk explode AND both expansion joins
+    val groups = CheckpointPolicy.pin( // feeds the chunk explode AND both expansion joins
       fps.groupBy("sh").agg(collect_list("doc_id").as("ids")))
     // asymmetric MIH join: exact chunk values on one side, ≤q-bit probe
     // expansion on the other. Chunk distance ≤ q ⇔ the exact value lies in
@@ -312,8 +309,7 @@ object Dedup {
     * generation and verification run over DISTINCT n-gram sets (duplicate
     * clusters collapse); doc pairs expand from the per-set id lists. */
   def ngramJaccardPairs(df: DataFrame, id: Column, text: Column,
-                        n: Int = 3, threshold: Double = 0.5,
-                        policy: CheckpointPolicy = CheckpointPolicy.Local): DataFrame = {
+                        n: Int = 3, threshold: Double = 0.5): DataFrame = {
     val docs = df.select(id.cast("long").as("doc_id"),
       TextOps.charNGramsHashed(text, n).as("g"),
       // block: docs within ±25% length and same first normalized char can match
@@ -326,7 +322,7 @@ object Dedup {
     // silently drop equal-set cross-block pairs as "same group". min doc id
     // per group is exactly that — collision-free (each doc is in one group),
     // unlike a structural hash of the group key.
-    val groups = policy.pin( // feeds both join sides + both expansion joins
+    val groups = CheckpointPolicy.pin( // feeds both join sides + both expansion joins
       docs.groupBy("g", "lb", "fc")
         .agg(collect_list("doc_id").as("ids"))
         .withColumn("gid", array_min(col("ids"))))
@@ -429,23 +425,21 @@ object Dedup {
     * in `ids`, cluster_id = min doc id of the component (singletons map to
     * themselves) — the canonical keeper, so the deduplicated corpus is
     * `filter(doc_id === cluster_id)`. */
-  def clusters(pairs: DataFrame, ids: DataFrame, maxIters: Int = 64,
-               policy: CheckpointPolicy = CheckpointPolicy.Local): DataFrame =
-    clustersWithRounds(pairs, ids, maxIters, policy)._1
+  def clusters(pairs: DataFrame, ids: DataFrame, maxIters: Int = 64): DataFrame =
+    clustersWithRounds(pairs, ids, maxIters)._1
 
   /** [[clusters]] plus the number of rounds it ran — the rounds count lets
     * tests assert the per-round job budget (TWO jobs per round: the
     * propagate checkpoint and the jump checkpoint; the convergence test is
     * an accumulator filled INSIDE the jump job, not a third action). */
   def clustersWithRounds(pairs: DataFrame, ids: DataFrame,
-                         maxIters: Int = 64,
-                         policy: CheckpointPolicy = CheckpointPolicy.Local): (DataFrame, Int) = {
+                         maxIters: Int = 64): (DataFrame, Int) = {
     val spark = pairs.sparkSession
     import spark.implicits._
-    val edges = policy.pin(
+    val edges = CheckpointPolicy.pin(
       pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
         .unionByName(pairs.select(col("id_b").as("src"), col("id_a").as("dst"))))
-    var labels = policy.pin(ids.select(col("doc_id").cast("long").as("doc_id"))
+    var labels = CheckpointPolicy.pin(ids.select(col("doc_id").cast("long").as("doc_id"))
       .withColumn("cluster_id", col("doc_id")))
     var converged = false
     var it = 0
@@ -456,7 +450,7 @@ object Dedup {
         .agg(min("cluster_id").as("__nbr"))
       // feeds BOTH sides of the pointer-jump self-join below — without a
       // checkpoint the edges-join + min aggregate would run twice a round
-      val propagated = policy.pin(labels.join(nbrMin, Seq("doc_id"), "left")
+      val propagated = CheckpointPolicy.pin(labels.join(nbrMin, Seq("doc_id"), "left")
         .select(col("doc_id"), col("cluster_id").as("__old"),
           least(col("cluster_id"), coalesce(col("__nbr"), col("cluster_id")))
             .as("cluster_id")))
@@ -473,7 +467,7 @@ object Dedup {
       // a truly-unchanged round adds 0 from any retry — so `value == 0` is
       // retry-stable, which is all the loop test needs.
       val changed = spark.sparkContext.longAccumulator(s"clusters_changed_$it")
-      val updated = policy.pin(jumped.as[(Long, Long, Long)].mapPartitions { rows =>
+      val updated = CheckpointPolicy.pin(jumped.as[(Long, Long, Long)].mapPartitions { rows =>
         rows.map { case (docId, old, cid) =>
           if (cid != old) changed.add(1L)
           (docId, cid)
@@ -514,11 +508,9 @@ object Dedup {
     * per-group id lists at the end (output-sized). */
   def embeddingNearDupPairs(df: DataFrame, id: Column, vec: Column,
                             threshold: Double = 0.95, tables: Int = 16,
-                            planesPerTable: Int = 16, seed: Long = 42,
-                            policy: CheckpointPolicy = CheckpointPolicy.Local): DataFrame = {
+                            planesPerTable: Int = 16, seed: Long = 42): DataFrame = {
     val (groups, cand) =
-      embeddingGroupsAndCandidates(df, id, vec, tables, planesPerTable, seed,
-        policy)
+      embeddingGroupsAndCandidates(df, id, vec, tables, planesPerTable, seed)
     val verified = cand
       .join(groups.select(col("gid").as("g_a"), col("v").as("v_a")), Seq("g_a"))
       .join(groups.select(col("gid").as("g_b"), col("v").as("v_b")), Seq("g_b"))
@@ -597,8 +589,7 @@ object Dedup {
 
   def embeddingGroupsAndCandidates(df: DataFrame, id: Column, vec: Column,
                                    tables: Int = 16, planesPerTable: Int = 16,
-                                   seed: Long = 42,
-                                   policy: CheckpointPolicy = CheckpointPolicy.Local): (DataFrame, DataFrame) = {
+                                   seed: Long = 42): (DataFrame, DataFrame) = {
     // max-aggregate, not head(): an empty corpus (or all-null vectors) must
     // yield empty frames, not a NoSuchElementException at plan build
     val dimRow = df.agg(max(size(vec))).head()
@@ -612,7 +603,7 @@ object Dedup {
     // distinct vectors a 64-bit vector-hash gid would hit birthday
     // collisions (~n²/2⁶⁵) and silently conflate two groups' pair
     // expansions; min-id costs nothing extra here.
-    val groups = policy.pin(
+    val groups = CheckpointPolicy.pin(
       docs.groupBy("v").agg(collect_list("vid").as("ids"))
         .withColumn("gid", array_min(col("ids"))))
     val buckets = groups.select(col("gid"),
@@ -646,8 +637,7 @@ object Dedup {
     * `portable = true` every gate is SQL-replayable (q65). */
   def incrementalAdmit(batch: DataFrame, history: DataFrame, id: Column,
                        text: Column, maxHamming: Int = 7,
-                       portable: Boolean = false,
-                       policy: CheckpointPolicy = CheckpointPolicy.Local): DataFrame = {
+                       portable: Boolean = false): DataFrame = {
     val bFp = batch.select(id.cast("long").as("doc_id"),
       TextOps.fingerprintMd5(text).as("fp"))
     val hFp = history.select(TextOps.fingerprintMd5(text).as("fp")).distinct()
@@ -673,9 +663,9 @@ object Dedup {
           explode(array(exactChunkStructs(col("sh"), bounds): _*)).as("c"))
         .select(col("sh"), col("c.chunk").as("chunk"), col("c.ck").as("ck"))
     val bSh = simhashFingerprints(batch, id, text, portable)
-    val bGroups = policy.pin( // feeds the chunk explode AND the id re-expansion
+    val bGroups = CheckpointPolicy.pin( // feeds the chunk explode AND the id re-expansion
       bSh.groupBy("sh").agg(collect_list("doc_id").as("ids")))
-    val hSh = policy.pin(simhashFingerprints(history, id, text, portable)
+    val hSh = CheckpointPolicy.pin(simhashFingerprints(history, id, text, portable)
       .select("sh").distinct())
     val nearFps = probesOf(bGroups.select("sh"))
       .join(exactOf(hSh).select(col("chunk"), col("ck"), col("sh").as("sh_h")),
@@ -721,16 +711,15 @@ object Dedup {
   def embeddingIncrementalAdmit(batch: DataFrame, history: DataFrame,
                                 id: Column, vec: Column,
                                 threshold: Double = 0.95, tables: Int = 16,
-                                planesPerTable: Int = 16, seed: Long = 42,
-                                policy: CheckpointPolicy = CheckpointPolicy.Local): DataFrame = {
+                                planesPerTable: Int = 16, seed: Long = 42): DataFrame = {
     val b = batch.select(id.cast("long").as("doc_id"),
       vec.cast("array<double>").as("v"))
     // distinct-vector collapse on BOTH sides (the q29 duplicate-cluster
     // lesson); gid/hgid = min id per group — collision-free group identity
-    val bGroups = policy.pin( // feeds exact gates, sketches, AND id re-expansion
+    val bGroups = CheckpointPolicy.pin( // feeds exact gates, sketches, AND id re-expansion
       b.groupBy("v").agg(collect_list("doc_id").as("ids"))
         .withColumn("gid", array_min(col("ids"))))
-    val hGroups = policy.pin( // feeds the exact semi-join, sketches, and verify
+    val hGroups = CheckpointPolicy.pin( // feeds the exact semi-join, sketches, and verify
       history
         .select(id.cast("long").as("hid"), vec.cast("array<double>").as("v"))
         .groupBy("v").agg(min("hid").as("hgid")))

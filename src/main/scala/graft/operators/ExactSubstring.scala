@@ -127,7 +127,7 @@ object ExactSubstring {
     * O(n log n) longs per doc (levels beyond the doc are empty arrays,
     * and every band access is fit-guarded). */
   private def ladderFrame(df: DataFrame, id: Column, toks: Column,
-                          minLevel: Int, policy: CheckpointPolicy): DataFrame = {
+                          minLevel: Int): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
     // fanOut: the ladder build is per-doc local arithmetic behind the
@@ -143,7 +143,7 @@ object ExactSubstring {
         val lvl = math.max(minLevel, log2floor(math.max(tt.length, 1)))
         (d, tt.length, tt, ladder(tt, lvl).toSeq.map(_.toSeq))
       }
-    policy.pin(ds.toDF("doc_id", "n", "toks", "lvls"))
+    CheckpointPolicy.pin(ds.toDF("doc_id", "n", "toks", "lvls"))
   }
 
   /** All duplicated-substring starts with their TRUE maximal lengths:
@@ -155,10 +155,9 @@ object ExactSubstring {
     * one position earlier: `maxdup(p-1) < maxdup(p)+1` — exact, no cap
     * convention). */
   def dupSpans(df: DataFrame, id: Column, toks: Column,
-               minLen: Int = 16, maxLen: Int = 40,
-               policy: CheckpointPolicy = CheckpointPolicy.Local): DataFrame = {
-    val lf = ladderFrame(df, id, toks, log2floor(maxLen), policy)
-    dupStarts(lf, minLen, maxLen, policy)
+               minLen: Int = 16, maxLen: Int = 40): DataFrame = {
+    val lf = ladderFrame(df, id, toks, log2floor(maxLen))
+    dupStarts(lf, minLen, maxLen)
       .withColumn("left_max", leftMaxCol.cast("long"))
       .select(col("doc_id"), col("p").cast("long").as("start"), col("len"),
         col("left_max"))
@@ -216,8 +215,7 @@ object ExactSubstring {
   /** (doc_id, p, len): every position whose maximal duplicated length is
     * ≥ minLen, with len the TRUE corpus-wide maximum (prefilter + base
     * band + anchor-doubling extension — class doc steps 2-4). */
-  private def dupStarts(lf: DataFrame, minLen: Int, maxLen: Int,
-                        policy: CheckpointPolicy): DataFrame = {
+  private def dupStarts(lf: DataFrame, minLen: Int, maxLen: Int): DataFrame = {
     require(minLen >= 2, "minLen >= 2")
     require(maxLen >= minLen, "maxLen >= minLen")
     val j = log2floor(minLen)
@@ -229,7 +227,7 @@ object ExactSubstring {
     val dupH = pre.groupBy("h").agg(count(lit(1)).as("c"))
       .filter(col("c") >= 2).select("h")
     val surv = pre.join(dupH, Seq("h")).select("doc_id", "p")
-    val base = policy.pin(bandMax(lf, surv, minLen, maxLen))
+    val base = CheckpointPolicy.pin(bandMax(lf, surv, minLen, maxLen))
     // anchor-doubling: re-probe the at-cap tail over [cap+1, 2·cap]
     // until no position sits at its round's cap. Each round's probe set
     // is exactly the positions that were at-cap in EVERY earlier round
@@ -245,7 +243,7 @@ object ExactSubstring {
     while (capped.limit(1).count() > 0) {
       val hi = cap * 2
       val ext = bandMax(lf, capped.select("doc_id", "p"), cap + 1, hi)
-      val merged = policy.pin(
+      val merged = CheckpointPolicy.pin(
         capped.select("doc_id", "p", "len")
           .join(ext.withColumnRenamed("len", "__ext"), Seq("doc_id", "p"), "left")
           .select(col("doc_id"), col("p"),
@@ -263,10 +261,9 @@ object ExactSubstring {
     * kept_md5 [md5 of the space-joined surviving tokens — the document
     * after substring dedup removes every covered occurrence]). */
   def dedupStats(df: DataFrame, id: Column, toks: Column,
-                 minLen: Int = 16, maxLen: Int = 40,
-                 policy: CheckpointPolicy = CheckpointPolicy.Local): DataFrame = {
-    val lf = ladderFrame(df, id, toks, log2floor(maxLen), policy)
-    val starts = policy.pin(dupStarts(lf, minLen, maxLen, policy))
+                 minLen: Int = 16, maxLen: Int = 40): DataFrame = {
+    val lf = ladderFrame(df, id, toks, log2floor(maxLen))
+    val starts = CheckpointPolicy.pin(dupStarts(lf, minLen, maxLen))
     val perDocSpans = starts
       .withColumn("left_max", leftMaxCol)
       .groupBy("doc_id")

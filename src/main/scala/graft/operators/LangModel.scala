@@ -160,7 +160,6 @@ object LangModel {
     * (doc_id, n_trigrams, ce) with `ce` rounded to 6. */
   def knTrigramCrossEntropy(df: DataFrame, id: Column, toks: Column,
                             isRef: Column): DataFrame = {
-    val pin = CheckpointPolicy.fromSession(df.sparkSession)
     val base = df.select(id.cast("long").as("doc_id"), toks.as("__toks"),
       isRef.cast("boolean").as("__ref"))
     val ref = base.filter(col("__ref"))
@@ -177,15 +176,15 @@ object LangModel {
     // --- train ---------------------------------------------------------
     // trigram counts feed the context table, the continuation table, the
     // discount census, and the scoring join — pin once
-    val tri = pin.pin(ngrams(ref, 3, Seq("a", "b", "c"))
+    val tri = CheckpointPolicy.pin(ngrams(ref, 3, Seq("a", "b", "c"))
       .groupBy("a", "b", "c").agg(count(lit(1)).as("c3")))
     val ctx2 = tri.groupBy("a", "b")
       .agg(sum("c3").as("den3"), count(lit(1)).as("uniq3"))
     // middle order: continuation counts N3(·,b,c) = distinct preceding a
-    val mid = pin.pin(tri.groupBy("b", "c").agg(count(lit(1)).as("n3bc")))
+    val mid = CheckpointPolicy.pin(tri.groupBy("b", "c").agg(count(lit(1)).as("n3bc")))
     val ctx1 = mid.groupBy("b")
       .agg(sum("n3bc").as("den2"), count(lit(1)).as("uniq2"))
-    val bi = pin.pin(ngrams(ref, 2, Seq("b", "c"))
+    val bi = CheckpointPolicy.pin(ngrams(ref, 2, Seq("b", "c"))
       .groupBy("b", "c").agg(count(lit(1)).as("cb")))
     val unic = bi.groupBy("c").agg(count(lit(1)).as("n2c"))
     val totals = bi.agg(count(lit(1)).cast("double").as("bb"))

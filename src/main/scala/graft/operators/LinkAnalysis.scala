@@ -22,7 +22,7 @@ import scala.jdk.CollectionConverters._
   * only (node, rank) pairs — 16 bytes of payload per node — against it.
   * On a real cluster, pre-partition edges by `src` and the per-iteration
   * rank frame co-partitions into a one-sided shuffle. Iterations pin via
-  * the policy (lineage would otherwise double per round).
+  * [[CheckpointPolicy.pin]] (lineage would otherwise double per round).
   *
   * Cross-engine determinism (the q108 GMM convention): every rank is
   * fenced to 9 dp with the pure-arithmetic `floor(x·1e9 + 0.5)/1e9`
@@ -63,7 +63,6 @@ object LinkAnalysis {
     * produced it. */
   def pageRank(edges: DataFrame, iters: Int, damping: Double = 0.85,
                pinEvery: Int = 1,
-               policy: CheckpointPolicy = CheckpointPolicy.Local,
                init: Option[DataFrame] = None): DataFrame = {
     require(iters >= 1, s"iters >= 1: $iters")
     val e = edges.select(col("src"), col("dst"), col("w").cast("double").as("w"))
@@ -72,12 +71,12 @@ object LinkAnalysis {
     // Edge list with the source's total out-weight attached, pinned once —
     // this is the static join input every iteration reuses.
     val outW = e.groupBy("src").agg(sum("w").as("ow"))
-    val eo = policy.pin(e.join(outW, "src"))
+    val eo = CheckpointPolicy.pin(e.join(outW, "src"))
     // Node frame with the static DANGLING flag attached (no out-edges) —
     // ONE pin + ONE count job replace the former four setup jobs (separate
     // node pin/count + dangling-set pin/probe): guide §1.2, the driver
     // round-trips per ranker are the measured floor on small graphs.
-    val nodesPinned = policy.pin(
+    val nodesPinned = CheckpointPolicy.pin(
       nodes.join(eo.select(col("src").as("node")).distinct()
           .withColumn("__out", lit(1)), Seq("node"), "left")
         .select(col("node"), col("__out").isNull.as("__dangl")))
@@ -93,7 +92,7 @@ object LinkAnalysis {
       case None =>
         nodesPinned.withColumn("rank", fence9(lit(1.0) / lit(n)))
       case Some(prev) =>
-        policy.pin(nodesPinned.join(
+        CheckpointPolicy.pin(nodesPinned.join(
             prev.select(col("node").as("__in"),
               col("rank").cast("double").as("__ir")),
             nodesPinned("node") === col("__in"), "left")
@@ -122,7 +121,7 @@ object LinkAnalysis {
         nodesPinned.join(incoming, nodesPinned("node") === incoming("dst"), "left")
           .select(col("node"), col("__dangl"),
             fence9(base + lit(damping) * inMass).as("rank"))
-      ranks = if (hasDangling || it % pinEvery == 0) policy.pin(next) else next
+      ranks = if (hasDangling || it % pinEvery == 0) CheckpointPolicy.pin(next) else next
     }
     ranks.select("node", "rank")
   }
@@ -153,8 +152,7 @@ object LinkAnalysis {
     * Same 9-dp fence, same left-assoc arithmetic, oracle-replayable
     * iteration for iteration. */
   def personalizedPageRank(edges: DataFrame, sources: DataFrame, iters: Int,
-                           damping: Double = 0.85,
-                           policy: CheckpointPolicy = CheckpointPolicy.Local): DataFrame = {
+                           damping: Double = 0.85): DataFrame = {
     require(iters >= 1, s"iters >= 1: $iters")
     val e = edges.select(col("src"), col("dst"), col("w").cast("double").as("w"))
     val src0 = sources.toDF("node").select(col("node")).distinct()
@@ -164,7 +162,7 @@ object LinkAnalysis {
     // holds restart mass; dropping it would leak (1-d)/|S| every round)
     val nodes = graphNodes.unionByName(src0).distinct()
     val outW = e.groupBy("src").agg(sum("w").as("ow"))
-    val eo = policy.pin(e.join(outW, "src"))
+    val eo = CheckpointPolicy.pin(e.join(outW, "src"))
     val nS = src0.count().toDouble
     require(nS >= 1.0, "personalizedPageRank needs a non-empty source set")
     // static per-node restart mass (1/|S| on sources, 0 elsewhere) AND the
@@ -172,7 +170,7 @@ object LinkAnalysis {
     // reused every iteration. One pin + one agg job replace the former
     // ranks-init pin, dangling-set pin, and dangling probe (guide §1.2:
     // driver round-trips per ranker are the measured floor).
-    val nodesR = policy.pin(
+    val nodesR = CheckpointPolicy.pin(
       nodes.join(src0.withColumn("__s", lit(1)), Seq("node"), "left")
         .join(eo.select(col("src").as("node")).distinct()
           .withColumn("__out", lit(1)), Seq("node"), "left")
@@ -214,7 +212,7 @@ object LinkAnalysis {
           .select(col("node"), col("__dangl"),
             fence9(lit(1.0 - damping) * col("rst") + lit(damping) * inMass)
               .as("rank"))
-      ranks = policy.pin(next)
+      ranks = CheckpointPolicy.pin(next)
     }
     ranks.select("node", "rank")
   }
@@ -241,12 +239,11 @@ object LinkAnalysis {
     * personalizedPageRank-measured convention — cheaper than a
     * broadcast-crossJoin subtree). Same 9-dp fence, same left-assoc
     * score·w products, oracle-replayable iteration for iteration. */
-  def hits(edges: DataFrame, iters: Int,
-           policy: CheckpointPolicy = CheckpointPolicy.Local): DataFrame = {
+  def hits(edges: DataFrame, iters: Int): DataFrame = {
     require(iters >= 1, s"iters >= 1: $iters")
     val e = edges.select(col("src"), col("dst"), col("w").cast("double").as("w"))
-    val eP = policy.pin(e)
-    val nodes = policy.pin(
+    val eP = CheckpointPolicy.pin(e)
+    val nodes = CheckpointPolicy.pin(
       eP.select(col("src").as("node"))
         .unionByName(eP.select(col("dst").as("node"))).distinct())
     val n = nodes.count().toDouble
@@ -259,7 +256,7 @@ object LinkAnalysis {
     // than dividing by zero.
     def halfStep(scores: DataFrame, scoreCol: String, from: String,
                  onto: String, outCol: String): DataFrame = {
-      val raw = policy.pin(
+      val raw = CheckpointPolicy.pin(
         eP.join(scores, eP(from) === scores("node"))
           .select(col(onto).as("__k"),
             (col(scoreCol) * col("w")).as("c"))
@@ -271,12 +268,12 @@ object LinkAnalysis {
       nodes.join(raw, nodes("node") === raw("__k"), "left")
         .select(col("node"), normed.as(outCol))
     }
-    var hub = policy.pin(nodes.select(col("node"),
+    var hub = CheckpointPolicy.pin(nodes.select(col("node"),
       fence9(lit(1.0) / lit(n)).as("hub")))
     var auth: DataFrame = null
     for (_ <- 1 to iters) {
-      auth = policy.pin(halfStep(hub, "hub", "src", "dst", "auth"))
-      hub = policy.pin(halfStep(auth, "auth", "dst", "src", "hub"))
+      auth = CheckpointPolicy.pin(halfStep(hub, "hub", "src", "dst", "auth"))
+      hub = CheckpointPolicy.pin(halfStep(auth, "auth", "dst", "src", "hub"))
     }
     hub.join(auth.select(col("node").as("__n"), col("auth")),
         hub("node") === col("__n"))
@@ -316,8 +313,7 @@ object LinkAnalysis {
     * on node keys (canonical-edge distinct, degree count, orientation
     * joins, adjacency aggregate, two attach joins, credit count) — no
     * windows, no driver state, no cartesian. */
-  def triangles(edges: DataFrame,
-                policy: CheckpointPolicy = CheckpointPolicy.Local): DataFrame = {
+  def triangles(edges: DataFrame): DataFrame = {
     val canon = edges.select(
         least(col("a"), col("b")).cast("long").as("u"),
         greatest(col("a"), col("b")).cast("long").as("v"))
@@ -335,7 +331,7 @@ object LinkAnalysis {
     // at bench width — 32.7 s warm vs 7.0 s pinned at local[32] (8-core
     // runs barely move: 5.9 vs 6.6 s). Measured both rounds; the pin wins
     // where it matters (guide §5 recompute avoidance).
-    val e = policy.pin(canon
+    val e = CheckpointPolicy.pin(canon
       .join(deg.select(col("node").as("u"), col("deg").as("du")), Seq("u"))
       .join(deg.select(col("node").as("v"), col("deg").as("dv")), Seq("v"))
       .select(
@@ -415,8 +411,7 @@ object LinkAnalysis {
     * Output: ONE row `(total_edges, kept_edges, tri_sampled, tri_est)`
     * (6-dp arithmetic fence on the estimate). */
   def trianglesDoulion(edges: DataFrame, p: Double,
-                       salt: String = "doulion",
-                       policy: CheckpointPolicy = CheckpointPolicy.Local): DataFrame = {
+                       salt: String = "doulion"): DataFrame = {
     require(p > 0.0 && p <= 1.0, "keep probability in (0, 1]")
     val canon = edges.select(
         least(col("a"), col("b")).cast("long").as("u"),
@@ -431,10 +426,10 @@ object LinkAnalysis {
     // the md5 sampling sweep replay per branch (measured 7.0 -> 4.6 s
     // warm at sf0.1 on the q142 co-purchase graph, identical output —
     // the shared-join-input convention).
-    val flagged = policy.pin(canon.withColumn("keep", u01 < lit(p)))
+    val flagged = CheckpointPolicy.pin(canon.withColumn("keep", u01 < lit(p)))
     val kept = flagged.filter(col("keep"))
       .select(col("u").as("a"), col("v").as("b"))
-    val triSampled = triangles(kept, policy)
+    val triSampled = triangles(kept)
       .agg((coalesce(sum("tri"), lit(0L)) / 3).cast("long").as("tri_sampled"))
     val edgeStats = flagged.agg(count(lit(1)).as("total_edges"),
       sum(when(col("keep"), 1L).otherwise(0L)).as("kept_edges"))
@@ -477,9 +472,9 @@ object LinkAnalysis {
     *  - Past the cap (or at `localMaxEdges = 0`) each round is one degree
     *    aggregate + one semi-join of the edge list against the surviving
     *    node set (both hash shuffles on node keys, edge payload 16 bytes);
-    *    the edge frame is pinned per round with `policy` (the
-    *    iterative-join convention — lineage would otherwise nest).
-    *    `policy` applies only on this path.
+    *    the edge frame is pinned per round with [[CheckpointPolicy.pin]]
+    *    (the iterative-join convention — lineage would otherwise nest),
+    *    so `spark.graft.checkpoint.dir` reaches kCore only on this path.
     * Both paths peel in the same SYNCHRONOUS rounds — every node with
     * degree < k drops at once — so they return the same rows under the
     * same schema (LinkAnalysisSpec gates parity). Rounds are
@@ -489,7 +484,6 @@ object LinkAnalysis {
     * MaxWordLen convention, because the oracle unrolls exactly
     * `maxRounds` rounds). */
   def kCore(edges: DataFrame, k: Int, maxRounds: Int = 24,
-            policy: CheckpointPolicy = CheckpointPolicy.Local,
             localMaxEdges: Long = 2000000L): DataFrame = {
     require(k >= 1, s"k >= 1: $k")
     val canon = edges.select(
@@ -521,17 +515,17 @@ object LinkAnalysis {
         // edge pin + edge count the edge-count check paid. The surviving
         // degree frame is also exactly the declared output, so the final
         // output aggregate is the last round's pin, not a recompute.
-        var e = policy.pin(canon)
-        var deg = policy.pin(degreesOf(e))
+        var e = CheckpointPolicy.pin(canon)
+        var deg = CheckpointPolicy.pin(degreesOf(e))
         var rounds = 0
         while (!deg.filter(col("deg") < k).isEmpty) {
           require(rounds < maxRounds, unconverged)
           val keep = deg.filter(col("deg") >= k).select("node")
-          e = policy.pin(
+          e = CheckpointPolicy.pin(
             e.join(keep.select(col("node").as("u")), Seq("u"), "left_semi")
               .join(keep.select(col("node").as("v")), Seq("v"), "left_semi")
               .select("u", "v"))
-          deg = policy.pin(degreesOf(e))
+          deg = CheckpointPolicy.pin(degreesOf(e))
           rounds += 1
         }
         deg

@@ -232,8 +232,7 @@ object Profiling {
   def drift(a: DataFrame, b: DataFrame,
             numeric: Seq[String] = Nil, categorical: Seq[String] = Nil,
             tokens: Option[String] = None,
-            bins: Int = 10, eps: Double = 1e-4,
-            policy: CheckpointPolicy = CheckpointPolicy.Local): DataFrame = {
+            bins: Int = 10, eps: Double = 1e-4): DataFrame = {
     require(bins >= 2, "need at least two histogram bins")
     require(numeric.nonEmpty || categorical.nonEmpty || tokens.nonEmpty,
       "nothing to compare")
@@ -257,7 +256,7 @@ object Profiling {
     // every branch re-derives it from its own CORPUS scan — 24 scans for
     // the q104 shape instead of the 8 passes the operator actually needs.
     def outRows(perBucket: DataFrame): DataFrame = {
-      val rows = policy.pin(perBucket.select(col("column"), col("bucket"),
+      val rows = CheckpointPolicy.pin(perBucket.select(col("column"), col("bucket"),
         round(col("pa"), 6).as("p_a"), round(col("pb"), 6).as("p_b"),
         psiTerm(col("pa"), col("pb")).as("contrib")))
       rows.unionByName(rows.groupBy("column")
@@ -272,11 +271,11 @@ object Profiling {
             col(c).cast("double").as("v"))): _*)).as("kv"))
         .select(col("__side"), col("kv.column").as("column"), col("kv.v").as("v"))
         .filter(col("v").isNotNull)
-      val stats = policy.pin(melt.groupBy("column").agg(
+      val stats = CheckpointPolicy.pin(melt.groupBy("column").agg(
         min("v").as("mn"), max("v").as("mx"),
         sideCnt("a").as("na"), sideCnt("b").as("nb")))
       val width = (col("mx") - col("mn")) / lit(bins.toDouble)
-      val hist = policy.pin(melt.join(broadcast(stats), Seq("column"))
+      val hist = CheckpointPolicy.pin(melt.join(broadcast(stats), Seq("column"))
         .select(col("column"),
           when(col("mx") > col("mn"),
             least(floor((col("v") - col("mn")) / width), lit(bins - 1.0)))
@@ -300,7 +299,7 @@ object Profiling {
             col(c).cast("string").as("v"))): _*)).as("kv"))
         .select(col("__side"), col("kv.column").as("column"), col("kv.v").as("v"))
         .filter(col("v").isNotNull)
-      val counts = policy.pin(melt.groupBy("column", "v")
+      val counts = CheckpointPolicy.pin(melt.groupBy("column", "v")
         .agg(sideCnt("a").as("ca"), sideCnt("b").as("cb")))
       val totals = counts.groupBy("column")
         .agg(sum("ca").as("na"), sum("cb").as("nb"))
@@ -315,7 +314,7 @@ object Profiling {
         .agg(count(lit(1)).as("ca"))
       val tb = b.select(explode(col(tcol)).as("t")).groupBy("t")
         .agg(count(lit(1)).as("cb"))
-      val joined = policy.pin(ta.join(tb, Seq("t"), "full_outer")
+      val joined = CheckpointPolicy.pin(ta.join(tb, Seq("t"), "full_outer")
         .select(coalesce(col("ca"), lit(0L)).as("ca"),
           coalesce(col("cb"), lit(0L)).as("cb")))
       // add-one smoothing over the union vocabulary (the q83 CCNet

@@ -22,7 +22,7 @@ import org.apache.spark.sql.functions._
   * never reach such a `dst`; they report `terminated = 0` with
   * `final_dst`/`depth` masked to -1 (deterministic output, no infinite
   * loop — the doubling round count is fixed up front). Per-round
-  * [[CheckpointPolicy]] pins keep the self-join lineage linear, the
+  * [[CheckpointPolicy.pin]] pins keep the self-join lineage linear, the
   * iterative-operator house convention.
   *
   * q163 gates resolution over a planted chain grid (depths 1-3, a
@@ -38,10 +38,9 @@ object Redirects {
     * `maxDepth` is masked to `(-1, -1, 0)` in the final select exactly
     * like a cycle, so the documented bound IS the observed bound. */
   def resolve(edges: DataFrame, srcCol: String, dstCol: String,
-              maxDepth: Int = 32,
-              policy: CheckpointPolicy = CheckpointPolicy.Local): DataFrame =
+              maxDepth: Int = 32): DataFrame =
     resolveCore(edges.select(col(srcCol).cast("long").as("src"),
-      col(dstCol).cast("long").as("dst")), maxDepth, policy, lit(-1L))
+      col(dstCol).cast("long").as("dst")), maxDepth, lit(-1L))
 
   /** [[resolve]] over NON-numeric keys (URL or title alias tables,
     * where no id dictionary exists yet): identical pointer-doubling
@@ -50,18 +49,16 @@ object Redirects {
     * already at hand. Unresolved rows (cycles, over-depth) mask
     * `final_dst` to NULL and `depth` to -1. */
   def resolveKeyed(edges: DataFrame, srcCol: String, dstCol: String,
-                   maxDepth: Int = 32,
-                   policy: CheckpointPolicy = CheckpointPolicy.Local): DataFrame = {
+                   maxDepth: Int = 32): DataFrame = {
     val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-    resolveCore(e, maxDepth, policy,
+    resolveCore(e, maxDepth,
       lit(null).cast(e.schema("dst").dataType))
   }
 
   private def resolveCore(e: DataFrame, maxDepth: Int,
-                          policy: CheckpointPolicy,
                           maskDst: Column): DataFrame = {
     require(maxDepth >= 1, s"maxDepth >= 1: $maxDepth")
-    var m = policy.pin(e.withColumn("depth", lit(1L)))
+    var m = CheckpointPolicy.pin(e.withColumn("depth", lit(1L)))
     val rounds = 32 - Integer.numberOfLeadingZeros(math.max(1, maxDepth - 1))
     // Per-round pins exist to stop the self-join lineage from doubling
     // per round — at ≤ 2 rounds the final plan holds ≤ 4 references to
@@ -78,7 +75,7 @@ object Redirects {
         .select(col("src"),
           coalesce(col("__bd"), col("dst")).as("dst"),
           (col("depth") + coalesce(col("__bdep"), lit(0L))).as("depth"))
-      m = if (pinRounds) policy.pin(next) else next
+      m = if (pinRounds) CheckpointPolicy.pin(next) else next
     }
     // resolved ⇔ the final dst is not itself a source AND the chain fits
     // the documented bound (doubling can overshoot maxDepth up to the

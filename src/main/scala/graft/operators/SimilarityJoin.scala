@@ -46,8 +46,7 @@ object SimilarityJoin {
     * convention — identical arithmetic to the DuckDB replay).
     */
   def allPairsJaccard(df: DataFrame, id: Column, text: Column,
-                      threshold: Double,
-                      policy: CheckpointPolicy = CheckpointPolicy.Local): DataFrame = {
+                      threshold: Double): DataFrame = {
     require(threshold > 0 && threshold <= 1, s"threshold in (0,1]: $threshold")
     val toks = df
       .select(id.cast("long").as("doc_id"),
@@ -64,7 +63,7 @@ object SimilarityJoin {
       .groupBy("doc_id").agg(sort_array(collect_list(col("tid"))).as("v"))
     // Distinct token sets: group docs by the vector itself; gid = min doc id
     // (collision-free — each doc belongs to exactly one group).
-    val groups = policy.pin(
+    val groups = CheckpointPolicy.pin(
       vecs.groupBy("v").agg(collect_list(col("doc_id")).as("ids"))
         .withColumn("gid", array_min(col("ids")))
         .withColumn("n", size(col("v"))))

@@ -55,7 +55,7 @@ object TextSources {
     * inspection. At cluster scale, land both sides to storage from this
     * single pinned pass (or run the split inside a foreachBatch). */
   def quarantineSplit(df: DataFrame): (DataFrame, DataFrame) = {
-    val pinned = CheckpointPolicy.fromSession(df.sparkSession).pin(df)
+    val pinned = CheckpointPolicy.pin(df)
     val clean = pinned.filter(col(CorruptCol).isNull).drop(CorruptCol)
     val bad = pinned.filter(col(CorruptCol).isNotNull)
       .select(col(CorruptCol).as("raw_line"))

@@ -118,11 +118,10 @@ object Unigram {
     * Returns the final vocabulary sorted by piece. */
   def train(docs: DataFrame, text: Column, vocabSize: Int,
             maxPieceLen: Int = 4, minCount: Long = 2, seedCap: Int = 48,
-            rounds: Int = 2,
-            policy: CheckpointPolicy = CheckpointPolicy.Local): Seq[UPiece] = {
+            rounds: Int = 2): Seq[UPiece] = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val words = policy.pin(wordFreq(docs, text))
+    val words = CheckpointPolicy.pin(wordFreq(docs, text))
     val maxLen = words.agg(max(length(col("word")))).head().getInt(0)
     require(maxLen <= MaxWordLen,
       s"longest word $maxLen exceeds the replayable DP unroll $MaxWordLen")
@@ -253,8 +252,7 @@ object Unigram {
     * path encodes as its UTF-8 bytes at ids `|pieces| + byte` (byte
     * fallback — zero-OOV on arbitrary input). */
   def encodeStats(docs: DataFrame, id: Column, text: Column,
-                  vocab: Seq[UPiece], maxPieceLen: Int = 4,
-                  policy: CheckpointPolicy = CheckpointPolicy.Local): DataFrame = {
+                  vocab: Seq[UPiece], maxPieceLen: Int = 4): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
     val sorted = vocab.sortBy(_.piece)
@@ -267,7 +265,7 @@ object Unigram {
       (sorted.map(p => p.piece -> p.logp).toMap, ids))
     val occ = docs.select(id.cast("long").as("doc_id"),
       posexplode(TextOps.tokens(TextOps.normalized(text))).as(Seq("wpos", "word")))
-    val wseg = policy.pin(occ.select("word").distinct().as[String]
+    val wseg = CheckpointPolicy.pin(occ.select("word").distinct().as[String]
       .flatMap { w =>
         viterbiOpt(w, vb.value._1, maxPieceLen) match {
           case Some(seg) => seg.zipWithIndex

@@ -89,14 +89,13 @@ object Vocab {
     *
     * Scale shape: the corpus contributes ONE explode+groupBy (the word
     * count); every training iteration then touches only the distinct-word
-    * table (pinned via `policy`, re-pinned every 8 merges to bound plan
+    * table (pinned via [[CheckpointPolicy.pin]], re-pinned every 8 merges to bound plan
     * depth) with a map-side-combined pair count, and the driver pulls ONE
     * row per iteration (the argmax). Total driver state = the merge table.
     * Training stops early if no adjacent pair remains. */
-  def bpeTrain(docs: DataFrame, text: Column, nMerges: Int,
-               policy: CheckpointPolicy = CheckpointPolicy.Local): Seq[BpeMerge] = {
+  def bpeTrain(docs: DataFrame, text: Column, nMerges: Int): Seq[BpeMerge] = {
     require(nMerges >= 1, "need at least one merge")
-    var words = policy.pin(bpeWords(docs, text))
+    var words = CheckpointPolicy.pin(bpeWords(docs, text))
     val merges = scala.collection.mutable.ArrayBuffer.empty[BpeMerge]
     var exhausted = false
     for (i <- 1 to nMerges if !exhausted) {
@@ -107,7 +106,7 @@ object Vocab {
         merges += m
         words = words.withColumn("w", replace(col("w"),
           lit(s"|${m.left}||${m.right}|"), lit(s"|${m.left}${m.right}|")))
-        if (i % 8 == 0) words = policy.pin(words)
+        if (i % 8 == 0) words = CheckpointPolicy.pin(words)
       }
     }
     merges.toSeq
@@ -185,16 +184,14 @@ object Vocab {
     * sequential training byte for byte (VocabSpec gates the equality;
     * q103's oracle replays the sequential semantics in DuckDB). */
   def bpeTrainBatched(docs: DataFrame, text: Column, nMerges: Int,
-                      batch: Int = 32,
-                      policy: CheckpointPolicy = CheckpointPolicy.Local): Seq[BpeMerge] =
-    trainBatchedCore(bpeWords(docs, text), nMerges, batch, policy, sep = "|")
+                      batch: Int = 32): Seq[BpeMerge] =
+    trainBatchedCore(bpeWords(docs, text), nMerges, batch, sep = "|")
 
   /** The [[bpeTrainBatched]] loop over an already-wrapped word table with
     * a caller-chosen symbol separator (`"|"` for the normalized-text
     * trainer whose alphabet excludes it; [[ByteSep]] for the byte-level
     * trainer whose alphabet contains every printable ASCII char). */
   private def trainBatchedCore(words0: DataFrame, nMerges: Int, batch: Int,
-                               policy: CheckpointPolicy,
                                sep: String): Seq[BpeMerge] = {
     require(nMerges >= 1, "need at least one merge")
     require(batch >= 1, "need a positive batch size")
@@ -214,7 +211,7 @@ object Vocab {
     val local = PlanOps.collectUnderCap(words0.select(col("freq"), col("w")), cap)
     if (local.isDefined)
       return trainLocalSeq(local.get.map(r => (r.getLong(0), r.getString(1))), nMerges, sep)
-    var words = policy.pin(words0)
+    var words = CheckpointPolicy.pin(words0)
     val merges = scala.collection.mutable.ArrayBuffer.empty[BpeMerge]
     var exhausted = false
     var sincePin = 0
@@ -252,7 +249,7 @@ object Vocab {
             lit(s"$sep${m.left}${m.right}$sep"))
         })
         sincePin += prefix.size
-        if (sincePin >= 8) { words = policy.pin(words); sincePin = 0 }
+        if (sincePin >= 8) { words = CheckpointPolicy.pin(words); sincePin = 0 }
       }
     }
     merges.toSeq
@@ -335,8 +332,7 @@ object Vocab {
     * byte expansion is a codegen HOF over the unknown symbols only, and
     * the vocab join is broadcast — scan-speed at any corpus size. */
   def encodeStatsBpe(docs: DataFrame, id: Column, text: Column,
-                     merges: Seq[BpeMerge], vocab: Seq[String],
-                     policy: CheckpointPolicy = CheckpointPolicy.Local): DataFrame = {
+                     merges: Seq[BpeMerge], vocab: Seq[String]): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
     val sorted = vocab.distinct.sorted
@@ -345,9 +341,9 @@ object Vocab {
       .map { case (s, i) => (s, i.toLong) }.toDF("sym", "id")
     val occ = docs.select(id.cast("long").as("doc_id"),
       posexplode(TextOps.tokens(TextOps.normalized(text))).as(Seq("wpos", "word")))
-    val wsym = policy.pin(occ.select("word").distinct()
+    val wsym = CheckpointPolicy.pin(occ.select("word").distinct()
       .select(col("word"), bpeSymbols(col("word"), merges).as("syms")))
-    val syms = policy.pin(occ.join(wsym, Seq("word"))
+    val syms = CheckpointPolicy.pin(occ.join(wsym, Seq("word"))
       .select(col("doc_id"), col("wpos"),
         posexplode(col("syms")).as(Seq("j", "sym"))))
     val tids = syms.join(broadcast(vocabDf), Seq("sym"), "left")
@@ -465,9 +461,8 @@ object Vocab {
     * participate in merges, which is precisely what the normalized-text
     * trainer cannot express. */
   def bpeTrainByteLevel(docs: DataFrame, text: Column, nMerges: Int,
-                        batch: Int = 32,
-                        policy: CheckpointPolicy = CheckpointPolicy.Local): Seq[BpeMerge] =
-    trainBatchedCore(byteWords(docs, text), nMerges, batch, policy, ByteSep)
+                        batch: Int = 32): Seq[BpeMerge] =
+    trainBatchedCore(byteWords(docs, text), nMerges, batch, ByteSep)
 
   /** The byte-level symbol array of an already-[[byteMap]]ped pretoken
     * after applying `merges` in order — [[bpeSymbols]] with the

@@ -117,11 +117,10 @@ object WordPiece {
     * loop. Both paths compute IDENTICAL merges: exact integer counts,
     * one IEEE score division, (l asc, r asc) tie-break on the pure-ASCII
     * symbol alphabet (WordPieceSpec gates path parity). */
-  def train(docs: DataFrame, text: Column, nMerges: Int,
-            policy: CheckpointPolicy = CheckpointPolicy.Local): Seq[WpMerge] =
+  def train(docs: DataFrame, text: Column, nMerges: Int): Seq[WpMerge] =
     collectWordsUnderCap(docs, text) match {
       case Some(wf) => trainLocal(wf, nMerges)
-      case None => trainDistributed(docs, text, nMerges, policy)
+      case None => trainDistributed(docs, text, nMerges)
     }
 
   /** [[train]] + [[pieces]] from ONE corpus scan: the piece alphabet is
@@ -129,8 +128,7 @@ object WordPiece {
     * consumes, so the fits-locally path derives both from a single
     * collect (the two-call form pays a second scan + distinct). Falls
     * back to the two-pass distributed pair past the cap. */
-  def trainAndPieces(docs: DataFrame, text: Column, nMerges: Int,
-                     policy: CheckpointPolicy = CheckpointPolicy.Local)
+  def trainAndPieces(docs: DataFrame, text: Column, nMerges: Int)
       : (Seq[WpMerge], Seq[String]) =
     collectWordsUnderCap(docs, text) match {
       case Some(wf) =>
@@ -141,7 +139,7 @@ object WordPiece {
         }.toSeq.distinct
         (merges, (alphabet ++ merges.map(_.merged)).distinct.sorted)
       case None =>
-        val merges = trainDistributed(docs, text, nMerges, policy)
+        val merges = trainDistributed(docs, text, nMerges)
         (merges, pieces(docs, text, merges))
     }
 
@@ -214,9 +212,8 @@ object WordPiece {
 
   /** The distributed merge loop — the past-the-cap fallback (one cluster
     * job per scored argmax). */
-  private def trainDistributed(docs: DataFrame, text: Column, nMerges: Int,
-                               policy: CheckpointPolicy): Seq[WpMerge] = {
-    var words = policy.pin(wpWords(docs, text))
+  private def trainDistributed(docs: DataFrame, text: Column, nMerges: Int): Seq[WpMerge] = {
+    var words = CheckpointPolicy.pin(wpWords(docs, text))
     // max() over an empty word table aggregates to NULL — read it as a
     // nullable so an empty corpus fails with a clear message, not an NPE.
     val maxLen = Option(words.agg(max(length(col("word")))).head().get(0))
@@ -234,7 +231,7 @@ object WordPiece {
           merges += m
           words = words.withColumn("w", replace(col("w"),
             lit(s"|${m.left}||${m.right}|"), lit(s"|${m.merged}|")))
-          if (i % 8 == 0) words = policy.pin(words)
+          if (i % 8 == 0) words = CheckpointPolicy.pin(words)
       }
     }
     merges.toSeq
@@ -306,8 +303,7 @@ object WordPiece {
     * on arbitrary input, no [UNK]). Segmentation runs once per DISTINCT
     * word with the broadcast inventory. */
   def encodeStats(docs: DataFrame, id: Column, text: Column,
-                  merges: Seq[WpMerge], inventory: Seq[String],
-                  policy: CheckpointPolicy = CheckpointPolicy.Local): DataFrame = {
+                  merges: Seq[WpMerge], inventory: Seq[String]): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
     val sorted = inventory.distinct.sorted
@@ -320,7 +316,7 @@ object WordPiece {
     val vb = spark.sparkContext.broadcast((sorted.toSet, ids))
     val occ = docs.select(id.cast("long").as("doc_id"),
       posexplode(TextOps.tokens(TextOps.normalized(text))).as(Seq("wpos", "word")))
-    val wseg = policy.pin(occ.select("word").distinct().as[String]
+    val wseg = CheckpointPolicy.pin(occ.select("word").distinct().as[String]
       .flatMap { w =>
         maxMatch(w, vb.value._1) match {
           case Some(seg) => seg.zipWithIndex.map { case (p, j) =>

@@ -1216,7 +1216,7 @@ object CrawlQueries {
     import s.implicits._
     val seeds = Seq("site0.example", "site1.example").toDF("node")
     val trust = LinkAnalysis.personalizedPageRank(servedQ165Edges(s, d),
-      seeds, iters = 5, policy = CheckpointPolicy.fromSession(s))
+      seeds, iters = 5)
     // endorsement counts SERVED from the incremental artifact (r15: the
     // same q177 convention the PPR edges already ride) — the one-shot
     // form re-paid the whole extraction chain every run (~3.7 s of the

@@ -95,9 +95,8 @@ private[queries] object Fixtures {
     // 3.9 s vs re-pinned 1.7 s, round 15 — OPTIMIZATION_r15.md); the pin
     // is one job at construction and the broadcast then reads a
     // checkpointed leaf.
-    val res = CheckpointPolicy.fromSession(s).pin(
-      Redirects.resolveKeyed(redirects, "rsrc", "rdst", maxDepth = 4,
-        policy = CheckpointPolicy.fromSession(s)))
+    val res = CheckpointPolicy.pin(
+      Redirects.resolveKeyed(redirects, "rsrc", "rdst", maxDepth = 4))
     e.join(res.select(col("src").as("__rs"), col("final_dst"),
         col("terminated")), col("resolved") === col("__rs"), "left")
       .select(col("doc_id"),
@@ -141,7 +140,7 @@ private[queries] object Fixtures {
     // (the chain is per-row) — r14 re-ran the whole parse+resolve+domain
     // chain per batch, ~2.5 s × 3 of the artifact's cold build at sf0.1.
     // `lazy` so a cache hit never pays the pin.
-    lazy val rows = CheckpointPolicy.fromSession(s).pin(
+    lazy val rows = CheckpointPolicy.pin(
       q165EdgeRowsKeyed(s, q165Pages(s, d)))
     buildLinkArtifact(s, d, "linkg") { b =>
       rows.filter(col("doc_id") % 3 === b).drop("doc_id")
@@ -156,7 +155,7 @@ private[queries] object Fixtures {
     * precedent). Must be digit-identical to the one-shot aggregate:
     * every consumer's oracle replays the one-shot chain. */
   def servedQ165Edges(s: SparkSession, d: String): DataFrame =
-    CheckpointPolicy.fromSession(s).pin(
+    CheckpointPolicy.pin(
       LinkGraph.servedDomainEdges(s, linkArtifactFor(s, d)))
 
   // Count-Min replay (q115): the 52-bit md5 integer (the q26 fold,

@@ -162,8 +162,7 @@ object GraphQueries {
     * relative-error properties are spec-gated (LinkAnalysisSpec). */
   def q142TrianglesDoulion(s: SparkSession, d: String): DataFrame =
     LinkAnalysis.trianglesDoulion(
-      LinkAnalysis.coPurchaseGraph(Tables.lineitem(s, d)), p = 0.5,
-      policy = CheckpointPolicy.fromSession(s))
+      LinkAnalysis.coPurchaseGraph(Tables.lineitem(s, d)), p = 0.5)
 
   /** q142: Doulion triangle estimate — full replay: canonical co-purchase
     * edges, the 13-hex md5-uniform keep decision per edge (q76 device over
@@ -354,7 +353,7 @@ object GraphQueries {
     // pure-projection aggregate would replay the whole HTML extraction
     // per branch (measured 13.3 s -> 4 s class at sf0.1 — the shared
     // join-input convention)
-    CheckpointPolicy.fromSession(s).pin(
+    CheckpointPolicy.pin(
       dom.groupBy(col("sd").as("src"), col("dd").as("dst"))
         .agg(count(lit(1)).cast("double").as("w")))
   }
@@ -374,8 +373,7 @@ object GraphQueries {
     * oracle replays the planted link classes, the chain depths, the
     * domain aggregation, and all 5 fenced iterations closed-form. */
   def q165CrawlGraphCentrality(s: SparkSession, d: String): DataFrame =
-    LinkAnalysis.pageRank(q165DomainEdges(s, d), iters = 5,
-        policy = CheckpointPolicy.fromSession(s))
+    LinkAnalysis.pageRank(q165DomainEdges(s, d), iters = 5)
       .orderBy("node")
 
   /** q165: crawl→graph→centrality — the whole chain replayed
@@ -503,7 +501,7 @@ object GraphQueries {
     import s.implicits._
     val seeds = Seq("site0.example", "site1.example").toDF("node")
     LinkAnalysis.personalizedPageRank(servedQ165Edges(s, d), seeds,
-        iters = 5, policy = CheckpointPolicy.fromSession(s))
+        iters = 5)
       .orderBy("node")
   }
 
@@ -711,7 +709,7 @@ object GraphQueries {
     * q181.) */
   def q177IncrementalCentrality(s: SparkSession, d: String): DataFrame =
     LinkAnalysis.pageRank(servedQ165Edges(s, d),
-        iters = 5, policy = CheckpointPolicy.fromSession(s))
+        iters = 5)
       .orderBy("node")
 
   /** Per-link rows of the q173 plant over `pages` in the
@@ -736,7 +734,7 @@ object GraphQueries {
   private def anchorArtifactFor(s: SparkSession, d: String): String = {
     // one extraction pass for all three batches (the linkArtifactFor
     // convention — slicing extracted rows == extracting sliced pages)
-    lazy val rows = CheckpointPolicy.fromSession(s).pin(
+    lazy val rows = CheckpointPolicy.pin(
       q173EdgeRowsKeyed(s, q173Pages(s, d)))
     buildLinkArtifact(s, d, "anchg") { b =>
       rows.filter(col("doc_id") % 3 === b).drop("doc_id")
@@ -822,8 +820,7 @@ object GraphQueries {
     * and the fenced normalize, the [[LinkAnalysis.pageRank]] replay
     * convention applied to the two-score recurrence. */
   def q183HitsDomains(s: SparkSession, d: String): DataFrame =
-    LinkAnalysis.hits(servedQ165Edges(s, d), iters = 5,
-        policy = CheckpointPolicy.fromSession(s))
+    LinkAnalysis.hits(servedQ165Edges(s, d), iters = 5)
       .orderBy("node")
 
   /** q183: HITS over the q165 domain edges — both half-steps of all 5
@@ -905,8 +902,7 @@ object GraphQueries {
     val scored = Retrieval.bm25fScoresIndexed(s, bm25IndexFor(s, d),
       served, col("aid"), col("anchor"), col("cnt"),
       Seq("join", "filter", "window"), wAnchor = 2.0)
-    val pr = LinkAnalysis.pageRank(servedQ165Edges(s, d), iters = 5,
-      policy = CheckpointPolicy.fromSession(s))
+    val pr = LinkAnalysis.pageRank(servedQ165Edges(s, d), iters = 5)
     val hosts = Seq("site0.example", "site1.example", "site2.example",
       "site3.example", "site4.example", "news.example", "redir.example",
       "shop.example")
@@ -961,18 +957,17 @@ object GraphQueries {
     * coalesce(yesterday.r5, 1/n) — batching, folding, and the warm
     * seam must be invisible in every digit. */
   def q185WarmRerank(s: SparkSession, d: String): DataFrame = {
-    val pol = CheckpointPolicy.fromSession(s)
     // yesterday's graph: the batch-0 ingest slice, sites 0-1 only —
     // pinned for the same four-branch reason as q165DomainEdges
-    val yEdges = pol.pin(
+    val yEdges = CheckpointPolicy.pin(
       q165EdgeRows(s, q165Pages(s, d)
           .filter(col("doc_id") % 3 === 0 && col("doc_id") % 5 < 2))
         .filter(col("sd") =!= col("dd"))
         .groupBy(col("sd").as("src"), col("dd").as("dst"))
         .agg(count(lit(1)).cast("double").as("w")))
-    val yRanks = LinkAnalysis.pageRank(yEdges, iters = 5, policy = pol)
+    val yRanks = LinkAnalysis.pageRank(yEdges, iters = 5)
     LinkAnalysis.pageRank(servedQ165Edges(s, d), iters = 2,
-        policy = pol, init = Some(yRanks))
+        init = Some(yRanks))
       .orderBy("node")
   }
 

@@ -392,8 +392,7 @@ object MediaQueries {
           Some((imgId, new Multimodal.PgmDecoder().aHash64(img)))
         else None
       }.toDF("doc_id", "sh")
-    Dedup.hammingNearDupPairs(hashed, maxHamming = 4,
-        policy = CheckpointPolicy.fromSession(s))
+    Dedup.hammingNearDupPairs(hashed, maxHamming = 4)
       .select(col("id_a"), col("id_b"), col("hamming").cast("long").as("hamming"))
       .orderBy("id_a", "id_b")
   }
@@ -458,8 +457,7 @@ object MediaQueries {
         val wav = Multimodal.encodeWavPcm(16000, qs.map(_.toShort).toArray)
         (clipId, new Multimodal.WavPcmDecoder().envelopeHash64(wav))
       }.toDF("doc_id", "sh")
-    Dedup.hammingNearDupPairs(hashed, maxHamming = 2,
-        policy = CheckpointPolicy.fromSession(s))
+    Dedup.hammingNearDupPairs(hashed, maxHamming = 2)
       .select(col("id_a"), col("id_b"), col("hamming").cast("long").as("hamming"))
       .orderBy("id_a", "id_b")
   }
@@ -614,10 +612,9 @@ object MediaQueries {
         val ok = if (java.lang.Long.bitCount(mp3Hash ^ arith) <= 4) 1L else 0L
         (id, mp3Hash, arith, ok)
       }.toDF("doc_id", "sh", "ah", "ok")
-    val pinned = CheckpointPolicy.fromSession(s).pin(hashed)
+    val pinned = CheckpointPolicy.pin(hashed)
     val flags = pinned.select(col("doc_id"), col("ah"), col("ok"))
-    Dedup.hammingNearDupPairs(pinned.select("doc_id", "sh"), maxHamming = 1,
-        policy = CheckpointPolicy.fromSession(s))
+    Dedup.hammingNearDupPairs(pinned.select("doc_id", "sh"), maxHamming = 1)
       .join(flags.select(col("doc_id").as("id_a"), col("ah").as("ah_a"),
         col("ok").as("a_ok")), "id_a")
       .join(flags.select(col("doc_id").as("id_b"), col("ok").as("b_ok")), "id_b")

@@ -256,7 +256,7 @@ object RetrievalQueries {
   def q74EmbeddingLshRecall(s: SparkSession, d: String): DataFrame = {
     val (corpus, off) = plantedTwinCorpus(s, d)
     val lsh = Dedup.embeddingNearDupPairs(corpus, col("vec_id"), col("v"),
-      threshold = 0.95, policy = CheckpointPolicy.fromSession(s))
+      threshold = 0.95)
     val truth = plantedTruth(corpus, off, 0.95)
     val flagged = truth.select("id_a", "id_b")
       .join(lsh.select(col("id_a"), col("id_b"), lit(1L).as("__hit")),
@@ -298,7 +298,7 @@ object RetrievalQueries {
     val threshold = 0.95
     val (corpus, off) = plantedTwinCorpus(s, d)
     val pairs = Dedup.embeddingNearDupPairs(corpus, col("vec_id"), col("v"),
-      threshold = threshold, policy = CheckpointPolicy.fromSession(s))
+      threshold = threshold)
     val labels = Dedup.clusters(pairs, corpus.select(col("vec_id").as("doc_id")))
       .localCheckpoint() // feeds the twin gate AND the base-drop audit
     val eligibleTwins = plantedTruth(corpus, off, threshold)
@@ -399,8 +399,7 @@ object RetrievalQueries {
       .select((col("vec_id") + lit(3 * off)).as("vec_id"), col("v")) // = 4·off + base
     val batch = twins.unionByName(copies).unionByName(batchDups)
     val admit = Dedup.embeddingIncrementalAdmit(batch, history,
-        col("vec_id"), col("v"), threshold = threshold,
-        policy = CheckpointPolicy.fromSession(s))
+        col("vec_id"), col("v"), threshold = threshold)
       .localCheckpoint() // feeds the three gate aggregates
     val eligible = plantedTruth(corpus, off, threshold)
       .select(col("id_b").as("doc_id"))
@@ -742,7 +741,7 @@ object RetrievalQueries {
       .select(VectorOps.cosine(col("v"), col("rv")).as("cos_ref"),
         sqrt(VectorOps.dot(col("v"), col("v"))).as("norm"))
     Profiling.drift(snap(0), snap(1), numeric = Seq("cos_ref", "norm"),
-        bins = 10, policy = CheckpointPolicy.fromSession(s))
+        bins = 10)
       .orderBy("column", "bucket")
   }
 

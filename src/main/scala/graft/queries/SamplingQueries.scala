@@ -933,11 +933,10 @@ object SamplingQueries {
     * eval-contamination guarantee a doc-keyed split cannot give. Same
     * doc_id % 10 sample as q121 (the pair oracle's budget). */
   def q127LeakageSafeSplit(s: SparkSession, d: String): DataFrame = {
-    val policy = CheckpointPolicy.fromSession(s)
     val docs = Tables.documents(s, d).filter(col("doc_id") % 10 === 0)
     val pairs = SimilarityJoin.allPairsJaccard(docs, col("doc_id"), col("text"),
-      threshold = 0.8, policy = policy)
-    val clusters = Dedup.clusters(pairs, docs.select("doc_id"), policy = policy)
+      threshold = 0.8)
+    val clusters = Dedup.clusters(pairs, docs.select("doc_id"))
     Mixture.hashSplit(clusters, col("cluster_id"),
         Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1), salt = "leaksafe")
       .select("doc_id", "cluster_id", "split")

@@ -76,11 +76,10 @@ object SketchQueries {
     val docs = Tables.documents(s, d)
     // TWO corpus scans total: the word-count aggregate (pinned — it feeds
     // both the top-k and the total-count denominator, distinct-word sized)
-    // and the Misra-Gries sketch pass it gates. Session-policy pin so a
+    // and the Misra-Gries sketch pass it gates. A CheckpointPolicy pin so a
     // reliable-checkpoint deployment covers this distinct-word-sized block
     // too (q44/q66 precedent).
-    val counts = CheckpointPolicy.fromSession(s)
-      .pin(HeavyHitters.wordCounts(docs, col("text")))
+    val counts = CheckpointPolicy.pin(HeavyHitters.wordCounts(docs, col("text")))
     val n = counts.agg(sum("cnt")).head().getLong(0)
     val exact = counts.orderBy(desc("cnt"), col("word")).limit(20)
     val cands = HeavyHitters.misraGriesCandidates(docs, col("text"), capacity)

@@ -543,8 +543,7 @@ object SourceQueries {
           .when(id % 10 === 1, id + 2)
           .when(id % 10 === 3, id + 4)
           .otherwise(id + 1).as("dst"))
-    Redirects.resolve(edges, "src", "dst", maxDepth = 8,
-        policy = CheckpointPolicy.fromSession(s))
+    Redirects.resolve(edges, "src", "dst", maxDepth = 8)
       .orderBy("src")
   }
 
@@ -597,8 +596,7 @@ object SourceQueries {
     val edges = redirs.join(byTitle,
         col("redirect_title") === col("t_title"))
       .select(col("r_id").as("src"), col("t_id").as("dst"))
-    val res = Redirects.resolve(edges, "src", "dst", maxDepth = 8,
-      policy = CheckpointPolicy.fromSession(s))
+    val res = Redirects.resolve(edges, "src", "dst", maxDepth = 8)
     redirs.join(res, redirs("r_id") === res("src"), "left")
       .join(pages.select(col("page_id").as("f_id"),
           col("title").as("final_title")),

@@ -176,8 +176,7 @@ object TextQueries {
   /** MinHash + LSH near-dup candidate pairs, Jaccard-verified. */
   def q28MinhashPairs(s: SparkSession, d: String): DataFrame =
     Dedup.minhashDedupPairs(Tables.documents(s, d), col("doc_id"), col("text"),
-      shingleSize = 3, numHashes = 64, bands = 16, threshold = 0.5,
-      policy = CheckpointPolicy.fromSession(s))
+      shingleSize = 3, numHashes = 64, bands = 16, threshold = 0.5)
       .orderBy("id_a", "id_b")
 
   // MinHash near-dup pairs: the oracle is the EXACT all-pairs word-3-shingle
@@ -217,8 +216,7 @@ object TextQueries {
     * xxhash64 fast path stays the library default, covered by DedupSpec. */
   def q29SimhashPairs(s: SparkSession, d: String): DataFrame =
     Dedup.simhashDedupPairs(Tables.documents(s, d), col("doc_id"), col("text"),
-      maxHamming = 7, portable = true,
-      policy = CheckpointPolicy.fromSession(s))
+      maxHamming = 7, portable = true)
       .select(col("id_a"), col("id_b"), col("hamming").cast("long").as("hamming"))
       .orderBy("id_a", "id_b")
 
@@ -320,11 +318,9 @@ object TextQueries {
     // spark.graft.checkpoint.dir set → every lineage pin in the pair-gen +
     // clustering loop goes to reliable storage (executor-loss-safe); the
     // default stays localCheckpoint. CheckpointPolicySpec gates parity.
-    val policy = CheckpointPolicy.fromSession(s)
     val pairs = Dedup.minhashDedupPairs(docs, col("doc_id"), col("text"),
-      shingleSize = 3, numHashes = 64, bands = 16, threshold = 0.5,
-      policy = policy)
-    Dedup.clusters(pairs, docs.select("doc_id"), policy = policy)
+      shingleSize = 3, numHashes = 64, bands = 16, threshold = 0.5)
+    Dedup.clusters(pairs, docs.select("doc_id"))
       .orderBy("doc_id")
   }
 
@@ -463,8 +459,7 @@ object TextQueries {
     val batch = docs.filter(pmod(col("doc_id"), lit(4)) === 0)
     val history = docs.filter(pmod(col("doc_id"), lit(4)) =!= 0)
     Dedup.incrementalAdmit(batch, history, col("doc_id"), col("text"),
-        maxHamming = 7, portable = true,
-        policy = CheckpointPolicy.fromSession(s))
+        maxHamming = 7, portable = true)
       .orderBy("doc_id")
   }
 
@@ -524,8 +519,7 @@ object TextQueries {
       val docs = Tables.documents(s, d)
       CorpusPipeline.curateAudit(
           docs.filter(col("doc_id") >= 10), col("doc_id"), col("text"),
-          benchmark = Some(docs.filter(col("doc_id") < 10)),
-          policy = CheckpointPolicy.fromSession(s))
+          benchmark = Some(docs.filter(col("doc_id") < 10)))
         .write.mode("overwrite").parquet(tmp)
     })
 
@@ -976,8 +970,7 @@ object TextQueries {
     Profiling.drift(snap(0), snap(1),
         numeric = Seq("n_tok", "n_chars"),
         categorical = Seq("lang", "source"),
-        tokens = Some("toks"), bins = 10,
-        policy = CheckpointPolicy.fromSession(s))
+        tokens = Some("toks"), bins = 10)
       .orderBy("column", "bucket")
   }
 
@@ -1227,7 +1220,7 @@ object TextQueries {
   def q141ExactSubstringDedup(s: SparkSession, d: String): DataFrame =
     ExactSubstring.dedupStats(Tables.documents(s, d), col("doc_id"),
         TextOps.tokens(coalesce(col("text"), lit(""))),
-        minLen = 16, maxLen = 40, policy = CheckpointPolicy.fromSession(s))
+        minLen = 16, maxLen = 40)
       .orderBy("doc_id")
 
   /** q141: exact substring dedup — brute-force replay over the literal
@@ -1359,7 +1352,7 @@ object TextQueries {
     import s.implicits._
     val seeds = Seq("site0.example", "site1.example").toDF("node")
     val trust = LinkAnalysis.personalizedPageRank(servedQ165Edges(s, d),
-      seeds, iters = 5, policy = CheckpointPolicy.fromSession(s))
+      seeds, iters = 5)
     curationAuditFor(s, d)
       .withColumn("domain",
         concat(lit("site"), col("doc_id") % 5, lit(".example")))

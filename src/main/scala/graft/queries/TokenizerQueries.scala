@@ -34,7 +34,7 @@ object TokenizerQueries {
       // (the q103 oracle replays the SEQUENTIAL semantics) in ~batch×
       // fewer Spark jobs — the production-vocab training shape
       Vocab.bpeTrainBatched(Tables.documents(s, d), col("text"),
-        nMerges = 40, policy = CheckpointPolicy.fromSession(s))
+        nMerges = 40)
     }
 
   /** Per-doc REAL BPE token counts (the learned q103 merges, shared via
@@ -280,7 +280,6 @@ object TokenizerQueries {
   def q103BpeTokenizer(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val merges = bpeMergesFor(s, d)
-    val policy = CheckpointPolicy.fromSession(s)
     val mergeDf = merges.zipWithIndex.map { case (m, i) =>
         ("merge", (i + 1).toLong, m.left, m.right, m.count, 0L, 0L) }
       .toDF("kind", "key", "lft", "rgt", "n1", "n2", "n3")
@@ -292,9 +291,9 @@ object TokenizerQueries {
     // 10-20x fewer evaluations than per-occurrence on natural text), and
     // occurrences re-attach by word; the exploded symbol frame is pinned
     // too, since it feeds BOTH the vocab distinct and the position window
-    val wsym = policy.pin(occ.select("word").distinct()
+    val wsym = CheckpointPolicy.pin(occ.select("word").distinct()
       .select(col("word"), Vocab.bpeSymbols(col("word"), merges).as("syms")))
-    val syms = policy.pin(occ.join(wsym, Seq("word"))
+    val syms = CheckpointPolicy.pin(occ.join(wsym, Seq("word"))
       .select(col("doc_id"), col("wpos"),
         posexplode(col("syms")).as(Seq("j", "sym"))))
     // final-symbol vocab is bounded by |alphabet| + nMerges (every final
@@ -439,7 +438,7 @@ object TokenizerQueries {
     val ce = LangModel.knTrigramCrossEntropy(docs, col("doc_id"),
       TextOps.tokens(coalesce(col("text"), lit(""))), col("lang") === "en")
     // feeds the per-source stats AND the epochs expansion — pin once
-    val scored = CheckpointPolicy.fromSession(s).pin(
+    val scored = CheckpointPolicy.pin(
       docs.select(col("doc_id"), col("source"))
         .join(ce.select("doc_id", "ce"), Seq("doc_id")))
     val bySrc = scored.groupBy("source")
@@ -502,7 +501,7 @@ object TokenizerQueries {
     ArtifactCache.value(s, "unigram", d, "documents") {
       Unigram.train(Tables.documents(s, d), col("text"),
         vocabSize = 48, maxPieceLen = 4, minCount = 2, seedCap = 48,
-        rounds = 2, policy = CheckpointPolicy.fromSession(s))
+        rounds = 2)
     }
 
   /** q125: unigram-LM subword tokenization ([[Unigram]] — the
@@ -518,8 +517,7 @@ object TokenizerQueries {
     * encode — a defect anywhere in the model trajectory reds the hash. */
   def q125UnigramTokenizer(s: SparkSession, d: String): DataFrame =
     Unigram.encodeStats(Tables.documents(s, d), col("doc_id"), col("text"),
-      unigramVocabFor(s, d), maxPieceLen = 4,
-      policy = CheckpointPolicy.fromSession(s))
+      unigramVocabFor(s, d), maxPieceLen = 4)
 
   /** q125: the unigram-LM tokenizer, trained AND applied inside one
     * generated query (the q103 convention). Mirrors [[graft.operators.Unigram]]
@@ -660,7 +658,7 @@ object TokenizerQueries {
       : (Seq[WordPiece.WpMerge], Seq[String]) =
     ArtifactCache.value(s, "wordpiece", d, "documents") {
       WordPiece.trainAndPieces(Tables.documents(s, d), col("text"),
-        nMerges = 30, policy = CheckpointPolicy.fromSession(s))
+        nMerges = 30)
     }
 
   /** q130: WordPiece subword tokenization ([[WordPiece]] — the BERT
@@ -677,7 +675,7 @@ object TokenizerQueries {
   def q130WordPiece(s: SparkSession, d: String): DataFrame = {
     val (m, inv) = wordPieceFor(s, d)
     WordPiece.encodeStats(Tables.documents(s, d), col("doc_id"), col("text"),
-      m, inv, policy = CheckpointPolicy.fromSession(s))
+      m, inv)
   }
 
   /** q130: WordPiece — trained AND applied inside one generated query
@@ -831,8 +829,7 @@ object TokenizerQueries {
       .select(explode(Vocab.bpeSymbols(col("word"), merges)).as("sym"))
       .distinct().as[String].collect()
     val pruned = symSet.filterNot(_.contains("e")).toSeq
-    Vocab.encodeStatsBpe(docs, col("doc_id"), col("text"), merges, pruned,
-      policy = CheckpointPolicy.fromSession(s))
+    Vocab.encodeStatsBpe(docs, col("doc_id"), col("text"), merges, pruned)
   }
 
   /** q138: byte-fallback BPE encode — q103's 40-merge chain served with
@@ -895,7 +892,7 @@ object TokenizerQueries {
   private def byteBpeMergesFor(s: SparkSession, d: String): Seq[Vocab.BpeMerge] =
     ArtifactCache.value(s, "bytebpe", d, "documents") {
       Vocab.bpeTrainByteLevel(q143Raw(s, d), col("raw"),
-        nMerges = 40, policy = CheckpointPolicy.fromSession(s))
+        nMerges = 40)
     }
 
   /** q143: BYTE-LEVEL BPE — the GPT-2 tokenizer family ([[Vocab
@@ -912,7 +909,6 @@ object TokenizerQueries {
     * the per-doc digests. */
   def q143ByteLevelBpe(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val policy = CheckpointPolicy.fromSession(s)
     val merges = byteBpeMergesFor(s, d)
     val occ = q143Raw(s, d)
       .select(col("doc_id"),
@@ -921,9 +917,9 @@ object TokenizerQueries {
     // run the 40-replace encode chain once per distinct word
     val mapped = occ.select("word").distinct().toDF("_1").as[String]
       .map(w => (w, Vocab.byteMap(w))).toDF("word", "mapped")
-    val wsym = policy.pin(mapped.select(col("word"),
+    val wsym = CheckpointPolicy.pin(mapped.select(col("word"),
       Vocab.byteLevelSymbols(col("mapped"), merges).as("syms")))
-    val syms = policy.pin(occ.join(wsym, Seq("word"))
+    val syms = CheckpointPolicy.pin(occ.join(wsym, Seq("word"))
       .select(col("doc_id"), col("wpos"),
         posexplode(col("syms")).as(Seq("j", "sym"))))
     val vocab = Ranking.globalRowNumber(

@@ -59,6 +59,14 @@ abstract class SparkSpec extends AnyFunSuite {
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
+  /** Runs `body` with `spark.graft.checkpoint.dir` set to `dir`, so every
+    * `CheckpointPolicy.pin` in it checkpoints to reliable storage; the conf
+    * is unset afterwards. */
+  def withCheckpointDir[T](dir: String)(body: => T): T = {
+    spark.conf.set("spark.graft.checkpoint.dir", dir)
+    try body finally spark.conf.unset("spark.graft.checkpoint.dir")
+  }
+
   /** Runs `body` twice: with `spark.graft.bpe.localTrainMaxWords` at its
     * default, where every test-sized corpus trains in the driver-side
     * sequential loop, and at 0, which forces the distributed prefix-guard

@@ -1,10 +1,46 @@
 package graft.operators
 
 import graft.{SparkEntry, SparkSpec}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import java.nio.file.{Files, Paths, StandardWatchEventKinds}
+import java.util.concurrent.TimeUnit
+import scala.jdk.CollectionConverters._
 
 class CheckpointPolicySpec extends SparkSpec {
   import spark.implicits._
+
+  private def tempDir(prefix: String): String =
+    Files.createTempDirectory(prefix).toString
+
+  private def rows(df: DataFrame): Seq[String] =
+    df.collect().map(_.toString).toSeq.sorted
+
+  /** `body`'s result and the `rdd-*` dirs created under the context's
+    * checkpoint root while it ran — one per reliable pin. Read from
+    * filesystem events, so a dir the ContextCleaner reclaims before `body`
+    * returns (its pinned frame already unreachable) still counts. Seeds the
+    * root from `dir` if no reliable pin has yet, as the first one would. */
+  private def reliablePins[T](dir: String)(body: => T): (T, Set[String]) = {
+    val sc = spark.sparkContext
+    if (sc.getCheckpointDir.isEmpty) sc.setCheckpointDir(dir)
+    val root = Paths.get(new java.net.URI(sc.getCheckpointDir.get).getPath)
+    val watcher = root.getFileSystem.newWatchService()
+    try {
+      root.register(watcher, StandardWatchEventKinds.ENTRY_CREATE)
+      val out = body
+      var created = Set.empty[String]
+      var key = watcher.poll(500, TimeUnit.MILLISECONDS)
+      while (key != null) {
+        created ++= key.pollEvents().asScala.map(_.context().toString)
+          .filter(_.startsWith("rdd-"))
+        key.reset()
+        key = watcher.poll(500, TimeUnit.MILLISECONDS)
+      }
+      (out, created)
+    } finally watcher.close()
+  }
 
   test("clusters: Reliable policy matches Local bit-for-bit and writes the dir") {
     // chain + separate component + singletons — exercises multiple rounds
@@ -13,10 +49,9 @@ class CheckpointPolicySpec extends SparkSpec {
     val ids = (0L to 7L).toDF("doc_id")
     val local = Dedup.clusters(pairs, ids)
       .as[(Long, Long)].collect().toMap
-    val dir = java.nio.file.Files.createTempDirectory("graft_ckpt_").toString
-    val reliable = Dedup.clusters(pairs, ids,
-        policy = CheckpointPolicy.Reliable(dir))
-      .as[(Long, Long)].collect().toMap
+    val reliable = withCheckpointDir(tempDir("graft_ckpt_")) {
+      Dedup.clusters(pairs, ids).as[(Long, Long)].collect().toMap
+    }
     assert(reliable == local, "reliable-mode labels diverged from local mode")
     // the pins really went to reliable storage: the context's checkpoint
     // dir is seeded and holds rdd checkpoint data
@@ -30,65 +65,65 @@ class CheckpointPolicySpec extends SparkSpec {
   test("q44 runs in reliable mode via spark.graft.checkpoint.dir and matches local") {
     val localRows = SparkEntry.queries("q44_dedup_clusters")(spark, sf001)
       .as[(Long, Long)].collect().toSeq
-    val dir = java.nio.file.Files.createTempDirectory("graft_ckpt_q44_").toString
-    spark.conf.set("spark.graft.checkpoint.dir", dir)
-    try {
-      val reliableRows = SparkEntry.queries("q44_dedup_clusters")(spark, sf001)
+    val dir = tempDir("graft_ckpt_q44_")
+    val (reliableRows, q44Pins) = withCheckpointDir(dir)(reliablePins(dir) {
+      SparkEntry.queries("q44_dedup_clusters")(spark, sf001)
         .as[(Long, Long)].collect().toSeq
-      assert(reliableRows == localRows,
-        "q44 reliable-mode output diverged from local mode")
-    } finally spark.conf.unset("spark.graft.checkpoint.dir")
+    })
+    assert(reliableRows == localRows,
+      "q44 reliable-mode output diverged from local mode")
+    assert(q44Pins.nonEmpty, "q44 made no reliable checkpoint")
+    // queries whose operators take the conf without the query naming it
+    for (q <- Seq("q123_pagerank", "q121_allpairs_jaccard",
+        "q77_semantic_keepers")) {
+      val local = rows(SparkEntry.queries(q)(spark, sf001))
+      val (reliable, pins) = withCheckpointDir(dir)(reliablePins(dir) {
+        rows(SparkEntry.queries(q)(spark, sf001))
+      })
+      assert(reliable == local, s"$q reliable-mode output diverged from local mode")
+      assert(pins.nonEmpty, s"$q made no reliable checkpoint")
+    }
   }
 
   test("round-7 converted pins: parity across policies for every operator") {
-    // one Reliable dir serves all runs (first pin seeds the context dir)
-    val dir = java.nio.file.Files.createTempDirectory("graft_ckpt_r7_").toString
-    val rel = CheckpointPolicy.Reliable(dir)
-    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
-      df.collect().map(_.toString).toSeq.sorted
+    // one dir serves all reliable runs (first pin seeds the context dir)
+    val dir = tempDir("graft_ckpt_r7_")
+    def assertParity(run: => DataFrame): Unit =
+      assert(withCheckpointDir(dir)(rows(run)) == rows(run))
 
     // hammingNearDupPairs (covers simhash/image/audio dedup)
     val fps = Seq((0L, 0L), (1L, 1L), (2L, 0L), (3L, 255L))
       .toDF("doc_id", "sh")
-    assert(rows(Dedup.hammingNearDupPairs(fps, 2, policy = rel)) ==
-      rows(Dedup.hammingNearDupPairs(fps, 2)))
+    assertParity(Dedup.hammingNearDupPairs(fps, 2))
 
     // ngramJaccardPairs
     val docs = Seq((0L, "abcabcabc"), (1L, "abcabcabcabc"), (2L, "zzzz"))
       .toDF("doc_id", "text")
-    assert(rows(Dedup.ngramJaccardPairs(docs, col("doc_id"), col("text"),
-        n = 3, threshold = 0.3, policy = rel)) ==
-      rows(Dedup.ngramJaccardPairs(docs, col("doc_id"), col("text"),
-        n = 3, threshold = 0.3)))
+    assertParity(Dedup.ngramJaccardPairs(docs, col("doc_id"),
+      col("text"), n = 3, threshold = 0.3))
 
     // text incremental admission
     val batch = Seq((10L, "the same text"), (11L, "something fresh"))
       .toDF("doc_id", "text")
     val hist = Seq((0L, "the same text")).toDF("doc_id", "text")
-    assert(rows(Dedup.incrementalAdmit(batch, hist, col("doc_id"),
-        col("text"), policy = rel)) ==
-      rows(Dedup.incrementalAdmit(batch, hist, col("doc_id"), col("text"))))
+    assertParity(Dedup.incrementalAdmit(batch, hist,
+      col("doc_id"), col("text")))
 
     // embedding near-dup + incremental admission
     val vecs = Seq((0L, Seq(1.0, 0.0)), (1L, Seq(1.0, 0.001)),
       (2L, Seq(0.0, 1.0))).toDF("vec_id", "v")
-    assert(rows(Dedup.embeddingNearDupPairs(vecs, col("vec_id"), col("v"),
-        threshold = 0.9, policy = rel)) ==
-      rows(Dedup.embeddingNearDupPairs(vecs, col("vec_id"), col("v"),
-        threshold = 0.9)))
+    assertParity(Dedup.embeddingNearDupPairs(vecs,
+      col("vec_id"), col("v"), threshold = 0.9))
     val vbatch = Seq((10L, Seq(1.0, 0.0)), (11L, Seq(0.0, -1.0)))
       .toDF("vec_id", "v")
-    assert(rows(Dedup.embeddingIncrementalAdmit(vbatch, vecs, col("vec_id"),
-        col("v"), threshold = 0.9, policy = rel)) ==
-      rows(Dedup.embeddingIncrementalAdmit(vbatch, vecs, col("vec_id"),
-        col("v"), threshold = 0.9)))
+    assertParity(Dedup.embeddingIncrementalAdmit(vbatch, vecs,
+      col("vec_id"), col("v"), threshold = 0.9))
 
-    // q50's word-count pin follows the session policy conf
+    // q50's word-count pin follows the session conf
     val localQ50 = rows(SparkEntry.queries("q50_heavy_hitters")(spark, sf001))
-    spark.conf.set("spark.graft.checkpoint.dir", dir)
-    try assert(rows(SparkEntry.queries("q50_heavy_hitters")(spark, sf001)) ==
+    assert(withCheckpointDir(dir)(
+      rows(SparkEntry.queries("q50_heavy_hitters")(spark, sf001))) ==
       localQ50, "q50 reliable-mode output diverged")
-    finally spark.conf.unset("spark.graft.checkpoint.dir")
   }
 
   test("curate parity across policies on a duplicate-heavy corpus") {
@@ -101,12 +136,11 @@ class CheckpointPolicySpec extends SparkSpec {
         "partition pruning with plenty of ordinary words spread across the " +
         "sentence so the quality rules keep it in the corpus for the test", "src1"))
       .toDF("doc_id", "text", "source")
-    val local = CorpusPipeline.curate(docs, col("doc_id"), col("text"))
-      .select("doc_id").as[Long].collect().toSet
-    val dir = java.nio.file.Files.createTempDirectory("graft_ckpt_cur_").toString
-    val reliable = CorpusPipeline.curate(docs, col("doc_id"), col("text"),
-        policy = CheckpointPolicy.Reliable(dir))
-      .select("doc_id").as[Long].collect().toSet
+    def keepers(): Set[Long] =
+      CorpusPipeline.curate(docs, col("doc_id"), col("text"))
+        .select("doc_id").as[Long].collect().toSet
+    val local = keepers()
+    val reliable = withCheckpointDir(tempDir("graft_ckpt_cur_"))(keepers())
     assert(reliable == local, "curate reliable-mode keepers diverged")
   }
 }
