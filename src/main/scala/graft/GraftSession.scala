@@ -70,7 +70,7 @@ object GraftSession {
 
 /** Dead-pin reclamation for suite runners (Bench/Verify).
   *
-  * Almost every operator pins intermediate frames with `localCheckpoint`
+  * Almost every operator pins intermediate frames with `CheckpointPolicy.pin`
   * (the lineage-truncation discipline iterative plans need), and those
   * RDD blocks stay in the storage region until the context dies. A
   * 120-query suite accumulates tens of GB of DEAD pinned blocks —

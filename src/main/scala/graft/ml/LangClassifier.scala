@@ -122,9 +122,9 @@ object LangClassifier {
     // (measured 22 s -> ~8 s at sf0.1 on 32 cores). Featurization and
     // scoring stay at full width; this narrows only the iterative stage.
     val fitParts = math.max(2, docs.sparkSession.sparkContext.defaultParallelism / 8)
-    val train0 = split.filter(col("split") === "train")
-      .coalesce(fitParts).localCheckpoint(true)
-    val test0 = split.filter(col("split") === "test").localCheckpoint(true)
+    val train0 = graft.operators.CheckpointPolicy.pin(
+      split.filter(col("split") === "train").coalesce(fitParts))
+    val test0 = graft.operators.CheckpointPolicy.pin(split.filter(col("split") === "test"))
     // The fit stops on convergence (tol 1e-3 — the gate's output is a
     // 0.9-threshold recall FLAG, insensitive to coefficient digits at
     // that scale) with maxIter as the cap; BOTH knobs are caller-visible

@@ -81,8 +81,8 @@ object TextClassifier {
       else trainAll.filter(graft.operators.Mixture.portableUniform(
         col("doc_id"), "trainsample") < maxTrainFrac)
     // folds are read many times (L-BFGS sweeps / the count) — pin them
-    val train0 = trainFit.localCheckpoint(true)
-    val test0 = split.filter(col("split") === "test").localCheckpoint(true)
+    val train0 = graft.operators.CheckpointPolicy.pin(trainFit)
+    val test0 = graft.operators.CheckpointPolicy.pin(split.filter(col("split") === "test"))
     val model = train(train0)
     val scored = score(model, test0)
     val (nTest, nHit) = scored.agg(count(lit(1)),

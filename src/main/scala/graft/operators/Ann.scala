@@ -212,9 +212,9 @@ object Ann {
     // re-running the O(inDim·jlDim) fold per row. Measured at sf0.1:
     // 7.3 s unpinned vs ~1 s pinned (the ivfPqTopK checkpoint lesson).
     // At ingest this frame is the PERSISTED compressed column anyway.
-    val pc = RandomProjection.project(corpus, corpusId, corpusVec, inDim, jlDim)
-      .select(col("id"), col("proj"))
-      .localCheckpoint()
+    val pc = CheckpointPolicy.pin(
+      RandomProjection.project(corpus, corpusId, corpusVec, inDim, jlDim)
+        .select(col("id"), col("proj")))
     val pq = RandomProjection.project(queries, queryId, queryVec, inDim, jlDim)
       .select(col("id"), col("proj"))
     val cand = topKFromScores(ivfScoredPairs(
@@ -438,12 +438,12 @@ object Ann {
     // subjob as well as the main scan — measured 1.2 s vs 5.5 s at sf0.1
     // without the pin. (In production this materialization IS the index
     // build: (cell, codes) persist at ingest.)
-    val coded = c.select(col("nid"),
-        ivfCellOf(centArr, col("cv")).as("cell"),
-        PqExprs.pqEncode(col("cv"), model.codebook, m, codesPerSub).as("codes"))
-      .localCheckpoint()
-    val qn = unitNorm(queries, queryId, queryVec, "query_id")
-      .localCheckpoint() // feeds probes, LUTs, and the rescore join
+    val coded = CheckpointPolicy.pin(
+      c.select(col("nid"),
+          ivfCellOf(centArr, col("cv")).as("cell"),
+          PqExprs.pqEncode(col("cv"), model.codebook, m, codesPerSub).as("codes")))
+    val qn = CheckpointPolicy.pin( // feeds probes, LUTs, and the rescore join
+      unitNorm(queries, queryId, queryVec, "query_id"))
     val q = qn
       .select(col("query_id"), col("cv"),
         explode(ivfProbesOf(centArr, col("cv"), nprobe)).as("cell"))
@@ -484,8 +484,8 @@ object Ann {
                       codesPerSub: Int = 32, sampleN: Int = 2048,
                       iters: Int = 8, seed: Long = 42): Unit = {
     val spark = corpus.sparkSession
-    val c = unitNorm(corpus, corpusId, corpusVec, "nid")
-      .localCheckpoint() // feeds centroid training, PQ training, and encode
+    val c = CheckpointPolicy.pin( // feeds centroid training, PQ training, and encode
+      unitNorm(corpus, corpusId, corpusVec, "nid"))
     val cents = trainIvfCentroids(c, nlist, seed, refineIters = 1)
     val centArr = typedLit(cents.map(_.toSeq).toSeq)
     val model = pqTrain(c, col("nid"), col("cv"), m, codesPerSub, sampleN, iters, seed)
@@ -614,11 +614,11 @@ object Ann {
     val meta = readIvfPqIndexMeta(spark, indexDir)
     val centArr = typedLit(meta.centroids)
     val cb = meta.codebook.toArray
-    val qn = unitNorm(queries, queryId, queryVec, "query_id")
-      .localCheckpoint() // feeds probes, LUTs, and the rescore join
-    val probed = qn.select(col("query_id"), col("cv"),
-        explode(ivfProbesOf(centArr, col("cv"), nprobe)).as("cell"))
-      .localCheckpoint() // feeds the cells collect AND the LUT projection
+    val qn = CheckpointPolicy.pin( // feeds probes, LUTs, and the rescore join
+      unitNorm(queries, queryId, queryVec, "query_id"))
+    val probed = CheckpointPolicy.pin( // feeds the cells collect AND the LUT projection
+      qn.select(col("query_id"), col("cv"),
+          explode(ivfProbesOf(centArr, col("cv"), nprobe)).as("cell")))
     val cells = probed.select("cell").distinct().collect()
       .map(_.getInt(0)).toSeq // Q·nprobe ints — the static pruning predicate
     val q = probed.select(col("query_id"), col("cell"),

@@ -2,13 +2,16 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 
-/** How iterative/multi-consumer operators pin lineage.
+/** The one way the engine cuts lineage: every pin in `src/main` is a
+  * [[pin]] call.
   *
-  * The dedup/clustering/curation/graph/tokenizer loops re-consume each
-  * round's frame from several plan branches, so they MUST truncate lineage
-  * each round (or the plan doubles per iteration). How the pinned blocks
-  * are stored is a deployment decision, not an algorithmic one, so it is
-  * made here, once per pin, from the frame's own session conf:
+  * The active-sampling, dedup/clustering/curation/graph/tokenizer loops
+  * re-consume each round's frame from several plan branches, so they MUST
+  * truncate lineage each round (or the plan doubles per iteration), and
+  * multi-consumer frames are pinned so each branch reads one computation.
+  * How the pinned blocks are stored is a deployment decision, not an
+  * algorithmic one, so it is made here, once per pin, from the frame's
+  * own session conf:
   *
   *  - default: `localCheckpoint()` — blocks live on executor storage.
   *    Fastest, and exactly right single-JVM / local[n]. On a real cluster
@@ -21,12 +24,9 @@ import org.apache.spark.sql.DataFrame
   *    write+read per pin. Both modes produce IDENTICAL results
   *    (CheckpointPolicySpec gates parity).
   *
-  * The one conf switches every [[pin]] call. It does NOT reach the raw
-  * `localCheckpoint()` calls elsewhere in the engine (the active-sampling
-  * loop, `Selection.selectAndMove`, the SDE forecaster, ...): those pin
-  * small per-iteration frames whose loss is cheap to redo, and moving them
-  * to reliable storage would add one write+read per loop step to the
-  * flagship pipeline — a separate decision from the one made here.
+  * Both modes pin eagerly: the frame is materialized when [[pin]]
+  * returns. The one conf switches every pin (PlanGuardsSpec fails on a
+  * `localCheckpoint`/`checkpoint` call anywhere else in `src/main`).
   */
 object CheckpointPolicy {
 
@@ -36,14 +36,13 @@ object CheckpointPolicy {
     * none is set yet — Spark has ONE checkpoint dir per context, so the
     * first reliable pin wins and later ones reuse it.
     *
-    * The frame is persisted across a reliable checkpoint: `checkpoint()`
-    * runs the materializing action and THEN a separate job that writes the
-    * partitions to the checkpoint dir — without a cache that second job
-    * recomputes every partition from scratch, doubling each round's
-    * compute on exactly the multi-hour runs this mode exists for. The
-    * cache is dropped as soon as the write lands (the checkpointed frame
-    * reads from reliable storage, not the cache). Checkpoint FILES are
-    * reclaimed by the ContextCleaner when the pinned frame is GC'd
+    * A reliable pin checkpoints the frame's local pin: `checkpoint()`'s
+    * materializing job and its write job both read those blocks, so the
+    * frame is computed once, with the partitions the default mode gives
+    * it. (A `persist` plans it as a cached relation, which keeps every
+    * un-coalesced AQE shuffle partition, so a seeded `rand` over it, as in
+    * the SDE forecaster's init sample, drew other values.) Checkpoint
+    * FILES are reclaimed by the ContextCleaner when the pinned frame is GC'd
     * (`spark.cleaner.referenceTracking.cleanCheckpoints`, pinned true in
     * GraftSession) — otherwise a 64-round clustering run accumulates every
     * round's files for its whole lifetime. */
@@ -53,8 +52,6 @@ object CheckpointPolicy {
       case Some(dir) =>
         val sc = df.sparkSession.sparkContext
         if (sc.getCheckpointDir.isEmpty) sc.setCheckpointDir(dir)
-        val cached = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try cached.checkpoint()
-        finally cached.unpersist(blocking = false)
+        df.localCheckpoint().checkpoint()
     }
 }

@@ -20,7 +20,7 @@ import org.apache.spark.sql.functions._
   *
   * Every stage is a left-semi/anti join against a doc_id set, so the
   * curated frame keeps the input's full schema. Stage frames are pinned
-  * with localCheckpoint (each feeds its own gate computation AND the next
+  * with [[CheckpointPolicy.pin]] (each feeds its own gate computation AND the next
   * stage — unpinned, every consumer replays the chain from the scan;
   * measured 7.7 → 4.9 s on the q66 composition at sf0.1). Stage order
   * matters at scale: the single-pass filters (1, 2-lite) shrink the
@@ -166,7 +166,7 @@ object CorpusPipeline {
     * the stream instead of back-to-back in the same training window).
     * Output: curated schema + `epoch`, `n_tok`, `first_bin`, `last_bin`,
     * `bin_off` — everything a shard writer needs. NOTE: [[curate]]'s
-    * stage pins are EAGER (localCheckpoint), so constructing this frame
+    * stage pins are EAGER ([[CheckpointPolicy.pin]]), so constructing this frame
     * already runs the curation stages — the stage-table shape, not a
     * fully lazy plan; mixture and packing stay lazy on top. */
   def toDataloader(docs: DataFrame, id: Column, text: Column,

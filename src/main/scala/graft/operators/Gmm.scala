@@ -87,16 +87,16 @@ object Gmm {
     val d = cols.length
     require(d >= 1, "need at least one feature column")
     val key = concat_ws("|", keyCols: _*)
-    val pts = df.select(
-      (key.as("__key") +: cols.zipWithIndex.map { case (c, j) =>
-        col(c).cast("double").as(s"x$j")
-      }): _*)
-      .filter((0 until d).map(j => col(s"x$j").isNotNull).reduce(_ && _))
-      // spread before pinning: the parquet scan yields a handful of
-      // partitions, and the pinned blocks keep that count — every E-step's
-      // exp-heavy pass would otherwise run on that many cores
-      .repartition(df.sparkSession.sparkContext.defaultParallelism)
-      .localCheckpoint() // scanned iters+2 times; pin the projection
+    val pts = CheckpointPolicy.pin( // scanned iters+2 times; pin the projection
+      df.select(
+        (key.as("__key") +: cols.zipWithIndex.map { case (c, j) =>
+          col(c).cast("double").as(s"x$j")
+        }): _*)
+        .filter((0 until d).map(j => col(s"x$j").isNotNull).reduce(_ && _))
+        // spread before pinning: the parquet scan yields a handful of
+        // partitions, and the pinned blocks keep that count — every E-step's
+        // exp-heavy pass would otherwise run on that many cores
+        .repartition(df.sparkSession.sparkContext.defaultParallelism))
     val xs = (0 until d).map(j => col(s"x$j"))
 
     // global per-dim variance (rounded 9 — the init replay fence)

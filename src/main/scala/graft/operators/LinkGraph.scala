@@ -235,11 +235,11 @@ object LinkGraph {
     pending.foreach(sub =>
       ArtifactFold.deleteBatchPartition(spark, s"$dir/$sub", batchId))
     // one extraction feeds both aggregates
-    val e = edges.select(srcDomain.cast("string").as("sd"),
-        dstDomain.cast("string").as("dd"),
-        target.cast("string").as("tgt"),
-        anchor.cast("string").as("anchor"))
-      .localCheckpoint()
+    val e = CheckpointPolicy.pin(
+      edges.select(srcDomain.cast("string").as("sd"),
+          dstDomain.cast("string").as("dd"),
+          target.cast("string").as("tgt"),
+          anchor.cast("string").as("anchor")))
     if (pending.contains("edges"))
       e.filter(col("sd") =!= col("dd"))
         .groupBy(col("sd").as("src"), col("dd").as("dst"))

@@ -189,9 +189,9 @@ object Profiling {
     // pinned: the (key, count) frame feeds BOTH the stats aggregate and
     // the TakeOrdered branch — unpinned, the source would be scanned and
     // hash-aggregated twice (the diagnostic's dominant cost, doubled)
-    val counts = df.groupBy(key.cast("string").as("key"))
-      .agg(count(lit(1)).as("cnt"))
-      .localCheckpoint()
+    val counts = CheckpointPolicy.pin(
+      df.groupBy(key.cast("string").as("key"))
+        .agg(count(lit(1)).as("cnt")))
     val stats = counts.agg(sum("cnt").as("total_rows"),
       count(lit(1)).as("n_keys"))
     // NULL keys explicitly last, matching the oracle engine's default —

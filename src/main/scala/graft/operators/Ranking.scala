@@ -19,12 +19,12 @@ object Ranking {
     * partitions (collected counts — ≤ `partitions` scalars).
     *
     * The two passes (counts, numbering) must see identical partition
-    * contents, so the ranged input is pinned with localCheckpoint. */
+    * contents, so the ranged input is pinned ([[CheckpointPolicy.pin]]). */
   def globalRowNumber(df: DataFrame, sortCols: Seq[Column],
                       out: String = "rn", partitions: Int = 32): DataFrame = {
-    val ranged = df.repartitionByRange(partitions, sortCols: _*)
-      .withColumn("__pid", spark_partition_id())
-      .localCheckpoint()
+    val ranged = CheckpointPolicy.pin(
+      df.repartitionByRange(partitions, sortCols: _*)
+        .withColumn("__pid", spark_partition_id()))
     val counts = ranged.groupBy("__pid").agg(count(lit(1)).as("c"))
       .collect().map(r => r.getAs[Int]("__pid") -> r.getAs[Long]("c")).toMap
     val offsets = Array.tabulate(partitions) { p =>
@@ -51,15 +51,15 @@ object Ranking {
                        out: String = "rn", partitions: Int = 32): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    val ranged = df.withColumn("__g", group)
-      // the group's SPARK-rendered string is the join identity on BOTH
-      // sides — collecting the raw value and re-rendering it on the driver
-      // (String.valueOf) can disagree with Spark's cast for timestamps
-      // (timezone) and nulls, silently emptying the join
-      .withColumn("__gs", col("__g").cast("string"))
-      .repartitionByRange(partitions, col("__g") +: sortCols: _*)
-      .withColumn("__pid", spark_partition_id())
-      .localCheckpoint()
+    val ranged = CheckpointPolicy.pin(
+      df.withColumn("__g", group)
+        // the group's SPARK-rendered string is the join identity on BOTH
+        // sides — collecting the raw value and re-rendering it on the driver
+        // (String.valueOf) can disagree with Spark's cast for timestamps
+        // (timezone) and nulls, silently emptying the join
+        .withColumn("__gs", col("__g").cast("string"))
+        .repartitionByRange(partitions, col("__g") +: sortCols: _*)
+        .withColumn("__pid", spark_partition_id()))
     val counts = ranged.groupBy("__pid", "__gs").agg(count(lit(1)).as("c"))
       .collect().map(r => (r.getAs[Int]("__pid"), r.getAs[String]("__gs"),
         r.getAs[Long]("c")))
@@ -88,10 +88,10 @@ object Ranking {
     * `sum(value) over rows ≤ r`. */
   def globalCumSum(df: DataFrame, sortCols: Seq[Column], value: Column,
                    out: String = "cum", partitions: Int = 32): DataFrame = {
-    val ranged = df.repartitionByRange(partitions, sortCols: _*)
-      .withColumn("__v", value.cast("long"))
-      .withColumn("__pid", spark_partition_id())
-      .localCheckpoint()
+    val ranged = CheckpointPolicy.pin(
+      df.repartitionByRange(partitions, sortCols: _*)
+        .withColumn("__v", value.cast("long"))
+        .withColumn("__pid", spark_partition_id()))
     val sums = ranged.groupBy("__pid").agg(sum("__v").as("s"))
       .collect().map(r => r.getAs[Int]("__pid") -> r.getAs[Long]("s")).toMap
     val offsets = Array.tabulate(partitions) { p =>
@@ -113,8 +113,8 @@ object Ranking {
                 out: String = "bucket", partitions: Int = 32): DataFrame = {
     // pinned: the rank window + offsets join would otherwise recompute on
     // BOTH crossJoin branches (the count agg and the projection)
-    val ranked = globalRowNumber(df, value +: tieBreak, out = "__edr",
-      partitions = partitions).localCheckpoint()
+    val ranked = CheckpointPolicy.pin(
+      globalRowNumber(df, value +: tieBreak, out = "__edr", partitions = partitions))
     ranked
       .crossJoin(broadcast(ranked.agg(count(lit(1)).as("__edn"))))
       .withColumn(out, ntileFromRank(col("__edr"), col("__edn"), k))

@@ -265,8 +265,8 @@ object Robots {
     * broadcast while the robots side holds ≤ `broadcastMaxDomains`
     * rows, plain equi-join above — see class doc. The size comes from
     * `robotsSizeHint` when the caller knows it (zero extra jobs), else
-    * from one count over the lazily-pinned parsed frame (the robots
-    * lineage evaluates once; the join reuses the pinned blocks). */
+    * from one count over the pinned parsed frame (the robots lineage
+    * evaluates once; the join reuses the pinned blocks). */
   def verdicts(urls: DataFrame, id: Column, url: Column,
                robots: DataFrame, domainCol: Column, txtCol: Column,
                agent: String,
@@ -282,13 +282,13 @@ object Robots {
       }
       .toDF("domain", "__rules")
     // join-strategy sizing must happen at plan time: a caller-supplied
-    // hint costs nothing; otherwise one count over the LAZILY-pinned
-    // parsed frame, so the robots lineage (source scan + rule parse)
-    // evaluates exactly once and the join reuses the pinned blocks
+    // hint costs nothing; otherwise one count over the pinned parsed
+    // frame, so the robots lineage (source scan + rule parse) evaluates
+    // exactly once and the join reuses the pinned blocks
     val (ruleRows, nRobots) = robotsSizeHint match {
       case Some(n) => (parsed, n)
       case None =>
-        val pinned = parsed.localCheckpoint(false)
+        val pinned = CheckpointPolicy.pin(parsed)
         (pinned, pinned.count())
     }
     val small = nRobots <= broadcastMaxDomains

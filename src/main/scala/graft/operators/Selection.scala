@@ -166,8 +166,8 @@ object Selection {
     // Materialize the k selected rows: otherwise pool' = anti(pool,
     // topK(pool)) embeds the pool plan TWICE, and chained select-and-moves
     // double the logical plan each round (exponential analyzer cost by
-    // iteration 10). localCheckpoint turns the k-row side into a leaf.
-    val selected = topK(pool, score, k, tieBreak).localCheckpoint()
+    // iteration 10). The pin turns the k-row side into a leaf.
+    val selected = CheckpointPolicy.pin(topK(pool, score, k, tieBreak))
     val trainCols = train.columns.filter(_ != "explorer")
     val moved = selected.select(trainCols.map(col).toSeq: _*)
       .withColumn("explorer", lit(explorer))

@@ -57,9 +57,9 @@ object SemDedup {
       vec.cast("array<double>").as("v")).filter(col("v").isNotNull)
     // distinct-vector collapse; feeds the init pull, every Lloyd pass, both
     // sides of the pair join, and the final expansion — checkpoint once
-    val groups = docs.groupBy("v").agg(collect_list("vid").as("ids"))
-      .withColumn("gid", array_min(col("ids")))
-      .localCheckpoint()
+    val groups = CheckpointPolicy.pin(
+      docs.groupBy("v").agg(collect_list("vid").as("ids"))
+        .withColumn("gid", array_min(col("ids"))))
     val initRows = groups
       .select(col("v"), Mixture.portableUniform(col("gid"), salt).as("__u"),
         col("gid"))
@@ -92,8 +92,8 @@ object SemDedup {
         refined(r.getAs[Int]("cell"))(r.getAs[Int]("pos")) = r.getAs[Double]("m"))
       cents = refined
     }
-    val assigned = groups.withColumn("cell", cellOf(col("v")))
-      .localCheckpoint() // feeds both pair-join sides + labels + expansion
+    val assigned = CheckpointPolicy.pin( // feeds both pair-join sides + labels + expansion
+      groups.withColumn("cell", cellOf(col("v"))))
     val pairs = assigned.select(col("cell"), col("gid").as("id_a"), col("v").as("va"))
       .join(assigned.select(col("cell"), col("gid").as("id_b"), col("v").as("vb")),
         Seq("cell"))

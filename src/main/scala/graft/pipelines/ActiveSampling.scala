@@ -2,7 +2,7 @@ package graft.pipelines
 
 import graft.functions.Pdfs
 import graft.ml.{Scorer, ScorerModel}
-import graft.operators.{Integrate, Kde, Selection}
+import graft.operators.{CheckpointPolicy, Integrate, Kde, Selection}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -38,8 +38,8 @@ case class ActiveSamplingConfig(
   * all three, [[Selection.selectAndMoveEach]] — the fusion the reference
   * does by reusing arrays), then refit.
   *
-  * Scale notes: the scored pool is cached per iteration and localCheckpointed
-  * every `checkpointEvery` iterations to cut union+filter lineage growth
+  * Scale notes: the scored pool is cached per iteration and pool and train
+  * are pinned every `checkpointEvery` iterations to cut union+filter lineage growth
   * (SURVEY.md §7 risk list); the explorers' step is one scan collecting
   * 3 candidates per explorer and partition, so iteration cost is O(one
   * pool scan) (measured up to 4M-row pools, see
@@ -51,7 +51,7 @@ object ActiveSampling {
   def run(spark: SparkSession, df: DataFrame, scorer: Scorer,
           cfg: ActiveSamplingConfig = ActiveSamplingConfig()): (DataFrame, Seq[IterationMetrics]) = {
 
-    val pool0 = df.localCheckpoint()
+    val pool0 = CheckpointPolicy.pin(df)
 
     // stage 1-2: KDE density profile of y → inverse-density weighted init
     // sample (reference :34-56)
@@ -76,8 +76,8 @@ object ActiveSampling {
       }
     val init = init0.withColumn("explorer", lit("init"))
 
-    var train = init.localCheckpoint()
-    var pool = Selection.removeById(pool0, train, "id").localCheckpoint()
+    var train = CheckpointPolicy.pin(init)
+    var pool = CheckpointPolicy.pin(Selection.removeById(pool0, train, "id"))
     var model: ScorerModel = scorer.fit(train)
 
     // the true-density grid for the log-pdf-error metric (reference :199-219)
@@ -111,8 +111,8 @@ object ActiveSampling {
       pool = nextPool.drop("pred", "var")
       train = nextTrain
       if (it % cfg.checkpointEvery == 0) {
-        pool = pool.localCheckpoint()
-        train = train.localCheckpoint()
+        pool = CheckpointPolicy.pin(pool)
+        train = CheckpointPolicy.pin(train)
       }
       scored.unpersist()
 
@@ -164,17 +164,17 @@ object ActiveSampling {
     val pred = Pdfs.syntheticLabel(col("x1") * lit(0.9), col("x2") * lit(0.9))
     val vvar = lit(0.05) + lit(0.3) * (col("x1") * col("x1") + col("x2") * col("x2"))
     val u = graft.functions.TextOps.portableUniform52(col("id").cast("string"))
-    val scored = Sources.grid(spark, Domain(Seq((-1.0, 1.0), (-1.0, 1.0))), 50)
-      .withColumn("y", Pdfs.syntheticLabel(col("x1"), col("x2")))
-      .select(col("id"), col("y"), pred.as("pred"), vvar.as("var"), u.as("u"))
-      .withColumn("se", (col("pred") - col("y")) * (col("pred") - col("y")))
-      .withColumn("us", col("var"))
-      .withColumn("lw", col("var") / greatest(dens(col("pred")), lit(1e-12)))
-      .withColumn("es_key", log(col("u")) * dens(col("y")))
-      .localCheckpoint()
-    val init = scored.orderBy(desc("es_key"), col("id")).limit(initK)
-      .select("id").localCheckpoint()
-    var pool = Selection.removeById(scored, init, "id").localCheckpoint()
+    val scored = CheckpointPolicy.pin(
+      Sources.grid(spark, Domain(Seq((-1.0, 1.0), (-1.0, 1.0))), 50)
+        .withColumn("y", Pdfs.syntheticLabel(col("x1"), col("x2")))
+        .select(col("id"), col("y"), pred.as("pred"), vvar.as("var"), u.as("u"))
+        .withColumn("se", (col("pred") - col("y")) * (col("pred") - col("y")))
+        .withColumn("us", col("var"))
+        .withColumn("lw", col("var") / greatest(dens(col("pred")), lit(1e-12)))
+        .withColumn("es_key", log(col("u")) * dens(col("y"))))
+    val init = CheckpointPolicy.pin(
+      scored.orderBy(desc("es_key"), col("id")).limit(initK).select("id"))
+    var pool = CheckpointPolicy.pin(Selection.removeById(scored, init, "id"))
     var train = scored.join(broadcast(init), Seq("id"))
       .withColumn("explorer", lit("init"))
     val picks = Seq.newBuilder[(Long, String, Long, Double)]

@@ -2,7 +2,7 @@ package graft.pipelines
 
 import graft.functions.VectorOps
 import graft.ml.Scorer
-import graft.operators.{Integrate, Kde, Selection, SlidingWindows}
+import graft.operators.{CheckpointPolicy, Integrate, Kde, Selection, SlidingWindows}
 import org.apache.spark.mllib.linalg.{Vectors => MlVectors}
 import org.apache.spark.mllib.linalg.distributed.RowMatrix
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -93,13 +93,13 @@ object SdeForecast {
           seed: Long = 10): (DataFrame, Seq[SdeIteration]) = {
     val series = simulateOU(spark, n, seed = seed)
     val scaled = Integrate.minMaxScale(series, col("y"), "ys")
-    val windows = SlidingWindows.featurizeByIndex(
+    val windows = CheckpointPolicy.pin(SlidingWindows.featurizeByIndex(
       scaled.select(col("idx"), col("ys")), col("idx"), col("ys"),
-      history, pred, blockSize = 65536).localCheckpoint()
+      history, pred, blockSize = 65536))
     val coeffs = podCoefficients(windows, nModes)
-    var train = initSample(windows, coeffs, nModes, initK, seed)
-      .withColumn("explorer", lit("init")).localCheckpoint()
-    var pool = Selection.removeById(windows, train, "win_id").localCheckpoint()
+    var train = CheckpointPolicy.pin(initSample(windows, coeffs, nModes, initK, seed)
+      .withColumn("explorer", lit("init")))
+    var pool = CheckpointPolicy.pin(Selection.removeById(windows, train, "win_id"))
 
     // flatten hist features + ALL pred-horizon labels (y0..y{pred-1})
     val flat = (df: DataFrame) => {
@@ -125,8 +125,8 @@ object SdeForecast {
       val (p2, t2, _) = Selection.selectAndMove(scored, train,
         col("err"), batch, "win_id", s"iter$it", Seq(col("win_id")))
       val mae = scored.agg(avg("err")).head().getDouble(0)
-      pool = p2.drop("err").localCheckpoint()
-      train = t2.localCheckpoint()
+      pool = CheckpointPolicy.pin(p2.drop("err"))
+      train = CheckpointPolicy.pin(t2)
       SdeIteration(it, mae, train.count())
     }
     (train, iters)

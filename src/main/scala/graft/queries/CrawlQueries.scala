@@ -209,8 +209,8 @@ object CrawlQueries {
     // pinned: clean feeds BOTH the keeper election and the join-back —
     // unpinned, the whole WARC-read -> extract -> line-filter chain
     // recomputes per branch (measured ~2x the chain at sf0.1)
-    val clean = QualityRules.c4LineFilter(ext, col("doc_id"), col("text"),
-      minWords = 3, banned = Seq.empty).localCheckpoint()
+    val clean = CheckpointPolicy.pin(QualityRules.c4LineFilter(ext, col("doc_id"),
+      col("text"), minWords = 3, banned = Seq.empty))
     val keepers = clean.groupBy("text_clean")
       .agg(min(col("doc_id")).as("keeper_id"))
     clean.join(keepers, Seq("text_clean"))
@@ -416,16 +416,16 @@ object CrawlQueries {
     * filter, keeper tie — breaks the oracle's closed-form replay. */
   def q160CrawlPipelineV2(s: SparkSession, d: String): DataFrame = {
     val dir = crawlWarcDir(s, d)
-    val recs = WarcSources.readWarc(s, dir)
-      .filter(col("error").isNull && col("record_type") === "response")
-      .select(
-        regexp_extract(col("url"), "/doc/(\\d+)$", 1).cast("long").as("id"),
-        decode(col("content"), "UTF-8").as("html"))
-      .withColumn("curl", plantedUrl(col("id")))
-      // pinned: filterAllowed consumes its input on TWO branches (the
-      // verdict map and the semi-join left side), and the RDD-backed WARC
-      // source has no column pruning — unpinned, the full decode runs twice
-      .localCheckpoint()
+    // pinned: filterAllowed consumes its input on TWO branches (the
+    // verdict map and the semi-join left side), and the RDD-backed WARC
+    // source has no column pruning — unpinned, the full decode runs twice
+    val recs = CheckpointPolicy.pin(
+      WarcSources.readWarc(s, dir)
+        .filter(col("error").isNull && col("record_type") === "response")
+        .select(
+          regexp_extract(col("url"), "/doc/(\\d+)$", 1).cast("long").as("id"),
+          decode(col("content"), "UTF-8").as("html"))
+        .withColumn("curl", plantedUrl(col("id"))))
     val allowed = Robots.filterAllowed(recs, col("id"), col("curl"),
       plantedRobots(s), col("domain"), col("robots_txt"), agent = "GraftBot",
       robotsSizeHint = Some(plantedRobotsTxt.size.toLong))
@@ -437,8 +437,8 @@ object CrawlQueries {
       minWords = 5, maxLinkDensity = 0.33))
     // pinned: clean feeds the keeper election AND the join-back (the
     // q146 convention — the robots/boilerplate chain is the query's cost)
-    val clean = QualityRules.c4LineFilter(cleanDocs, col("doc_id"),
-      col("text_clean"), minWords = 3, banned = Seq.empty).localCheckpoint()
+    val clean = CheckpointPolicy.pin(QualityRules.c4LineFilter(cleanDocs,
+      col("doc_id"), col("text_clean"), minWords = 3, banned = Seq.empty))
     val keepers = clean.groupBy("text_clean")
       .agg(min(col("doc_id")).as("keeper_id"))
     clean.join(keepers, Seq("text_clean"))
@@ -812,19 +812,19 @@ object CrawlQueries {
       .withColumn("curl", plantedUrl(col("id")))
     val adv = q172AdvertisedLocs(s, d)
       .select(col("loc").as("__norm"), lit(1L).as("advertised"))
-    val flagged = recs.withColumn("__norm", Urls.normalizeUrl(col("curl")))
-      .join(adv, Seq("__norm"), "left")
-      .select(col("id"), col("html"), col("curl"),
-        coalesce(col("advertised"), lit(0L)).as("advertised"))
-      // pinned: the q160 convention — filterAllowed reads this twice, and
-      // each unpinned recompute re-pays the WARC decode + sitemap join
-      .localCheckpoint()
+    // pinned: the q160 convention — filterAllowed reads this twice, and
+    // each unpinned recompute re-pays the WARC decode + sitemap join
+    val flagged = CheckpointPolicy.pin(
+      recs.withColumn("__norm", Urls.normalizeUrl(col("curl")))
+        .join(adv, Seq("__norm"), "left")
+        .select(col("id"), col("html"), col("curl"),
+          coalesce(col("advertised"), lit(0L)).as("advertised")))
     val allowed = Robots.filterAllowed(flagged, col("id"), col("curl"),
       plantedRobots(s), col("domain"), col("robots_txt"),
       agent = "GraftBot", robotsSizeHint = Some(plantedRobotsTxt.size.toLong))
     // pinned: feeds the canonical election AND the keeper join-back
-    val kept = Urls.decontaminateByDomain(allowed, col("curl"),
-      Seq("badsite.com")).localCheckpoint()
+    val kept = CheckpointPolicy.pin(
+      Urls.decontaminateByDomain(allowed, col("curl"), Seq("badsite.com")))
     val canon = LinkGraph.canonicalUrls(kept, col("id"), col("curl"),
       col("html"))
     val groups = canon.groupBy("canonical")
@@ -834,16 +834,16 @@ object CrawlQueries {
       .select(col("doc_id").as("__kid"), col("canon_src"),
         col("canonical"), col("n_variants"))
     // pinned: feeds the content stages AND the final attribute join
-    val keeperPages = kept.join(elected, col("id") === col("__kid"))
-      .localCheckpoint()
+    val keeperPages = CheckpointPolicy.pin(
+      kept.join(elected, col("id") === col("__kid")))
     val cleanDocs = Boilerplate.cleanText(Boilerplate.classify(
       Boilerplate.blocks(keeperPages.select(col("id"), col("html")),
         col("id"), col("html")),
       minWords = 5, maxLinkDensity = 0.33))
     // pinned: the q146/q160 convention — clean feeds the keeper election
     // and the join-back; unpinned it recomputes boilerplate + line filter
-    val clean = QualityRules.c4LineFilter(cleanDocs, col("doc_id"),
-      col("text_clean"), minWords = 3, banned = Seq.empty).localCheckpoint()
+    val clean = CheckpointPolicy.pin(QualityRules.c4LineFilter(cleanDocs,
+      col("doc_id"), col("text_clean"), minWords = 3, banned = Seq.empty))
     val keepers = clean.groupBy("text_clean")
       .agg(min(col("doc_id")).as("keeper_id"))
     clean.join(keepers, Seq("text_clean"))
@@ -1236,10 +1236,10 @@ object CrawlQueries {
     // pinned: keyed feeds BOTH the scheduler and the attribute join-back —
     // unpinned, each branch recomputes the full q165 extraction + the PPR
     // trust join (measured ~4 s per recompute at sf0.1)
-    val keyed = endo
-      .withColumn("domain", Urls.registeredDomain(col("url")))
-      .withColumn("wid", row_number().over(w).cast("long"))
-      .localCheckpoint()
+    val keyed = CheckpointPolicy.pin(
+      endo
+        .withColumn("domain", Urls.registeredDomain(col("url")))
+        .withColumn("wid", row_number().over(w).cast("long")))
     Frontier.schedule(keyed, col("wid"), col("url"), q182Robots(s),
         col("domain"), col("robots_txt"), agent = "GraftBot")
       .join(keyed.select(col("wid").as("__w"), col("domain").as("__d"),

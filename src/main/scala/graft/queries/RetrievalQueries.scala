@@ -225,7 +225,7 @@ object RetrievalQueries {
       .select((col("vec_id") + lit(off)).as("vec_id"),
         transform(col("v"), (x, i) =>
           x * (lit(1.0) + lit(0.2) * ((i % 3) - 1).cast("double"))).as("v"))
-    (e.unionByName(planted).localCheckpoint(), off) // feeds LSH + truth
+    (CheckpointPolicy.pin(e.unionByName(planted)), off) // feeds LSH + truth
   }
 
   /** ELIGIBLE planted pairs: (base, twin) whose EXACT cosine clears the
@@ -299,8 +299,8 @@ object RetrievalQueries {
     val (corpus, off) = plantedTwinCorpus(s, d)
     val pairs = Dedup.embeddingNearDupPairs(corpus, col("vec_id"), col("v"),
       threshold = threshold)
+    // clusters' pinned last round: feeds the twin gate AND the base-drop audit
     val labels = Dedup.clusters(pairs, corpus.select(col("vec_id").as("doc_id")))
-      .localCheckpoint() // feeds the twin gate AND the base-drop audit
     val eligibleTwins = plantedTruth(corpus, off, threshold)
       .select(col("id_b").as("doc_id"))
     val t = labels.join(eligibleTwins, Seq("doc_id"))
@@ -398,9 +398,9 @@ object RetrievalQueries {
     val batchDups = twins.filter((col("vec_id") - off) % 20 === 0)
       .select((col("vec_id") + lit(3 * off)).as("vec_id"), col("v")) // = 4·off + base
     val batch = twins.unionByName(copies).unionByName(batchDups)
-    val admit = Dedup.embeddingIncrementalAdmit(batch, history,
-        col("vec_id"), col("v"), threshold = threshold)
-      .localCheckpoint() // feeds the three gate aggregates
+    val admit = CheckpointPolicy.pin( // feeds the three gate aggregates
+      Dedup.embeddingIncrementalAdmit(batch, history,
+          col("vec_id"), col("v"), threshold = threshold))
     val eligible = plantedTruth(corpus, off, threshold)
       .select(col("id_b").as("doc_id"))
     val t = admit.join(eligible, Seq("doc_id"))

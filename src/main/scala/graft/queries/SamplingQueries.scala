@@ -164,11 +164,11 @@ object SamplingQueries {
     * but the plan guard holds every registered query to it). */
   def q33LhsStrata(s: SparkSession, d: String): DataFrame = {
     val n = 64
-    val lhs = Sources.latinHypercube(s, Domain(Seq((0.0, 1.0), (0.0, 1.0))), n, seed = 42)
-      .select(
-        floor(col("x1") * n).cast("long").as("s1"),
-        floor(col("x2") * n).cast("long").as("s2"))
-      .localCheckpoint()
+    val lhs = CheckpointPolicy.pin(
+      Sources.latinHypercube(s, Domain(Seq((0.0, 1.0), (0.0, 1.0))), n, seed = 42)
+        .select(
+          floor(col("x1") * n).cast("long").as("s1"),
+          floor(col("x2") * n).cast("long").as("s2")))
     // per dimension: every stratum [i/n,(i+1)/n) holds exactly one sample
     lhs.agg(count_distinct(col("s1")).as("d1"), count(lit(1)).as("n"))
       .crossJoin(broadcast(lhs.agg(count_distinct(col("s2")).as("d2"))))

@@ -131,16 +131,16 @@ object TextQueries {
     // the intersection into the join CONDITION — 3 interpreted evaluations
     // per pair, ~50x slower; (b) an inverted-index gram join melts down on
     // heavy-hitter trigrams (every common gram contributes |block|^2 rows).
-    val g = Tables.documents(s, d)
-      // normalization materialized BEFORE the n-gram lambda: HOFs are
-      // interpreted, so the regex must not live inside the per-element body
-      .select(col("doc_id"), col("lang"), col("source"),
-        TextOps.normalized(col("text")).as("__t"))
-      .repartition(col("doc_id"))
-      .select(col("doc_id"), col("lang"), col("source"),
-        TextOps.charNGramsHashedFromNormalized(col("__t"), 3).as("g"))
-      .withColumn("n", size(col("g")))
-      .localCheckpoint() // gram sets feed both join sides — compute once
+    val g = CheckpointPolicy.pin( // gram sets feed both join sides — compute once
+      Tables.documents(s, d)
+        // normalization materialized BEFORE the n-gram lambda: HOFs are
+        // interpreted, so the regex must not live inside the per-element body
+        .select(col("doc_id"), col("lang"), col("source"),
+          TextOps.normalized(col("text")).as("__t"))
+        .repartition(col("doc_id"))
+        .select(col("doc_id"), col("lang"), col("source"),
+          TextOps.charNGramsHashedFromNormalized(col("__t"), 3).as("g"))
+        .withColumn("n", size(col("g"))))
     val a = g.select(col("lang"), col("source"), col("doc_id").as("id_a"),
       col("g").as("g_a"), col("n").as("n_a"))
     val b = g.select(col("lang"), col("source"), col("doc_id").as("id_b"),
@@ -315,8 +315,8 @@ object TextQueries {
     * over the same (proven-equal) pair set. */
   def q44DedupClusters(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d)
-    // spark.graft.checkpoint.dir set → every lineage pin in the pair-gen +
-    // clustering loop goes to reliable storage (executor-loss-safe); the
+    // spark.graft.checkpoint.dir set → every lineage pin (here the pair-gen
+    // + clustering loop) goes to reliable storage (executor-loss-safe); the
     // default stays localCheckpoint. CheckpointPolicySpec gates parity.
     val pairs = Dedup.minhashDedupPairs(docs, col("doc_id"), col("text"),
       shingleSize = 3, numHashes = 64, bands = 16, threshold = 0.5)
@@ -426,11 +426,11 @@ object TextQueries {
     * right call while the blocklist fits as rows; this is the shape when
     * it is hundreds of millions of fingerprints (bits stay m/8 bytes). */
   def q60BloomDecontaminate(s: SparkSession, d: String): DataFrame = {
-    val shingled = Tables.documents(s, d)
-      .select(col("doc_id"), TextOps.tokens(col("text")).as("__toks"))
-      .select(col("doc_id"),
-        graft.functions.VectorExprs.hashedWordShingles(col("__toks"), 5).as("sh"))
-      .localCheckpoint() // shared by bench (twice: sizing + verify) + corpus
+    val shingled = CheckpointPolicy.pin( // shared by bench (twice: sizing + verify) + corpus
+      Tables.documents(s, d)
+        .select(col("doc_id"), TextOps.tokens(col("text")).as("__toks"))
+        .select(col("doc_id"),
+          graft.functions.VectorExprs.hashedWordShingles(col("__toks"), 5).as("sh")))
     val bench = shingled.filter(col("doc_id") < 10)
       .select(explode(col("sh")).as("s")).distinct()
     // sizing count: bounded driver action (one long); a production blocklist
@@ -713,8 +713,8 @@ object TextQueries {
     * one explode + semi-join + per-doc aggregate, left-joined back onto
     * the per-doc shingle counts. */
   def q79ContaminationFraction(s: SparkSession, d: String): DataFrame = {
-    val shingled = contaminationShingles(s, d)
-      .localCheckpoint() // feeds the benchmark set AND both corpus branches
+    val shingled = CheckpointPolicy.pin( // feeds the benchmark set AND both corpus branches
+      contaminationShingles(s, d))
     val bench = benchShingleSet(shingled)
     val matched = shingled.filter(col("doc_id") >= 10)
       .select(col("doc_id"), explode(col("sh")).as("s"))

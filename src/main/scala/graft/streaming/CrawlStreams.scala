@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.operators.{Html, WarcSources}
+import graft.operators.{CheckpointPolicy, Html, WarcSources}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -62,11 +62,11 @@ object CrawlStreams {
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val spark = batch.sparkSession
         import spark.implicits._
-        val recs = batch.select(col("path"), col("content"))
-          .as[(String, Array[Byte])]
-          .flatMap { case (p, b) => WarcSources.recordsFromBytes(p, b) }
-          .toDF()
-          .localCheckpoint() // one decode pass feeds both sinks
+        val recs = CheckpointPolicy.pin( // one decode pass feeds both sinks
+          batch.select(col("path"), col("content"))
+            .as[(String, Array[Byte])]
+            .flatMap { case (p, b) => WarcSources.recordsFromBytes(p, b) }
+            .toDF())
         val quarantine = recs.filter(col("error").isNotNull)
           .select(col("file"), col("offset"), col("error"),
             col("content").as("raw"))
@@ -122,21 +122,21 @@ object CrawlStreams {
         val spark = batch.sparkSession
         if (batchId > graft.operators.ArtifactFold.foldedWatermark(
             spark, historyDir)) {
-          val b = graft.operators.LinkGraph.canonicalUrls(batch,
-              col("doc_id"), col("url"), col("html"))
-            .localCheckpoint()
+          val b = CheckpointPolicy.pin(
+            graft.operators.LinkGraph.canonicalUrls(batch,
+                col("doc_id"), col("url"), col("html")))
           val history = loadCanonicalHistory(spark, historyDir,
             excludeBatchId = batchId)
           val keeper = b.groupBy("canonical")
             .agg(org.apache.spark.sql.functions.min(col("doc_id")).as("__k"))
-          val flags = b.join(keeper, Seq("canonical"))
-            .join(history.select(col("canonical")).distinct()
-              .withColumn("__seen", lit(1L)), Seq("canonical"), "left")
-            .select(col("doc_id"), col("canon_src"), col("canonical"),
-              (col("doc_id") === col("__k") && col("__seen").isNull)
-                .cast("long").as("admitted"))
-            .withColumn("batch_id", lit(batchId))
-            .localCheckpoint() // pin BEFORE history mutates beneath the plan
+          val flags = CheckpointPolicy.pin( // pin BEFORE history mutates beneath the plan
+            b.join(keeper, Seq("canonical"))
+              .join(history.select(col("canonical")).distinct()
+                .withColumn("__seen", lit(1L)), Seq("canonical"), "left")
+              .select(col("doc_id"), col("canon_src"), col("canonical"),
+                (col("doc_id") === col("__k") && col("__seen").isNull)
+                  .cast("long").as("admitted"))
+              .withColumn("batch_id", lit(batchId)))
           writePartition(flags, admitDir, batchId)
           writePartition(flags.filter(col("admitted") === 1L)
             .select("doc_id", "canonical", "batch_id"), historyDir, batchId)

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.functions.TextOps
-import graft.operators.Dedup
+import graft.operators.{CheckpointPolicy, Dedup}
 import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
@@ -107,8 +107,8 @@ object DocStreams {
         // batch's own docs would read as "already in history"
         if (batchId > graft.operators.ArtifactFold.foldedWatermark(
             spark, historyDir)) {
-          val b = batch.select(col("doc_id").cast("long").as("doc_id"), col("text"))
-            .localCheckpoint()
+          val b = CheckpointPolicy.pin(
+            batch.select(col("doc_id").cast("long").as("doc_id"), col("text")))
           // foreachBatch is AT-LEAST-ONCE: a crash between the two writes (or
           // after both, before the checkpoint commit) re-runs this batchId.
           // Idempotence: (a) the history visible to a batch EXCLUDES any
@@ -118,10 +118,10 @@ object DocStreams {
           // partition instead of appending duplicates.
           val history = loadHistory(spark, historyDir, excludeBatchId = batchId,
             payload = "text", docsSchema)
-          val flags = Dedup.incrementalAdmit(b, history, col("doc_id"), col("text"),
-            maxHamming = maxHamming)
-            .withColumn("batch_id", lit(batchId))
-            .localCheckpoint() // pin BEFORE history mutates beneath the plan
+          val flags = CheckpointPolicy.pin( // pin BEFORE history mutates beneath the plan
+            Dedup.incrementalAdmit(b, history, col("doc_id"), col("text"),
+              maxHamming = maxHamming)
+              .withColumn("batch_id", lit(batchId)))
           writePartition(flags, admitDir)
           writePartition(
             b.join(flags.filter(col("admitted") === 1L).select("doc_id"), Seq("doc_id"))
@@ -150,9 +150,9 @@ object DocStreams {
     val writer = docs.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val spark = batch.sparkSession
-        val b = batch.select(col("doc_id").cast("long").as("doc_id"),
-            col("embedding").cast("array<double>").as("embedding"))
-          .localCheckpoint()
+        val b = CheckpointPolicy.pin(
+          batch.select(col("doc_id").cast("long").as("doc_id"),
+              col("embedding").cast("array<double>").as("embedding")))
         // empty micro-batches (trigger with no new files) have no dim to
         // infer and nothing to admit — emit nothing, mutate nothing; and
         // replays of compaction-folded batches no-op (the text-loop guard)
@@ -160,11 +160,11 @@ object DocStreams {
             .foldedWatermark(spark, historyDir)) {
           val history = loadHistory(spark, historyDir, excludeBatchId = batchId,
             payload = "embedding", embeddingsSchema)
-          val flags = Dedup.embeddingIncrementalAdmit(b, history,
-              col("doc_id"), col("embedding"), threshold = threshold,
-              tables = tables, planesPerTable = planesPerTable)
-            .withColumn("batch_id", lit(batchId))
-            .localCheckpoint() // pin BEFORE history mutates beneath the plan
+          val flags = CheckpointPolicy.pin( // pin BEFORE history mutates beneath the plan
+            Dedup.embeddingIncrementalAdmit(b, history,
+                col("doc_id"), col("embedding"), threshold = threshold,
+                tables = tables, planesPerTable = planesPerTable)
+              .withColumn("batch_id", lit(batchId)))
           writePartition(flags, admitDir)
           writePartition(
             b.join(flags.filter(col("admitted") === 1L).select("doc_id"), Seq("doc_id"))
@@ -201,17 +201,17 @@ object DocStreams {
         // replays of compaction-folded batches no-op (the admit-loop guard)
         if (batchId > graft.operators.ArtifactFold.foldedWatermark(
             spark, historyDir)) {
-          val b = batch.select(col("doc_id").cast("long").as("doc_id"), col("text"))
-            .localCheckpoint()
+          val b = CheckpointPolicy.pin(
+            batch.select(col("doc_id").cast("long").as("doc_id"), col("text")))
           val history = loadHistoryCounts(spark, historyDir,
             excludeBatchId = batchId, countsSchema)
           val (cleaned, counts) = Dedup.segmentDedupAgainstHistory(b,
             col("doc_id"), TextOps.tokens(coalesce(col("text"), lit(""))),
             history, segLen = segLen, maxDocs = maxDocs)
-          val pinned = cleaned.withColumn("batch_id", lit(batchId))
-            .localCheckpoint() // pin BEFORE history mutates beneath the plan
-          val pinnedCounts = counts.withColumn("batch_id", lit(batchId))
-            .localCheckpoint()
+          val pinned = CheckpointPolicy.pin( // pin BEFORE history mutates beneath the plan
+            cleaned.withColumn("batch_id", lit(batchId)))
+          val pinnedCounts = CheckpointPolicy.pin(
+            counts.withColumn("batch_id", lit(batchId)))
           writePartition(pinned, outDir)
           writePartition(pinnedCounts, historyDir)
         }
@@ -247,12 +247,12 @@ object DocStreams {
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val spark = batch.sparkSession
         val baseline = spark.read.schema(docsSchema).parquet(baselineDir)
-        val d = graft.operators.Profiling.drift(
-            derived(baseline), derived(batch),
-            numeric = Seq("n_tok", "n_chars"), categorical = Seq("lang"),
-            tokens = Some("toks"), bins = bins)
-          .withColumn("batch_id", lit(batchId))
-          .localCheckpoint() // pin before the write re-plans the stream frame
+        val d = CheckpointPolicy.pin( // pin before the write re-plans the stream frame
+          graft.operators.Profiling.drift(
+              derived(baseline), derived(batch),
+              numeric = Seq("n_tok", "n_chars"), categorical = Seq("lang"),
+              tokens = Some("toks"), bins = bins)
+            .withColumn("batch_id", lit(batchId)))
         writePartition(d, outDir)
         ()
       }

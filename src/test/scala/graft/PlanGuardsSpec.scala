@@ -5,6 +5,9 @@ import org.apache.spark.sql.catalyst.plans.logical.{Expand, Window => LogicalWin
 import org.apache.spark.sql.execution.joins.CartesianProductExec
 import org.apache.spark.sql.functions.{col, count_distinct}
 
+import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
+
 /** Plan-shape regression guards: the properties that make queries survive a
   * 100× scale-up are plan properties, not result properties — assert them
   * directly so a refactor can't silently reintroduce a single-task sort or
@@ -94,6 +97,24 @@ class PlanGuardsSpec extends SparkSpec {
       assert(expandNodes(df).isEmpty, s"$name final frame plans an Expand")
       assertNoGlobalWindow(df, name)
     }
+  }
+
+  test("CheckpointPolicy.pin is the only lineage cut in src/main") {
+    // a second pin path would not follow spark.graft.checkpoint.dir.
+    // Strings and comments are blanked first, so only calls match
+    val tq = "\"\"\""
+    val literalOrComment =
+      (s"(?s)$tq.*?$tq" + """|"(?:\\.|[^"\\\n])*"|'(?:\\.|[^'\\\n])'|/\*.*?\*/|//[^\n]*""").r
+    val call = """\.(localCheckpoint|checkpoint)\s*\(""".r
+    val offenders = Files.walk(Paths.get("src/main/scala")).iterator().asScala
+      .filter(p => p.toString.endsWith(".scala") &&
+        p.getFileName.toString != "CheckpointPolicy.scala")
+      .flatMap { p =>
+        val code = literalOrComment.replaceAllIn(Files.readString(p), "\"\"")
+        call.findAllIn(code).map(c => s"$p: $c")
+      }.toSeq
+    assert(offenders.isEmpty,
+      s"${offenders.size} pins bypass CheckpointPolicy.pin: ${offenders.mkString("; ")}")
   }
 
   test("the Expand guard detects a deliberately-bad multi-distinct probe") {

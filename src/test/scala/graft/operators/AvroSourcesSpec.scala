@@ -6,7 +6,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 class AvroSourcesSpec extends SparkSpec {
-  import spark.implicits._
 
   private def tmpDir(): String =
     java.nio.file.Files.createTempDirectory("graft_avro_").toString

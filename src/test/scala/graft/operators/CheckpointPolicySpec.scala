@@ -73,9 +73,10 @@ class CheckpointPolicySpec extends SparkSpec {
     assert(reliableRows == localRows,
       "q44 reliable-mode output diverged from local mode")
     assert(q44Pins.nonEmpty, "q44 made no reliable checkpoint")
-    // queries whose operators take the conf without the query naming it
+    // queries whose operators take the conf without the query naming it,
+    // the active-sampling loop and its select-and-move trace among them
     for (q <- Seq("q123_pagerank", "q121_allpairs_jaccard",
-        "q77_semantic_keepers")) {
+        "q77_semantic_keepers", "q54_bdqa_trace", "q75_active_sampling_trace")) {
       val local = rows(SparkEntry.queries(q)(spark, sf001))
       val (reliable, pins) = withCheckpointDir(dir)(reliablePins(dir) {
         rows(SparkEntry.queries(q)(spark, sf001))

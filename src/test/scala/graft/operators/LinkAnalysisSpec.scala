@@ -363,7 +363,7 @@ class LinkAnalysisSpec extends SparkSpec {
         if (rounds > 0) {
           // one round short of what the peel needs fails identically on
           // both paths; exactly enough rounds succeeds on both
-          val msgs = kCorePaths.map { case (path, cap) =>
+          val msgs = kCorePaths.map { case (_, cap) =>
             intercept[IllegalArgumentException] {
               LinkAnalysis.kCore(df, k, maxRounds = rounds - 1, localMaxEdges = cap)
             }.getMessage

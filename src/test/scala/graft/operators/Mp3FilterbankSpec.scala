@@ -11,7 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class Mp3FilterbankSpec extends AnyFunSuite {
 
-  private def lcg(n: Int, seed: Long = 42L): Array[Double] = {
+  private def lcg(n: Int, seed: Long): Array[Double] = {
     var s = seed
     Array.fill(n) {
       s = s * 6364136223846793005L + 1442695040888963407L

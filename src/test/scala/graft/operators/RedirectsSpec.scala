@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
 /** Gates for pointer-doubling chain resolution: depths, cycle and
   * self-loop masking, over-depth reporting, and the log-round bound. */

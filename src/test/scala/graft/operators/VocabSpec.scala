@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.SparkSpec
-import org.apache.spark.ListenerDrain
 import org.apache.spark.sql.functions._
 
 class VocabSpec extends SparkSpec {
@@ -131,28 +130,16 @@ class VocabSpec extends SparkSpec {
     }.zipWithIndex.map { case (w, i) => (i.toLong, w) }.toDF("doc_id", "text")
     val seqM = Vocab.bpeTrain(many, col("text"), nMerges = 13)
     assert(seqM.size == 13)
-    val sc = spark.sparkContext
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    sc.addSparkListener(listener)
-    try atBothBpeLoops { loop =>
-      ListenerDrain(sc) // earlier runs' job starts land before the reset
-      listener.jobs.set(0)
-      val m = Vocab.bpeTrainBatched(many, col("text"), nMerges = 13, batch = 32)
-      ListenerDrain(sc)
-      val batchedJobs = listener.jobs.get()
+    atBothBpeLoops { loop =>
+      val (m, batchedJobs) = withJobCount(
+        Vocab.bpeTrainBatched(many, col("text"), nMerges = 13, batch = 32))
       assert(m == seqM, s"$loop diverged")
       // sequential training launches ≥ 13 argmax jobs; the distributed
       // batched loop needs the prep pin + one sample, the driver-side
       // loop one collect
       assert(batchedJobs < 8,
         s"$loop: expected batched training to use < 8 jobs, saw $batchedJobs")
-    } finally sc.removeSparkListener(listener)
+    }
   }
 
   test("bpe merge table round-trips through the persisted artifact in order") {

@@ -1,9 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
-import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 class WarcSourcesSpec extends SparkSpec {
   import spark.implicits._

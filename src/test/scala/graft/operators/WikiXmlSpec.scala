@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
 /** Gates for the MediaWiki dump source: record parsing (first-id wins,
   * entity decode, redirect attributes, text forms), quarantine

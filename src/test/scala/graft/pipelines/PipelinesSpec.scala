@@ -89,23 +89,29 @@ class PipelinesSpec extends SparkSpec {
   }
 
   test("tree-ensemble pipelines give the same outputs with members grown on the driver or by spark.ml") {
-    // RunPipelines' scorers; localMaxRows = 0 forces DecisionTreeRegressor
+    // RunPipelines' scorers; localMaxRows = 0 forces DecisionTreeRegressor.
+    // The third run pins every loop frame to reliable storage
     def distributed(s: TreeEnsembleScorer): Scorer = s.fit(_, localMaxRows = 0)
+    val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt_pipes_").toString
     val bdqa = TreeEnsembleScorer(Seq("x1", "x2"), "y", n = 2)
     val cfg = ActiveSamplingConfig(initSize = 40, iterations = 3,
       kdeGridSize = 128, checkpointEvery = 2)
-    val Seq(bdqaLocal, bdqaForced) = Seq(bdqa, distributed(bdqa)).map { s =>
+    def bdqaRun(s: Scorer) = {
       val (train, metrics) = ActiveSampling.run(spark, grid, s, cfg)
       (train.orderBy("id").collect().toSeq, metrics)
     }
-    assert(bdqaLocal == bdqaForced)
+    val bdqaLocal = bdqaRun(bdqa)
+    assert(bdqaRun(distributed(bdqa)) == bdqaLocal)
+    assert(withCheckpointDir(ckpt)(bdqaRun(bdqa)) == bdqaLocal)
     val sde = (lbl: String) => TreeEnsembleScorer((0 until 10).map(i => s"h$i"), lbl, n = 2)
-    val Seq(sdeLocal, sdeForced) = Seq(sde, sde.andThen(distributed)).map { scorerFor =>
+    def sdeRun(scorerFor: String => Scorer) = {
       val (train, iters) = SdeForecast.run(spark, scorerFor, n = 400,
         initK = 30, iterations = 2, batch = 10)
       (train.orderBy("win_id").collect().toSeq, iters)
     }
-    assert(sdeLocal == sdeForced)
+    val sdeLocal = sdeRun(sde)
+    assert(sdeRun(sde.andThen(distributed)) == sdeLocal)
+    assert(withCheckpointDir(ckpt)(sdeRun(sde)) == sdeLocal)
   }
 
   test("OU simulation: length, start value, determinism") {

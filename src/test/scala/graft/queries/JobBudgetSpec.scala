@@ -24,6 +24,16 @@ class JobBudgetSpec extends SparkSpec {
     assert(submitted <= budget, s"q133_kcore submitted $submitted jobs")
   }
 
+  test("q77_semantic_keepers stays in its job budget") {
+    // Dedup.clusters returns its last round's pin, so the query reads the
+    // labels twice without pinning them again (45 when it did)
+    val budget = 44
+    def run(): Unit = SparkEntry.queries("q77_semantic_keepers")(spark, sf001).collect()
+    run() // cold
+    val (_, submitted) = withJobCount(run())
+    assert(submitted <= budget, s"q77_semantic_keepers submitted $submitted jobs")
+  }
+
   test("a tree-ensemble fit under its row cap stays in its job budget") {
     // the capped scan of the training rows: RDD.take reads the first of the
     // checkpoint's 4 partitions, then the other three; both members grow on

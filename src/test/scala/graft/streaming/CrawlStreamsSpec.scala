@@ -8,7 +8,6 @@ import org.apache.spark.sql.functions._
   * across micro-batch seams, WET + raw-HTML extraction in one loop,
   * quarantine isolation, and per-batch partition layout. */
 class CrawlStreamsSpec extends SparkSpec {
-  import spark.implicits._
 
   private val Utf8 = java.nio.charset.StandardCharsets.UTF_8
 

@@ -65,16 +65,22 @@ class DocStreamsSpec extends SparkSpec {
   test("foreachBatchAdmit: streaming loop equals the sequential batch replay " +
        "(full q65 gates incl. near-dup, history accumulates)") {
     val (dir, halves) = stageBatches()
-    val histDir = java.nio.file.Files.createTempDirectory("graft-hist").toString
-    val admitDir = java.nio.file.Files.createTempDirectory("graft-admit").toString
-    val ckDir = java.nio.file.Files.createTempDirectory("graft-ck").toString
-    val q = DocStreams.foreachBatchAdmit(
-      DocStreams.readDocs(spark, dir, maxFilesPerTrigger = Some(1)),
-      histDir, admitDir, maxHamming = 7, checkpointDir = Some(ckDir))
-    try q.processAllAvailable() finally q.stop()
-
-    val got = spark.read.parquet(admitDir)
-      .select("doc_id", "exact_hist", "exact_batch", "near_hist", "admitted")
+    // (verdicts, history rows) of one streamed run over fresh dirs
+    def stream(): (DataFrame, Long) = {
+      val histDir = java.nio.file.Files.createTempDirectory("graft-hist").toString
+      val admitDir = java.nio.file.Files.createTempDirectory("graft-admit").toString
+      val ckDir = java.nio.file.Files.createTempDirectory("graft-ck").toString
+      val q = DocStreams.foreachBatchAdmit(
+        DocStreams.readDocs(spark, dir, maxFilesPerTrigger = Some(1)),
+        histDir, admitDir, maxHamming = 7, checkpointDir = Some(ckDir))
+      try q.processAllAvailable() finally q.stop()
+      (spark.read.parquet(admitDir)
+        .select("doc_id", "exact_hist", "exact_batch", "near_hist", "admitted"),
+        spark.read.parquet(histDir).count())
+    }
+    // at the default pins, then with every pin checkpointing reliably
+    val pinDir = java.nio.file.Files.createTempDirectory("graft-pins").toString
+    val runs = Seq(stream(), withCheckpointDir(pinDir)(stream()))
 
     // sequential batch replay of the same three ingests
     val empty = spark.createDataFrame(
@@ -92,14 +98,15 @@ class DocStreamsSpec extends SparkSpec {
     val exp = expect.get
       .select("doc_id", "exact_hist", "exact_batch", "near_hist", "admitted")
 
-    assert(got.count() == 770)
-    assert(got.exceptAll(exp).count() == 0, "stream/batch gate mismatch")
-    assert(exp.exceptAll(got).count() == 0)
-    // history holds exactly the admitted docs
-    assert(spark.read.parquet(histDir).count() ==
-      exp.filter(col("admitted") === 1L).count())
-    // the planted batch exercises both dup-rejection paths
-    assert(got.filter(col("admitted") === 0).count() >= 270)
+    for ((got, nHist) <- runs) {
+      assert(got.count() == 770)
+      assert(got.exceptAll(exp).count() == 0, "stream/batch gate mismatch")
+      assert(exp.exceptAll(got).count() == 0)
+      // history holds exactly the admitted docs
+      assert(nHist == exp.filter(col("admitted") === 1L).count())
+      // the planted batch exercises both dup-rejection paths
+      assert(got.filter(col("admitted") === 0).count() >= 270)
+    }
   }
 
   test("foreachBatchDrift: per-batch drift tables equal the batch monitor " +
@@ -317,7 +324,7 @@ class DocStreamsSpec extends SparkSpec {
           hist.unionByName(counts).localCheckpoint())
     }
     assert(got.count() == 5)
-    assert(got.exceptAll(exp.get.select(got.columns.map(col): _*)).count() == 0,
+    assert(got.exceptAll(exp.get.select(got.columns.toSeq.map(col): _*)).count() == 0,
       "stream/batch segment-dedup mismatch")
     // cross-batch semantics: doc 10 loses the [a b c] segment seen in
     // batch 1; doc 20 (copy of doc 11) loses BOTH its segments
