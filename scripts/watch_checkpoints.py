@@ -13,8 +13,11 @@ Usage (start before Verify, on an empty or fresh <dir>):
   scripts/run_class.sh -Dspark.graft.checkpoint.dir=<dir> graft.Verify \
       <sfDir> <outDir> 2> <verify.err>
 
-Stops once <verify.err> ends with `exit <code>` (append it after Verify
-returns) and writes {query: [rdd dirs]} plus totals to <out.json>.
+Stops once <verify.err> ends with an `exit <code>` line written after the
+watcher started (append it after Verify returns) and writes
+{query: [rdd dirs]} plus totals to <out.json>. What the log held at start,
+an earlier run's `exit` line included, is ignored, unless Verify's `2>`
+has since truncated the log.
 """
 import ctypes
 import json
@@ -28,25 +31,44 @@ IN_CREATE, IN_ISDIR = 0x100, 0x40000000
 libc = ctypes.CDLL(None, use_errno=True)
 
 
-def current_query(err_path):
+def log_size(err_path):
     try:
-        with open(err_path, errors="replace") as f:
-            lines = f.read().splitlines()
+        return os.path.getsize(err_path)
     except FileNotFoundError:
-        return None, False
-    starts = [l.split()[-1] for l in lines if l.startswith("[verify] start ")]
-    finished = bool(lines) and lines[-1].startswith("exit ")
-    return (starts[-1] if starts else None), finished
+        return 0
+
+
+class Log:
+    """The part of <verify.err> written since the watcher started."""
+
+    def __init__(self, path):
+        self.path, self.start = path, log_size(path)
+
+    def current_query(self):
+        try:
+            with open(self.path, "rb") as f:
+                data = f.read()
+        except FileNotFoundError:
+            return None, False
+        if len(data) < self.start:
+            self.start = 0  # truncated by a new run: all of it is new
+        # a line counts when it ends past the recorded size
+        keep = data.rfind(b"\n", 0, self.start) + 1 if self.start else 0
+        lines = data[keep:].decode(errors="replace").splitlines()
+        starts = [l.split()[-1] for l in lines if l.startswith("[verify] start ")]
+        finished = bool(lines) and lines[-1].startswith("exit ") and len(data) > self.start
+        return (starts[-1] if starts else None), finished
 
 
 def main(ckpt_dir, err_path, out_json):
+    log = Log(err_path)
     os.makedirs(ckpt_dir, exist_ok=True)
     fd = libc.inotify_init()
     wds = {libc.inotify_add_watch(fd, ckpt_dir.encode(), IN_CREATE): ckpt_dir}
     by_query, roots = {}, []
     while True:
         ready, _, _ = select.select([fd], [], [], 1.0)
-        query, finished = current_query(err_path)
+        query, finished = log.current_query()
         if not ready:
             if finished:
                 break

@@ -26,6 +26,19 @@ object Integrate {
       .agg(sum("__seg").cast("double").as("integral"))
   }
 
+  /** [[trapz]] over points the driver holds, `x` ascending: the same
+    * segments summed in the same order from 0.0, so the frame form's value
+    * to the bit (0.0 below two points, where the frame's sum is null). */
+  def trapz(x: Array[Double], y: Array[Double]): Double = {
+    var s = 0.0
+    var i = 1
+    while (i < x.length) {
+      s += (y(i) + y(i - 1)) / 2.0 * (x(i) - x(i - 1))
+      i += 1
+    }
+    s
+  }
+
   /** Trapezoidal integration over a series carrying a DENSE integer index
     * (consecutive values, e.g. `events.event_id`): adjacent points pair via
     * a self equi-join on `idx = idx − 1` instead of a global window — fully

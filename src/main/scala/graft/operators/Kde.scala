@@ -1,6 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, Row}
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 
@@ -46,7 +48,7 @@ class KdeAggregator(val gridMin: Double, val gridMax: Double,
       val hi = math.min(gridSize - 1, math.floor((in.v + cut * bandwidth - gridMin) / step).toInt)
       // A row whose support misses the grid entirely (hi < lo) contributes
       // no density mass — it must not count toward the normalizing total
-      // either, matching fitBinned's in-bounds filter; otherwise exact=true
+      // either, matching the binned fit's in-bounds filter; otherwise exact=true
       // and the binned default disagree under caller-narrowed bounds.
       if (hi >= lo) {
         var i = lo
@@ -107,11 +109,12 @@ case class KdeResult(gridMin: Double, gridMax: Double, gridSize: Int,
   def derivative(y: Column): Column =
     Interp.derivativeUniform(y, gridMin, step, pdf)
 
-  /** Driver-side scalar interpolation (same semantics as [[interpolate]]). */
+  /** Driver-side scalar interpolation: [[interpolate]]'s arithmetic, so
+    * the same value to the bit. */
   def interpolateValue(y: Double): Double = {
     val pos = (y - gridMin) / step
-    val idx = math.min(math.max(math.floor(pos).toInt, 0), gridSize - 2)
-    val frac = math.min(math.max(pos - idx, 0.0), 1.0)
+    val idx = math.min(math.max(math.floor(pos).toLong.toInt, 0), pdf.length - 2)
+    val frac = Kde.least(Kde.greatest(pos - idx.toDouble, 0.0), 1.0)
     pdf(idx) + (pdf(idx + 1) - pdf(idx)) * frac
   }
 }
@@ -123,79 +126,163 @@ object Kde {
     * estimate is degenerate and floor 1e-8. Weighted case uses effective
     * sample size neff = (sum w)^2 / sum w^2 as gaussian_kde does. */
   def scottBandwidth(df: DataFrame, value: Column, weight: Column = lit(1.0)): Double =
-    scott(df.select(scottSums(value, weight): _*).head())
+    scan(df, value, weight).scott
 
-  /** The four weighted sums Scott's rule reads (sw, sw2, swv, swv2). */
-  private def scottSums(value: Column, weight: Column): Seq[Column] = Seq(
-    sum(weight).as("sw"), sum(weight * weight).as("sw2"),
-    sum(weight * value).as("swv"), sum(weight * value * value).as("swv2"))
-
-  /** Scott's rule from a row whose first four fields are [[scottSums]]. */
-  private def scott(r: Row): Double = {
-    val sw = r.getDouble(0); val sw2 = r.getDouble(1)
+  /** Scott's rule from the four weighted sums (sw, sw2, swv, swv2). */
+  def scott(sums: Array[Double]): Double = {
+    val sw = sums(0); val sw2 = sums(1)
     if (sw <= 0 || sw2 <= 0) return 1.0
-    val mean = r.getDouble(2) / sw
-    val varW = r.getDouble(3) / sw - mean * mean
+    val mean = sums(2) / sw
+    val varW = sums(3) / sw - mean * mean
     val neff = sw * sw / sw2
     val bw = if (varW > 0 && neff > 0) math.sqrt(varW) * math.pow(neff, -0.2) else 1.0
     math.max(if (bw.isNaN || bw <= 0) 1.0 else bw, 1e-8)
   }
 
+  /** Spark's `greatest(a, b)` and `least(a, b)` on doubles: the first
+    * argument unless the second orders strictly after (before) it, NaN
+    * above every number and -0.0 equal to 0.0. */
+  def greatest(a: Double, b: Double): Double = if (compareDoubles(b, a) > 0) b else a
+  def least(a: Double, b: Double): Double = if (compareDoubles(b, a) < 0) b else a
+
+  /** One partition's share of a KDE fit, summed as Spark's aggregates sum
+    * it: every row counted; Scott's four weighted sums `sum(w)`,
+    * `sum(w*w)`, `sum(w*v)`, `sum(w*v*v)` (nulls skipped); the value range
+    * (Spark's `min`/`max`: NaN above every number); and, with `bounds`,
+    * the linear-binned weight totals of the rows with a non-NaN value in
+    * bounds and a weight above 0 — each row splits its weight between the
+    * two grid points flanking its value (exactly FFTKDE's linear binning).
+    * The bins depend on the bounds only, never on the bandwidth, so one
+    * pass serves Scott's rule and the binning at once.
+    *
+    * Each sum folds from 0.0 in row order, and [[merge]] folds partitions
+    * in partition order, the order in which a shuffle hands Spark's
+    * partial aggregates to the final one: every total equals the Catalyst
+    * aggregate's to the bit (`KdeSpec` checks the binning against the
+    * explode/`groupBy` form it replaced). */
+  final class Partial(gridSize: Int, bounds: Option[(Double, Double)])
+      extends Serializable {
+    require(gridSize > 1, "gridSize must be > 1")
+    var rows = 0L
+    val sums = new Array[Double](4)
+    // least(NaN, x) and greatest(-Inf, x) are x: the aggregates' null start
+    var min = Double.NaN
+    var max = Double.NegativeInfinity
+    val bins: Array[Double] = if (bounds.isEmpty) null else new Array[Double](gridSize)
+    private val lo = bounds.fold(0.0)(_._1)
+    private val hi = bounds.fold(0.0)(_._2)
+    private val step = (hi - lo) / (gridSize - 1)
+
+    /** Adds one row whose double value is at `v` and weight at `w`. */
+    def add(r: InternalRow, v: Int, w: Int): Unit = {
+      rows += 1
+      val hasV = !r.isNullAt(v)
+      val x = if (hasV) r.getDouble(v) else 0.0
+      if (hasV) { min = least(min, x); max = greatest(max, x) }
+      if (!r.isNullAt(w)) {
+        val wt = r.getDouble(w)
+        sums(0) += wt
+        sums(1) += wt * wt
+        if (hasV) {
+          sums(2) += wt * x
+          sums(3) += wt * x * x
+          if (bins != null && !x.isNaN && compareDoubles(wt, 0.0) > 0 &&
+              compareDoubles(x, lo) >= 0 && compareDoubles(x, hi) <= 0) {
+            val pos = (x - lo) / step
+            val i0 = math.min(math.max(math.floor(pos).toLong.toInt, 0), gridSize - 1)
+            val frac = least(greatest(pos - i0.toDouble, 0.0), 1.0)
+            bins(i0) += wt * (1.0 - frac)
+            bins(math.min(i0 + 1, gridSize - 1)) += wt * frac
+          }
+        }
+      }
+    }
+
+    /** Adds `o`, the next partition's partial, into this one. */
+    def merge(o: Partial): Partial = {
+      rows += o.rows
+      var i = 0
+      while (i < 4) { sums(i) += o.sums(i); i += 1 }
+      min = least(min, o.min)
+      max = greatest(max, o.max)
+      if (bins != null) {
+        i = 0
+        while (i < gridSize) { bins(i) += o.bins(i); i += 1 }
+      }
+      this
+    }
+
+    def scott: Double = Kde.scott(sums)
+
+    /** The auto grid, [min - 3bw, max + 3bw] (the padding the reference
+      * inherits from FFTKDE). */
+    def paddedRange(bw: Double): (Double, Double) = (min - 3 * bw, max + 3 * bw)
+
+    /** The binned density over `bounds` (Scott's rule without a bandwidth). */
+    def result(bandwidth: Option[Double]): KdeResult = {
+      require(bins != null, "a KDE partial without bounds holds no bins")
+      fromBins(bins, lo, hi, bandwidth.getOrElse(scott))
+    }
+  }
+
+  /** Partials of `value` weighted by `weight` over `df`, merged in
+    * partition order: one job. */
+  def scan(df: DataFrame, value: Column, weight: Column = lit(1.0), gridSize: Int = 1024,
+           bounds: Option[(Double, Double)] = None): Partial =
+    PlanOps.foldPartitions(df.select(value.cast("double"), weight.cast("double"))) { rows =>
+      val p = new Partial(gridSize, bounds)
+      rows.foreach(p.add(_, 0, 1))
+      p
+    }.foldLeft(new Partial(gridSize, bounds))(_ merge _)
+
   /** Fit a weighted KDE over `value`, returning the grid + density.
-    * Two passes: one tiny stats aggregate for bandwidth and grid bounds
-    * (skipped when the caller gives both), then one binning pass.
     * `bandwidth=None` → Scott's rule; `bounds=None` → [min - 3bw,
     * max + 3bw] (the auto-grid padding the reference inherits from FFTKDE).
     *
-    * Default method is BINNED (linear binning to the grid + driver-side
-    * kernel convolution over ≤ gridSize bins) — the same
-    * approximation FFTKDE itself makes (`utils.py:120`), and on Spark it
-    * replaces the per-row O(grid) object aggregate with a codegen'd
-    * groupBy over ≤ gridSize+1 keys: a full scan + a ≤1024-row shuffle at
-    * any data size. Set `exact=true` for the direct [[KdeAggregator]]. */
+    * Default method is BINNED ([[Partial]]: linear binning to the grid in
+    * a per-partition fold, then the driver's kernel convolution over the
+    * gridSize bins, [[fromBins]]) — the same approximation FFTKDE itself
+    * makes (`utils.py:120`). With bounds given it is ONE pass, one job,
+    * which also sums Scott's rule; without, a stats pass (Scott's sums and
+    * the range) comes first. Set `exact=true` for the direct
+    * [[KdeAggregator]]. */
   def fit(df: DataFrame, value: Column, weight: Column = lit(1.0),
           gridSize: Int = 1024, bandwidth: Option[Double] = None,
           bounds: Option[(Double, Double)] = None,
-          exact: Boolean = false): KdeResult = {
-    // one stats row serves whichever of bandwidth and bounds the caller
-    // leaves to the data; no round trip when both are given
-    lazy val r = df.select(scottSums(value, weight) ++
-      Seq(min(value), max(value)): _*).head()
-    val bw = bandwidth.getOrElse(scott(r))
-    val (lo, hi) = bounds.getOrElse((r.getDouble(4) - 3 * bw, r.getDouble(5) + 3 * bw))
+          exact: Boolean = false): KdeResult =
     if (exact) {
+      // one stats pass serves whichever of bandwidth and bounds the caller
+      // leaves to the data; none when both are given
+      lazy val stats = scan(df, value, weight, gridSize)
+      val bw = bandwidth.getOrElse(stats.scott)
+      val (lo, hi) = bounds.getOrElse(stats.paddedRange(bw))
       val agg = new KdeAggregator(lo, hi, gridSize, bw)
       val c = udaf(agg, Encoders.product[KdeIn])
         .apply(value.cast("double"), weight.cast("double"))
       val pdf = df.select(c.as("pdf")).head().getSeq[Double](0).toArray
       KdeResult(lo, hi, gridSize, bw, pdf)
-    } else {
-      fitBinned(df, value, weight, gridSize, bw, lo, hi)
-    }
+    } else fitCounted(df, value, weight, gridSize, bandwidth, bounds)._1
+
+  /** The binned [[fit]] and the number of rows of `df` it read. */
+  def fitCounted(df: DataFrame, value: Column, weight: Column = lit(1.0),
+                 gridSize: Int = 1024, bandwidth: Option[Double] = None,
+                 bounds: Option[(Double, Double)] = None): (KdeResult, Long) = {
+    val first = scan(df, value, weight, gridSize, bounds)
+    val kde =
+      if (bounds.nonEmpty) first.result(bandwidth)
+      else {
+        val bw = bandwidth.getOrElse(first.scott)
+        scan(df, value, weight, gridSize, Some(first.paddedRange(bw))).result(Some(bw))
+      }
+    (kde, first.rows)
   }
 
-  /** Linear binning + driver convolution. Each row splits its weight between
-    * the two grid points flanking its value (exactly FFTKDE's linear
-    * binning); bin totals come back as ≤ gridSize+1 rows; the Gaussian
-    * smoothing is an O(grid × support) loop on the driver. */
-  private def fitBinned(df: DataFrame, value: Column, weight: Column,
-                        gridSize: Int, bw: Double, lo: Double, hi: Double): KdeResult = {
+  /** The density of binned weights over [lo, hi]: bins normalised by their
+    * total, each smoothed by the Gaussian kernel within 8.5 bandwidths —
+    * an O(grid × support) loop on the driver. */
+  def fromBins(bins: Array[Double], lo: Double, hi: Double, bw: Double): KdeResult = {
+    val gridSize = bins.length
     val step = (hi - lo) / (gridSize - 1)
-    val v = value.cast("double")
-    val w = weight.cast("double")
-    val pos = (v - lit(lo)) / lit(step)
-    val i0 = least(greatest(floor(pos).cast("int"), lit(0)), lit(gridSize - 1))
-    val frac = least(greatest(pos - i0.cast("double"), lit(0.0)), lit(1.0))
-    val pairs = df
-      .filter(v.isNotNull && !isnan(v) && w > 0)
-      .filter(v >= lit(lo) && v <= lit(hi))
-      .select(explode(array(
-        struct(i0.as("bin"), (w * (lit(1.0) - frac)).as("bw")),
-        struct(least(i0 + 1, lit(gridSize - 1)).as("bin"), (w * frac).as("bw")))).as("p"))
-      .groupBy(col("p.bin").as("bin")).agg(sum(col("p.bw")).as("wsum"))
-      .collect()
-    val bins = new Array[Double](gridSize)
-    pairs.foreach(r => bins(r.getAs[Int]("bin")) += r.getAs[Double]("wsum"))
     val total = bins.sum
     val pdf = new Array[Double](gridSize)
     if (total > 0) {

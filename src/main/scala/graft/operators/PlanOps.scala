@@ -1,7 +1,10 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
+
+import scala.reflect.ClassTag
 
 /** Plan-shaping helpers. */
 object PlanOps {
@@ -75,6 +78,12 @@ object PlanOps {
   def pinPairScore(df: DataFrame, keys: Seq[String], scoreCol: String): DataFrame =
     df.groupBy(keys.map(col): _*)
       .agg(max(col(scoreCol)).as(scoreCol))
+
+  /** `fold` of each partition's rows of `df`, in ONE job, returned in
+    * partition order. The rows are Spark's internal rows, which the scan
+    * reuses: copy one to keep it. */
+  def foldPartitions[A: ClassTag](df: DataFrame)(fold: Iterator[InternalRow] => A): Array[A] =
+    df.sparkSession.sparkContext.runJob(df.queryExecution.toRdd, fold)
 
   /** `df`'s rows when there are at most `cap` of them, None past the cap
     * — the size test of the driver-side loops ([[WordPiece.train]],

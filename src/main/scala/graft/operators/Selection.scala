@@ -204,8 +204,7 @@ object Selection {
     val cands = pool.select((col(idCol).cast("long") +:
       explorers.map(_._2.cast("double"))) ++ trainCols.map(col): _*)
     val ranks = (1 to n).map(rankBy)
-    val perPart = cands.queryExecution.toRdd
-      .mapPartitions(rows => Iterator(keepBest(rows, ranks, n))).collect()
+    val perPart = PlanOps.foldPartitions(cands)(keepBest(_, ranks, n))
     val toRow = CatalystTypeConverters.createToScalaConverter(cands.schema)
     val taken = scala.collection.mutable.Set.empty[Long]
     val moved = explorers.indices.flatMap { e =>

@@ -2,8 +2,9 @@ package graft.pipelines
 
 import graft.functions.Pdfs
 import graft.ml.{Scorer, ScorerModel}
-import graft.operators.{CheckpointPolicy, Integrate, Kde, Selection}
+import graft.operators.{CheckpointPolicy, Integrate, Kde, KdeResult, PlanOps, Selection}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 
 /** Per-iteration convergence metrics — the reference's measurement stage
@@ -40,22 +41,31 @@ case class ActiveSamplingConfig(
   *
   * Scale notes: the scored pool is cached per iteration and pool and train
   * are pinned every `checkpointEvery` iterations to cut union+filter lineage growth
-  * (SURVEY.md §7 risk list); the explorers' step is one scan collecting
-  * 3 candidates per explorer and partition, so iteration cost is O(one
-  * pool scan) (measured up to 4M-row pools, see
-  * [[Selection.selectAndMoveEach]]).
+  * (SURVEY.md §7 risk list). An iteration reads the scored pool in ONE pass
+  * ([[passOver]]: the convergence sums, the row count, Scott's sums and the
+  * pred-KDE's bins together) and once more for the explorers' step (3
+  * candidates per explorer and partition), so its cost is O(two pool
+  * scans) (the explorers' step is measured up to 4M-row pools, see
+  * [[Selection.selectAndMoveEach]]). With the scorer's capped fit scan that
+  * is 3 Spark jobs per iteration, 5 when it pins.
   */
 object ActiveSampling {
 
-  /** df must carry: id (long, unique), feature columns, y (double). */
+  /** df must carry: id (long, unique), feature columns, y (double).
+    * Each iteration reads the scored pool in one pass for all of its
+    * metrics and the pred-KDE ([[passOver]]), integrates the log-pdf error
+    * on the driver ([[logPdfError]]) and takes the train and pool sizes
+    * from arithmetic: the pool counted once by the y-KDE's stats pass, the
+    * picks known on the driver. */
   def run(spark: SparkSession, df: DataFrame, scorer: Scorer,
           cfg: ActiveSamplingConfig = ActiveSamplingConfig()): (DataFrame, Seq[IterationMetrics]) = {
 
     val pool0 = CheckpointPolicy.pin(df)
 
     // stage 1-2: KDE density profile of y → inverse-density weighted init
-    // sample (reference :34-56)
-    val yKde = Kde.fit(pool0, col("y"), gridSize = cfg.kdeGridSize,
+    // sample (reference :34-56); the KDE's stats pass also counts the pool,
+    // and the sample takes min(initSize, rows) of it
+    val (yKde, pool0Rows) = Kde.fitCounted(pool0, col("y"), gridSize = cfg.kdeGridSize,
       bandwidth = cfg.kdeBandwidth)
     val init0 =
       if (cfg.portableInitSample) {
@@ -79,6 +89,7 @@ object ActiveSampling {
     var train = CheckpointPolicy.pin(init)
     var pool = CheckpointPolicy.pin(Selection.removeById(pool0, train, "id"))
     var model: ScorerModel = scorer.fit(train)
+    var trainSize = math.min(cfg.initSize.toLong, pool0Rows)
 
     // the true-density grid for the log-pdf-error metric (reference :199-219)
     val trueKde = yKde
@@ -86,27 +97,21 @@ object ActiveSampling {
     val metrics = (1 to cfg.iterations).map { it =>
       val scored = model.score(pool).cache()
 
-      // 4a: convergence metrics over the full scored pool (reference :186-219)
-      val m = scored.agg(
-        avg(pow(col("pred") - col("y"), 2)).as("mse"),
-        avg(col("var")).as("mvar")).head()
-      val predKde = Kde.fit(scored, col("pred"), gridSize = cfg.kdeGridSize,
-        bandwidth = cfg.kdeBandwidth,
-        bounds = Some((trueKde.gridMin, trueKde.gridMax)))
-      val gridDf = trueKde.toDF(spark).withColumnRenamed("pdf", "p_true")
-        .withColumn("p_pred", predKde.interpolate(col("grid_x")))
-      val logDiff = gridDf.select(col("grid_x"),
-        abs(Pdfs.clipLower(log(greatest(col("p_pred"), lit(1e-300))), cfg.logPdfClip) -
-            Pdfs.clipLower(log(greatest(col("p_true"), lit(1e-300))), cfg.logPdfClip)).as("d"))
-        .filter(Pdfs.isFinite(col("d")))
-      val logPdfErr = Integrate.trapz(logDiff, col("grid_x"), col("d"))
-        .head().getDouble(0)
+      // 4a: convergence metrics over the full scored pool (reference
+      // :186-219), all from one pass
+      val pass = passOver(scored, cfg.kdeGridSize, (trueKde.gridMin, trueKde.gridMax))
+      val predKde = pass.kde.result(cfg.kdeBandwidth)
+      val logPdfErr = logPdfError(trueKde, predKde, cfg.logPdfClip)
 
       // 4b-4d: three explorers off the same scored scan (reference :222-269)
       val usLwScore = (lit(1.0) / greatest(predKde.interpolate(col("pred")), lit(1e-12))) * col("var")
-      val (nextPool, nextTrain, _) = Selection.selectAndMoveEach(scored, train,
+      val (nextPool, nextTrain, moved) = Selection.selectAndMoveEach(scored, train,
         Seq("se" -> pow(col("pred") - col("y"), 2), "us" -> col("var"),
           "us_lw" -> usLwScore), "id")
+      // the moved rows are a driver-side leaf: collecting them runs no job
+      val movedIds = moved.select("id").collect()
+      trainSize += movedIds.length
+      val poolSize = pass.kde.rows - movedIds.filterNot(_.isNullAt(0)).map(_.getLong(0)).distinct.length
 
       pool = nextPool.drop("pred", "var")
       train = nextTrain
@@ -119,11 +124,68 @@ object ActiveSampling {
       // 4e: refit on the grown train set (reference :271-273)
       model = scorer.fit(train)
 
-      IterationMetrics(it, m.getDouble(0), m.getDouble(1), logPdfErr,
-        train.count(), pool.count())
+      IterationMetrics(it, pass.mse, pass.meanVar, logPdfErr, trainSize, poolSize)
     }
 
     (train, metrics)
+  }
+
+  /** One iteration's reading of the scored pool: `avg(pow(pred - y, 2))`,
+    * `avg(var)` and the pred-KDE's [[Kde.Partial]] over `bounds`. */
+  private[pipelines] final class Pass(gridSize: Int, bounds: (Double, Double))
+      extends Serializable {
+    val kde = new Kde.Partial(gridSize, Some(bounds))
+    private var se, variance = 0.0
+    private var seRows, varRows = 0L
+
+    /** Adds one (pred, 1.0, y, var) row. */
+    def add(r: InternalRow): Unit = {
+      kde.add(r, 0, 1)
+      if (!r.isNullAt(0) && !r.isNullAt(2)) {
+        se += StrictMath.pow(r.getDouble(0) - r.getDouble(2), 2.0)
+        seRows += 1
+      }
+      if (!r.isNullAt(3)) { variance += r.getDouble(3); varRows += 1 }
+    }
+
+    def merge(o: Pass): Pass = {
+      kde.merge(o.kde)
+      se += o.se; seRows += o.seRows
+      variance += o.variance; varRows += o.varRows
+      this
+    }
+
+    def mse: Double = se / seRows.toDouble
+    def meanVar: Double = variance / varRows.toDouble
+  }
+
+  /** The iteration's one job over the (cached) scored pool: each partition
+    * folds its rows from 0.0 in row order, and the driver merges the
+    * partitions in partition order — the order of Spark's partial and
+    * final aggregates — so every metric equals the Catalyst aggregate's to
+    * the bit (`pow` is `StrictMath.pow`, as Spark's codegen calls it). */
+  private[pipelines] def passOver(scored: DataFrame, gridSize: Int,
+                                  bounds: (Double, Double)): Pass =
+    PlanOps.foldPartitions(scored.select(col("pred"), lit(1.0), col("y"), col("var"))) { rows =>
+      val p = new Pass(gridSize, bounds)
+      rows.foreach(p.add)
+      p
+    }.foldLeft(new Pass(gridSize, bounds))(_ merge _)
+
+  /** The reference's log-pdf error (:199-219): the trapezoid integral over
+    * the true KDE's grid of |clip(log p_pred) − clip(log p_true)|, p_pred
+    * interpolated at each grid point, non-finite differences dropped. On
+    * the driver over the two pdf arrays, in Spark's arithmetic (`log` is
+    * `StrictMath.log`; `greatest` keeps its first argument on ties), so
+    * the value is the grid frame's through [[Integrate.trapz]] to the bit. */
+  private[pipelines] def logPdfError(trueKde: KdeResult, predKde: KdeResult,
+                                     clip: Double): Double = {
+    def clipLog(p: Double): Double =
+      Kde.greatest(clip, StrictMath.log(Kde.greatest(p, 1e-300)))
+    val pts = trueKde.gridX.zip(trueKde.pdf).map { case (x, pTrue) =>
+      (x, math.abs(clipLog(predKde.interpolateValue(x)) - clipLog(pTrue)))
+    }.filter { case (_, d) => !d.isNaN && !d.isInfinite }
+    Integrate.trapz(pts.map(_._1), pts.map(_._2))
   }
 
   /** Metrics as a DataFrame (the reference's convergence-curve output,

@@ -100,6 +100,8 @@ object SdeForecast {
     var train = CheckpointPolicy.pin(initSample(windows, coeffs, nModes, initK, seed)
       .withColumn("explorer", lit("init")))
     var pool = CheckpointPolicy.pin(Selection.removeById(windows, train, "win_id"))
+    // counted once: each step then moves min(batch, pool rows) windows
+    var trainSize = train.count()
 
     // flatten hist features + ALL pred-horizon labels (y0..y{pred-1})
     val flat = (df: DataFrame) => {
@@ -124,10 +126,11 @@ object SdeForecast {
         .select("win_id", "hist", "target", "err")
       val (p2, t2, _) = Selection.selectAndMove(scored, train,
         col("err"), batch, "win_id", s"iter$it", Seq(col("win_id")))
-      val mae = scored.agg(avg("err")).head().getDouble(0)
+      val m = scored.agg(avg("err"), count(lit(1))).head()
       pool = CheckpointPolicy.pin(p2.drop("err"))
       train = CheckpointPolicy.pin(t2)
-      SdeIteration(it, mae, train.count())
+      trainSize += math.min(batch.toLong, m.getLong(1))
+      SdeIteration(it, m.getDouble(0), trainSize)
     }
     (train, iters)
   }

@@ -281,7 +281,7 @@ object CrawlQueries {
     plantedRobotsTxt.toDF("domain", "robots_txt")
   }
 
-  /** [[plantedRobots]]' rows; the WARC pipelines pass its size as the
+  /** [[plantedRobots]]' rows; every query passes its size as the
     * broadcast-vs-shuffle hint to [[Robots.verdicts]], so the hint is
     * the literal's own length and cannot drift from it. */
   private val plantedRobotsTxt: Seq[(String, String)] = Seq(
@@ -328,7 +328,8 @@ object CrawlQueries {
       Tables.documents(s, d)
         .select(col("doc_id"), plantedUrl(col("doc_id")).as("url")),
       col("doc_id"), col("url"),
-      plantedRobots(s), col("domain"), col("robots_txt"), agent = "GraftBot")
+      plantedRobots(s), col("domain"), col("robots_txt"), agent = "GraftBot",
+      robotsSizeHint = Some(plantedRobotsTxt.size.toLong))
       .orderBy("doc_id")
 
   /** q156: robots.txt verdicts — every planted rule semantics replayed
@@ -546,7 +547,7 @@ object CrawlQueries {
         (col("doc_id") * 4 + col("entry_idx")).as("eid"), col("loc")),
       col("eid"), col("loc"),
       plantedRobots(s), col("domain"), col("robots_txt"),
-      agent = "GraftBot")
+      agent = "GraftBot", robotsSizeHint = Some(plantedRobotsTxt.size.toLong))
       .select(col("doc_id").as("__eid"), col("allowed"))
     ent.join(v, (col("doc_id") * 4 + col("entry_idx")) === col("__eid"),
         "left")

@@ -41,7 +41,7 @@ object SamplingQueries {
       .select(round(col("grid_x"), 6).as("grid_x"), round(col("pdf"), 10).as("pdf"))
 
   // Fixed-parameter KDE (lo=900, hi=105000, g=1024, bw=2000): replays
-  // Kde.fitBinned exactly — linear binning (each row splits weight between
+  // the binned Kde.fit exactly — linear binning (each row splits weight between
   // flanking grid points), normalize, Gaussian-convolve within the 8.5-sigma
   // support. Arithmetic mirrors the Scala loop operation-for-operation
   // (t = (j-i)*step/bw; term = (wsum/total)*knorm*exp(-0.5*(t*t))).
@@ -422,7 +422,7 @@ object SamplingQueries {
     *     weights + the log-pdf-error reference), and a KDE REFIT of the
     *     shrinking pool's preds every iteration feeding the us_lw explorer
     *     — bandwidth pinned 0.2, grid 256, so DuckDB replays the full
-    *     fitBinned convolution 4× (q25 pattern);
+    *     binned-KDE convolution 4× (q25 pattern);
     *   - md5-uniform E-S init (`portableInitSample`, the q26/q54 device).
     *
     * Emits the per-iteration convergence trace (iter, mse, mvar,
@@ -452,7 +452,7 @@ object SamplingQueries {
 
   // --- q75: the FULL ActiveSampling.run replay -----------------------------
   // Composition of three already-proven devices: the q54 grid/label/md5-
-  // uniform fixture, the q25 fitBinned KDE convolution (run 4x: trueKde +
+  // uniform fixture, the q25 binned KDE convolution (run 4x: trueKde +
   // one pred-KDE refit per iteration over the SHRINKING pool), and the q54
   // pick chain (se/us/us_lw with id tie-breaks). CTEs are MATERIALIZED —
   // DuckDB otherwise inlines them per reference and the pdf grids recompute

@@ -34,12 +34,10 @@ object LocalDecisionTree {
 
   /** Up to `cap` rows of `dataset` as `DecisionTreeRegressor.train` reads
     * them — the same checked columns of the same RDD, so the same
-    * partitions — as (label, features) per partition, in partition order.
-    * One capped scan (`RDD.take`). None past the cap, at `cap <= 0`, or
-    * when the features carry categorical metadata, which [[fit]] does not
-    * replay. (A `spark_partition_id()` column would not do: over a local
-    * relation the optimizer evaluates it on the driver, as 0 for every
-    * row, while the RDD slices the relation.) */
+    * partitions — as (label, features) per non-empty partition, in
+    * partition order. One job reads every partition, each up to `cap + 1`
+    * rows. None past the cap, at `cap <= 0`, or when the features carry
+    * categorical metadata, which [[fit]] does not replay. */
   def collectPartitions(dataset: DataFrame, labelCol: String, featuresCol: String,
                         cap: Int): Option[Seq[Seq[(Double, Vector)]]] =
     if (cap <= 0 || MetadataUtils.getCategoricalFeatures(dataset.schema(featuresCol)).nonEmpty) None
@@ -47,11 +45,11 @@ object LocalDecisionTree {
       val rows = dataset
         .select(DatasetUtils.checkRegressionLabels(labelCol),
           DatasetUtils.checkNonNanVectors(featuresCol))
-        .rdd.mapPartitionsWithIndex((p, it) =>
-          it.map(r => (p, r.getDouble(0), r.getAs[Vector](1))))
-        .take(cap + 1)
-      if (rows.length > cap) None
-      else Some(rows.groupBy(_._1).toSeq.sortBy(_._1).map(_._2.toSeq.map(r => (r._2, r._3))))
+        .rdd.map(r => (r.getDouble(0), r.getAs[Vector](1)))
+      val parts = dataset.sparkSession.sparkContext.runJob(rows,
+        (it: Iterator[(Double, Vector)]) => it.take(cap + 1).toArray)
+      if (parts.map(_.length.toLong).sum > cap) None
+      else Some(parts.toSeq.filter(_.nonEmpty).map(_.toSeq))
     }
 
   /** `dtr` fitted on `partitions` (as [[collectPartitions]] returns them):

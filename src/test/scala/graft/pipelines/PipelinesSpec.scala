@@ -3,6 +3,7 @@ package graft.pipelines
 import graft.SparkSpec
 import graft.functions.Pdfs
 import graft.ml.{AnalyticScorer, Scorer, TreeEnsembleScorer}
+import graft.operators.{Integrate, Kde, KdeResult}
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
@@ -11,7 +12,7 @@ class PipelinesSpec extends SparkSpec {
   import spark.implicits._
 
   /** Jobs of one 2-iteration active-sampling run over [[grid]]. */
-  private val JobBudget = 45
+  private val JobBudget = 16
 
   /** 20x20 grid of the reference's synthetic 2-D problem (test-scale
     * mini-BDQA, SURVEY.md §5.4). */
@@ -84,7 +85,8 @@ class PipelinesSpec extends SparkSpec {
     assert(compiled == 0, s"$compiled Janino compilations in the second run")
     // before the fused explorer step and the one-aggregate KDE fit this
     // run submitted 114 jobs (and compiled 113 classes); before the scorer
-    // grew its members on the driver, 93
+    // grew its members on the driver, 93; the budget was 45 before an
+    // iteration read the scored pool in one pass
     assert(submitted <= JobBudget, s"$submitted jobs")
   }
 
@@ -112,6 +114,38 @@ class PipelinesSpec extends SparkSpec {
     val sdeLocal = sdeRun(sde)
     assert(sdeRun(sde.andThen(distributed)) == sdeLocal)
     assert(withCheckpointDir(ckpt)(sdeRun(sde)) == sdeLocal)
+  }
+
+  test("the driver's log-pdf error equals the grid frame's trapz bit for bit") {
+    // the frame form the loop computed it in
+    def framed(trueKde: KdeResult, predKde: KdeResult, clip: Double): Double = {
+      val gridDf = trueKde.toDF(spark).withColumnRenamed("pdf", "p_true")
+        .withColumn("p_pred", predKde.interpolate(col("grid_x")))
+      val logDiff = gridDf.select(col("grid_x"),
+        abs(Pdfs.clipLower(log(greatest(col("p_pred"), lit(1e-300))), clip) -
+            Pdfs.clipLower(log(greatest(col("p_true"), lit(1e-300))), clip)).as("d"))
+        .filter(Pdfs.isFinite(col("d")))
+      Integrate.trapz(logDiff, col("grid_x"), col("d")).head().getDouble(0)
+    }
+    val rnd = new scala.util.Random(5)
+    val ys = Seq.fill(2000)(rnd.nextGaussian()).toDF("y")
+    val preds = Seq.fill(2000)(rnd.nextGaussian() * 0.6 + 0.3).toDF("y")
+    val trueKde = Kde.fit(ys, col("y"), gridSize = 512)
+    val bounds = Some((trueKde.gridMin, trueKde.gridMax))
+    val predKde = Kde.fit(preds, col("y"), gridSize = 512, bounds = bounds)
+    // pred grid narrower than the true one: interpolation clamps at its edges
+    val narrow = Kde.fit(preds, col("y"), gridSize = 300, bounds = Some((-1.0, 1.5)))
+    // non-finite densities: their differences are dropped before the integral
+    val holes = trueKde.copy(pdf = trueKde.pdf.zipWithIndex.map { case (p, i) =>
+      if (i % 50 == 7) Double.NaN else if (i % 70 == 3) Double.PositiveInfinity else p
+    })
+    for ((t, p) <- Seq((trueKde, predKde), (trueKde, narrow), (holes, predKde), (trueKde, holes));
+         clip <- Seq(-6.0, -2.0)) {
+      val got = ActiveSampling.logPdfError(t, p, clip)
+      assert(java.lang.Double.doubleToLongBits(got) ==
+        java.lang.Double.doubleToLongBits(framed(t, p, clip)), s"clip $clip")
+      assert(got > 0 && !got.isInfinite)
+    }
   }
 
   test("OU simulation: length, start value, determinism") {
